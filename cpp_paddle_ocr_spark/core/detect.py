@@ -92,7 +92,10 @@ _CLS_TABLE[65:91] = _CLS_UPPER
 _CLS_TABLE[97:123] = _CLS_LOWER
 _CLS_TABLE[48:58] = _CLS_DIGIT
 _CLS_TABLE[_WS_TABLE] = _CLS_WS
-assert bool(np.array_equal(_CLS_TABLE == _CLS_WS, _WS_TABLE))
+if not np.array_equal(_CLS_TABLE == _CLS_WS, _WS_TABLE):
+    # detect_page reads whitespace as `cls == _CLS_WS`; an explicit raise
+    # (not an assert) keeps the check under python -O
+    raise RuntimeError("_CLS_TABLE whitespace class disagrees with _WS_TABLE")
 
 
 @dataclass(slots=True)

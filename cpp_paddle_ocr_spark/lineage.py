@@ -6,9 +6,9 @@ processing time — ``include/paddle_ocr/ocr_ipc_service.h:91-93``,
 
 * pages are assigned to ``n_buckets`` deterministic **lineage buckets** by
   ``pmod(xxhash64(url), n_buckets)`` — the unit of commit/retry;
-* buckets are processed in ``n_groups`` commit groups; after each group the
-  output is durably written (dynamic partition overwrite on ``bucket``) and a
-  lineage row per bucket is appended — only then is the bucket "committed";
+* buckets are processed in ``n_groups`` commit groups of two Spark jobs: the
+  output is durably written (dynamic partition overwrite on ``bucket``), then
+  one file with a lineage row per bucket is appended — only then is it "committed";
 * on restart the job anti-joins the lineage table and processes only
   uncommitted buckets. Partial files from a crashed group sit in partition
   dirs that get dynamically overwritten on retry, so retries are idempotent:
@@ -26,7 +26,9 @@ import logging
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.storagelevel import StorageLevel
 
 from .config import LINEAGE_BUCKETS
 from .operators.extract import extract
@@ -75,6 +77,20 @@ def verify_bucket_spec(desc_rows, source_table: str, n_buckets: int) -> bool:
 
 def _bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
+
+
+def _bucket_stats(df: DataFrame) -> dict[int, tuple[int, int, int]]:
+    """``{bucket: (n_pages, n_ok, n_blocks)}`` in one aggregation job."""
+    rows = (
+        df.groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_pages"),
+            F.sum(F.col("success").cast("long")).alias("n_ok"),
+            F.sum(F.col("n_blocks").cast("long")).alias("n_blocks"),
+        )
+        .collect()
+    )
+    return {r.bucket: (r.n_pages, r.n_ok, r.n_blocks) for r in rows}
 
 
 def _child_target(out_dir: str, name: str) -> str:
@@ -147,6 +163,10 @@ def run_extract_job(
     (MEMORY_AND_DISK) and sliced per group — right locally, but at 100 TB
     the extracted output is still O(corpus-text) and can exceed executor
     storage, which is exactly why the pruned path exists.
+
+    Per commit group: one data write, then one single-file lineage append
+    built on the driver from ``_bucket_stats`` — taken once by the pass that
+    fills the fallback cache, or from each persisted group when pruned.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
 
@@ -241,8 +261,6 @@ def run_extract_job(
         # output to executor storage; the commit-group loop below then
         # writes + commits lineage from the cache. (A per-group filter of a
         # non-prunable source would mean n_groups full scans of the input.)
-        from pyspark.storagelevel import StorageLevel
-
         if docs is None:
             raise ValueError(
                 "docs is required unless source_table names an Iceberg table"
@@ -258,8 +276,9 @@ def run_extract_job(
         out_all.persist(StorageLevel.MEMORY_AND_DISK)
         # materialize the cache BEFORE the timed loop — otherwise the first
         # group's wall_ms absorbs the whole job's extraction cost and
-        # per-group timings are skewed (round-2 ADVICE)
-        out_all.count()
+        # per-group timings are skewed (round-2 ADVICE). The same pass
+        # yields every bucket's lineage stats.
+        stats = _bucket_stats(out_all)
 
         def group_output(chunk: list[int]) -> DataFrame:
             return out_all.filter(F.col("bucket").isin(chunk))
@@ -272,17 +291,12 @@ def run_extract_job(
             part = group_output(chunk)
             if pruned:
                 # the pruned group plan re-extracts from the source; it is
-                # consumed below by the write AND the stats aggregation
-                # (whose plan is referenced twice by the lineage anti-join)
-                # — persist so the mapInPandas extraction runs ONCE per
-                # group, not 2-3x. Unpersisted in the finally below so a
+                # consumed below by the write AND the stats aggregation —
+                # persist so the mapInPandas extraction runs ONCE per
+                # group, not twice. Unpersisted in the finally below so a
                 # failed group does not leak pinned executor storage.
-                from pyspark.storagelevel import StorageLevel
-
                 part = part.persist(StorageLevel.MEMORY_AND_DISK)
                 group_cache = part
-            else:
-                group_cache = None
             # Iceberg overwritePartitions when out_dir is a table identifier
             # (atomic metadata swap, one snapshot per commit group); dynamic
             # partition overwrite on the parquet path fallback
@@ -290,38 +304,24 @@ def run_extract_job(
 
             overwrite_result_partitions(part, _child_target(out_dir, "extracted"))
             wall_ms = (time.perf_counter() - t0) * 1000.0
-            # per-bucket stats straight from the cached output — no re-read
-            stats = (
-                part.groupBy("bucket")
-                .agg(
-                    F.count("*").alias("n_pages"),
-                    F.sum(F.col("success").cast("long")).alias("n_ok"),
-                    F.sum(F.col("n_blocks").cast("long")).alias("n_blocks"),
-                )
-                .select(
-                    F.lit(run_id).alias("run_id"),
-                    F.col("bucket"),
-                    F.col("n_pages"),
-                    F.col("n_ok"),
-                    F.col("n_blocks"),
-                    F.lit(wall_ms).alias("wall_ms"),
-                    F.current_timestamp().alias("committed_at"),
-                    F.lit(transform).alias("transform"),
-                )
-            )
-            # buckets with zero pages still need a lineage row to be "committed"
-            empty = (
+            if pruned:
+                stats = _bucket_stats(part)
+            # a row per bucket, zeros if empty (it still must be "committed");
+            # pyarrow is the cheap createDataFrame input, Arrow conf on or off
+            cols = ("run_id", "bucket", "n_pages", "n_ok", "n_blocks", "wall_ms")
+            rows = [
+                dict(zip(cols, (run_id, b, *stats.get(b, (0, 0, 0)), wall_ms)))
+                for b in chunk
+            ]
+            lineage = (
                 spark.createDataFrame(
-                    [
-                        (run_id, b, 0, 0, 0, wall_ms)
-                        for b in chunk
-                    ],
+                    pa.Table.from_pylist(rows),
                     "run_id string, bucket int, n_pages long, n_ok long, n_blocks long, wall_ms double",
                 )
+                .coalesce(1)
                 .withColumn("committed_at", F.current_timestamp())
                 .withColumn("transform", F.lit(transform))
             )
-            lineage = stats.unionByName(empty.join(stats, "bucket", "left_anti"))
             t = _child_target(out_dir, "_lineage")
             if _is_table_ident(t):  # Iceberg: append creates-or-appends
                 lineage.write.mode("append").saveAsTable(t)

@@ -46,3 +46,15 @@ def test_entry_smoke(spark):
     assert [f.name for f in out.schema.fields] == [
         "url", "success", "error", "n_blocks", "extracted_text",
     ]
+
+
+def test_flagship_entries_lead_queries():
+    # an oracle sweep capped at the first 50 entries must still check them
+    flagship = {
+        "extract_golden_parity",
+        "extract_pages",
+        "extract_pages_staged",
+        "multimodal_meta",
+        "status_windowed",
+    }
+    assert flagship <= set(list(_QUERIES)[:50])

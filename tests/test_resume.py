@@ -107,6 +107,58 @@ def test_single_source_scan_per_job(spark, tmp_path_factory):
     assert len(_snapshot(spark, out)) == N
 
 
+def test_commit_loop_job_budget(spark, docs, tmp_path_factory):
+    # each commit group is one data write plus one lineage append; the
+    # materializing stats pass adds a few fixed jobs (3 under AQE)
+    sc = spark.sparkContext
+    out = str(tmp_path_factory.mktemp("budget"))
+    sc.setJobGroup("lineage-budget", "commit-loop job budget")
+    try:
+        run_extract_job(spark, docs, out, run_id="b", n_buckets=16, n_groups=GROUPS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("lineage-budget")
+    assert len(jobs) <= 2 * GROUPS + 4, f"{len(jobs)} Spark jobs for {GROUPS} groups"
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_lineage_rows_match_output(spark, docs, tmp_path_factory, arrow):
+    # more buckets than pages: empty buckets still get one all-zero row.
+    # arrow=false is the bare session jobs/extract_job.py builds.
+    import pathlib
+
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        out = str(tmp_path_factory.mktemp("lineage_rows"))
+        run_extract_job(spark, docs, out, run_id="l", n_buckets=2 * N, n_groups=GROUPS)
+    finally:
+        spark.conf.set(key, prev)
+    lin = read_lineage(spark, out).collect()
+    assert sorted(r.bucket for r in lin) == list(range(2 * N))
+    got = {r.bucket: (r.n_pages, r.n_ok, r.n_blocks) for r in lin}
+    want = {
+        r.bucket: (r.n_pages, r.n_ok, r.n_blocks)
+        for r in read_extracted(spark, out)
+        .groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_pages"),
+            F.sum(F.col("success").cast("long")).alias("n_ok"),
+            F.sum(F.col("n_blocks").cast("long")).alias("n_blocks"),
+        )
+        .collect()
+    }
+    assert 0 < len(want) < 2 * N
+    assert got == {b: want.get(b, (0, 0, 0)) for b in range(2 * N)}
+    assert {r.transform for r in lin} == {"xxhash64"}
+    assert len({r.wall_ms for r in lin}) == GROUPS
+    files = list(pathlib.Path(out, "_lineage").glob("*.parquet"))
+    assert len(files) == GROUPS, "one lineage file per commit group"
+
+
 # ---------------------------------------------------------------------------
 # The Iceberg bucket-spec pruning guard is untestable end-to-end without the
 # runtime jar, but its DESCRIBE-parse is pure Python — pin both branches
