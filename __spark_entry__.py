@@ -132,10 +132,8 @@ def _q_windowed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     warc_ts over the REAL extraction output. Full oracle: warc_ts is the
     deterministic ``EPOCH + 137s * i`` of fixtures.page, so DuckDB
     reconstructs the identical windows from the committed golden TSV."""
-    from cpp_paddle_ocr_spark.streaming.metrics import extract_stream_with_ts
-
     docs = generate_documents(spark, _N_GOLDEN, oversize_max=2_000_000)
-    out = extract_stream_with_ts(docs)
+    out = extract(docs, passthrough=("warc_ts",))
     # window key from timestamp COMPONENTS, not F.window: the driver's
     # session timezone is not ours to pin, and F.window aligns to the UTC
     # epoch — under a host tz with a non-whole-hour offset the boundaries

@@ -67,20 +67,49 @@ def _error_row(url: str, error: str) -> dict[str, Any]:
     }
 
 
+# Route codes (computed JVM-side by ``operators.extract._route_col``, or by
+# ``route_of`` here) and the guard messages. This is the one definition of
+# the page guard: ``operators.extract.guard_error_col`` renders the same
+# constants as a JVM expression.
+ROUTE_EMPTY = 0
+ROUTE_OVERSIZED = 1
+ROUTE_INVALID = 2
+ROUTE_WORK = 3
+
+EMPTY_ERROR = "empty html"
+OVERSIZED_ERROR = (  # %d = page size in bytes
+    f"oversized html (%d bytes > {MAX_HTML_BYTES}); "
+    "route via dedicated range partition"
+)
+INVALID_ERROR = "undecodable html (invalid utf-8)"
+
+
+def route_of(html: bytes | None) -> int:
+    if html is None or len(html) == 0:
+        return ROUTE_EMPTY
+    if len(html) > MAX_HTML_BYTES:
+        return ROUTE_OVERSIZED
+    return ROUTE_WORK  # utf-8 validity is discovered at decode time
+
+
+def guard_error(route: int, size: int) -> str:
+    """The error message of a page on a guard route (any route but WORK)."""
+    if route == ROUTE_EMPTY:
+        return EMPTY_ERROR
+    if route == ROUTE_OVERSIZED:
+        return OVERSIZED_ERROR % size
+    return INVALID_ERROR
+
+
 def decode_html(html: bytes | None) -> tuple[str | None, str | None]:
     """Transport guards + decode (S2/P6): → (doc, error), never raises."""
-    if html is None or len(html) == 0:
-        return None, "empty html"
-    if len(html) > MAX_HTML_BYTES:
-        return (
-            None,
-            f"oversized html ({len(html)} bytes > {MAX_HTML_BYTES}); "
-            "route via dedicated range partition",
-        )
+    route = route_of(html)
+    if route != ROUTE_WORK:
+        return None, guard_error(route, len(html or b""))
     try:
         doc = bytes(html).decode("utf-8")
     except (UnicodeDecodeError, ValueError):
-        return None, "undecodable html (invalid utf-8)"
+        return None, INVALID_ERROR
     return doc[:MAX_DOC_CHARS], None  # D1 limit_side_len analog
 
 
@@ -98,32 +127,6 @@ def extract_page_stages(
     labels, _scores = classify_spans([s.text for s in spans])
     survivors = [s for s, lab in zip(spans, labels) if lab == 0]  # K5 quirk
     return doc, survivors, None
-
-
-# Route codes (computed JVM-side by operators.extract, or in Python here):
-ROUTE_EMPTY = 0
-ROUTE_OVERSIZED = 1
-ROUTE_INVALID = 2
-ROUTE_WORK = 3
-
-
-def route_of(html: bytes | None) -> int:
-    if html is None or len(html) == 0:
-        return ROUTE_EMPTY
-    if len(html) > MAX_HTML_BYTES:
-        return ROUTE_OVERSIZED
-    return ROUTE_WORK  # utf-8 validity is discovered at decode time
-
-
-def _guard_error(route: int, size: int) -> str:
-    if route == ROUTE_EMPTY:
-        return "empty html"
-    if route == ROUTE_OVERSIZED:
-        return (
-            f"oversized html ({size} bytes > {MAX_HTML_BYTES}); "
-            "route via dedicated range partition"
-        )
-    return "undecodable html (invalid utf-8)"
 
 
 def extract_batch_routed(
@@ -145,7 +148,7 @@ def extract_batch_routed(
 
     for url, html, size, route in zip(urls, htmls, sizes, routes):
         if route != ROUTE_WORK:
-            rows.append(_error_row(url, _guard_error(route, int(size or 0))))
+            rows.append(_error_row(url, guard_error(route, int(size or 0))))
             continue
         t0 = time.perf_counter()
         _doc, spans, error = extract_page_stages(html)

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..core.layout import detect_regions_page, extract_tables_page
+from ..schemas import OUTPUT_SCHEMA
+from .extract import prepare_routed, run_cascade
 
 TABLE_SCHEMA = T.StructType(
     [
@@ -63,64 +65,56 @@ def _decode(blob) -> str | None:
         return None  # P9 policy: garbage pages emit no layout rows
 
 
-def extract_tables(df: DataFrame) -> DataFrame:
-    """T1/T2: one row per decoded table (structure + score)."""
+def _table_rows(doc: str) -> list[tuple]:
+    return [
+        (t.table_id, t.start, t.end, len(t.cells), t.structure, t.score)
+        for t in extract_tables_page(doc)
+    ]
+
+
+def _cell_rows(doc: str) -> list[tuple]:
+    return [
+        (t.table_id, c.cell_id, c.start, c.end, c.text)
+        for t in extract_tables_page(doc)
+        for c in t.cells
+    ]
+
+
+def _region_rows(doc: str) -> list[tuple]:
+    return [(r.label, r.start, r.end, r.score) for r in detect_regions_page(doc)]
+
+
+def _fan_out(df: DataFrame, schema: T.StructType, rows_of) -> DataFrame:
+    """One mapInPandas over (url, html): every decodable page emits
+    ``(url, *row)`` for each row of ``rows_of(doc)``."""
+    cols = schema.fieldNames()
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TABLE_SCHEMA.fields]
         for pdf in batches:
-            rows = []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc = _decode(blob)
-                if doc is None:
-                    continue
-                for t in extract_tables_page(doc):
-                    rows.append(
-                        (url, t.table_id, t.start, t.end, len(t.cells),
-                         t.structure, t.score)
-                    )
+            rows = [
+                (url, *row)
+                for url, blob in zip(pdf["url"], pdf["html"])
+                if (doc := _decode(blob)) is not None
+                for row in rows_of(doc)
+            ]
             yield pd.DataFrame(rows, columns=cols)
 
-    return df.select("url", "html").mapInPandas(fn, TABLE_SCHEMA)
+    return df.select("url", "html").mapInPandas(fn, schema)
+
+
+def extract_tables(df: DataFrame) -> DataFrame:
+    """T1/T2: one row per decoded table (structure + score)."""
+    return _fan_out(df, TABLE_SCHEMA, _table_rows)
 
 
 def extract_table_cells(df: DataFrame) -> DataFrame:
     """T1: one row per decoded cell span."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CELL_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc = _decode(blob)
-                if doc is None:
-                    continue
-                for t in extract_tables_page(doc):
-                    for c in t.cells:
-                        rows.append(
-                            (url, t.table_id, c.cell_id, c.start, c.end, c.text)
-                        )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select("url", "html").mapInPandas(fn, CELL_SCHEMA)
+    return _fan_out(df, CELL_SCHEMA, _cell_rows)
 
 
 def detect_regions(df: DataFrame) -> DataFrame:
     """T3: one row per detected page region (picodet analog)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in REGION_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc = _decode(blob)
-                if doc is None:
-                    continue
-                for r in detect_regions_page(doc):
-                    rows.append((url, r.label, r.start, r.end, r.score))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select("url", "html").mapInPandas(fn, REGION_SCHEMA)
+    return _fan_out(df, REGION_SCHEMA, _region_rows)
 
 
 # ---------------------------------------------------------------------------
@@ -135,89 +129,43 @@ REGION_STRUCT = T.StructType(
 )
 
 
-def extract_with_layout(
-    df: DataFrame, num_partitions: int | None = None
-) -> DataFrame:
+def _add_layout(out: pd.DataFrame, pdf: pd.DataFrame) -> None:
+    """``run_cascade`` extension: the tables/regions arrays of each page,
+    built from the same rows as the fan-out operators. Guard rows arrive
+    with their html blanked, so they get empty arrays."""
+    docs = [_decode(html) for html in pdf["html"]]
+    for col, struct, rows_of in (
+        ("tables", TABLE_STRUCT, _table_rows),
+        ("regions", REGION_STRUCT, _region_rows),
+    ):
+        keys = struct.fieldNames()
+        out[col] = [
+            [] if doc is None else [dict(zip(keys, r)) for r in rows_of(doc)]
+            for doc in docs
+        ]
+
+
+def extract_with_layout(df: DataFrame) -> DataFrame:
     """Full det→cls→rec cascade PLUS layout structure per page, one scan.
 
     The reference exposes table/region structure alongside recognition on
     one result object (``StructurePredictResult``,
     ``include/paddle_ocr/utility.h:29-37``); this is the Spark-native form:
     the extraction output rows gain ``tables``/``regions`` array columns,
-    all produced inside the SAME ``mapInPandas`` pass over the SAME source
+    all produced inside the SAME ``run_cascade`` pass over the SAME source
     scan (fused-vs-separate equivalence + single-scan plan shape are pinned
     by ``tests/test_layout.py``). At 100 TB this halves the scan bytes of
     running ``extract`` and the layout operators separately, and the plan
     stays shuffle-free like ``extract``.
     """
-    from collections.abc import Iterator as _Iterator
-
-    from ..core.pipeline import ROUTE_WORK, extract_batch_routed
-    from ..plans.partitioning import salted_url_partitioning
-    from ..schemas import OUTPUT_SCHEMA
-    from .extract import _slice_budget, prepare_routed
-
     schema = T.StructType(
-        list(OUTPUT_SCHEMA.fields)
+        OUTPUT_SCHEMA.fields
         + [
             T.StructField("tables", T.ArrayType(TABLE_STRUCT), False),
             T.StructField("regions", T.ArrayType(REGION_STRUCT), False),
         ]
     )
-
-    def fn(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        for whole in batches:
-            for pdf in _slice_budget(whole):
-                out = extract_batch_routed(
-                    pdf["url"].tolist(),
-                    pdf["html"].tolist(),
-                    pdf["html_size"].tolist(),
-                    pdf["route"].tolist(),
-                )
-                tables_col: list[list[dict]] = []
-                regions_col: list[list[dict]] = []
-                for html, route in zip(pdf["html"], pdf["route"]):
-                    if route != ROUTE_WORK or html is None:
-                        tables_col.append([])
-                        regions_col.append([])
-                        continue
-                    doc = _decode(html)
-                    if doc is None:
-                        tables_col.append([])
-                        regions_col.append([])
-                        continue
-                    tables_col.append(
-                        [
-                            {
-                                "table_id": t.table_id,
-                                "start": t.start,
-                                "end": t.end,
-                                "n_cells": len(t.cells),
-                                "structure": t.structure,
-                                "score": t.score,
-                            }
-                            for t in extract_tables_page(doc)
-                        ]
-                    )
-                    regions_col.append(
-                        [
-                            {
-                                "label": r.label,
-                                "start": r.start,
-                                "end": r.end,
-                                "score": r.score,
-                            }
-                            for r in detect_regions_page(doc)
-                        ]
-                    )
-                out["tables"] = tables_col
-                out["regions"] = regions_col
-                yield out
-
-    routed = prepare_routed(df)
-    if num_partitions is not None:
-        routed = salted_url_partitioning(routed, num_partitions)
-    return routed.mapInPandas(fn, schema)
+    return run_cascade(prepare_routed(df), schema, extend=_add_layout)
 
 
 # ---------------------------------------------------------------------------

@@ -33,6 +33,7 @@ from ..core.detect import detect_page
 from ..core.html_parse import parse_blocks
 from ..core.pipeline import decode_html
 from ..schemas import CANDIDATE_SCHEMA, SPAN_SCHEMA
+from .extract import _route_col, guard_error_col
 
 
 def detect_candidates(df: DataFrame, id_col: str | None = None) -> DataFrame:
@@ -135,8 +136,6 @@ def assemble(
     duplicate urls each get their own independent output row, matching the
     fused operator; without it, url uniqueness is an input contract.
     """
-    from ..config import MAX_HTML_BYTES  # local import to avoid cycle noise
-
     key = [id_col, "url"] if id_col is not None else ["url"]
     per_page = (
         spans.groupBy(*key)
@@ -187,27 +186,10 @@ def assemble(
             ).alias("extracted_text"),
         )
     )
-    size = F.length(F.col("html"))
     base_cols = ["url"] if id_col is None else [id_col, "url"]
     base = pages.select(
         *base_cols,
-        F.when(F.col("html").isNull() | (size == 0), F.lit("empty html"))
-        .when(
-            size > MAX_HTML_BYTES,
-            F.concat(
-                F.lit("oversized html ("),
-                size.cast("string"),
-                F.lit(
-                    f" bytes > {MAX_HTML_BYTES}); route via dedicated range partition"
-                ),
-            ),
-        )
-        .when(
-            ~F.expr("is_valid_utf8(html)"),
-            F.lit("undecodable html (invalid utf-8)"),
-        )
-        .otherwise(F.lit(None))
-        .alias("error"),
+        guard_error_col(_route_col(), F.length("html")).alias("error"),
     )
     joined = base.join(per_page, key, "left")
     return joined.select(

@@ -37,6 +37,9 @@ SPAN_SCHEMA = T.StructType(
 
 #: OCRResult analog (include/paddle_ocr/ocr_worker.h:41-49); ``n_blocks`` =
 #: number of det spans surviving cls (the words[] count).
+#: ``processing_time_ms`` is an estimate, not a per-page measurement: the
+#: page's own decode + det + cls time plus a share of its batch's fused rec
+#: pass proportional to its span count; always 0.0 on the staged path.
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

@@ -4,7 +4,7 @@ A live crawl doesn't wait for a batch job: pages arrive, get extracted,
 gated, and deduplicated continuously. This operator chains the engine's
 streaming-safe pieces into that pipeline:
 
-    pages stream → extract_stream (mapInPandas cascade)
+    pages stream → extract (mapInPandas cascade)
                  → success gate
                  → language + quality gates (stateless projections —
                    the SAME lang_cols()/quality_cols() the batch operator
@@ -142,9 +142,9 @@ def curate_stream(
     plan-time, per Structured Streaming semantics.
     """
     from ..operators.governance import EMAIL_RE, IPV4_RE, PHONE_RE
-    from .ingest import extract_stream
+    from ..operators.extract import extract
 
-    extracted = extract_stream(stream_df)
+    extracted = extract(stream_df)
     gated = (
         extracted.filter(F.col("success"))
         .select("url", F.col("extracted_text").alias("text"))

@@ -4,41 +4,23 @@ The reference is a request/response service — its streaming analog is
 continuous crawl ingestion: new page files land in a directory (or Kafka /
 Iceberg CDC in production), the cascade runs incrementally, results append.
 
-Two forms:
-
-* ``extract_stream(stream_df)`` — stateless transform of a streaming
-  DataFrame via one ``mapInPandas`` (the pure ``extract_batch`` handles all
-  guards internally, so no union-of-branches is needed on the streaming
-  plan).
-* ``run_stream_job`` — file-source → ``foreachBatch`` running the full
-  guarded batch operator (JVM-side guards + size routing). ``foreachBatch``
-  is at-least-once, so the sink is made idempotent: output is partitioned by
-  ``epoch_id`` and written with dynamic partition overwrite — a retried
-  epoch REPLACES its own partition (extraction is deterministic, so the
-  replay is byte-identical), giving exactly-once *visible* results on top of
-  the streaming checkpoint — the streaming counterpart of the lineage/resume
-  protocol.
+``extract`` itself is streaming-safe (a projection plus one
+``mapInPandas``), so a stream is extracted by calling it directly.
+``run_stream_job`` is the file-source job: ``foreachBatch`` running the
+same ``extract`` per micro-batch. ``foreachBatch`` is at-least-once, so the
+sink is made idempotent: output is partitioned by ``epoch_id`` and written
+with dynamic partition overwrite — a retried epoch REPLACES its own
+partition (extraction is deterministic, so the replay is byte-identical),
+giving exactly-once *visible* results on top of the streaming checkpoint —
+the streaming counterpart of the lineage/resume protocol.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.extract import _extract_fn, extract, prepare_routed
-from ..schemas import DOCUMENTS_SCHEMA, OUTPUT_SCHEMA
-
-
-def extract_stream(stream_df: DataFrame) -> DataFrame:
-    """Stateless streaming transform: pages → extraction rows.
-
-    ``prepare_routed`` is a plain projection (streaming-safe): it computes
-    the (html_size, route) columns the extraction payload requires and
-    blanks guard-row bytes before the Arrow channel, exactly like the batch
-    operator.
-    """
-    return prepare_routed(stream_df.select("url", "html")).mapInPandas(
-        _extract_fn(None), OUTPUT_SCHEMA
-    )
+from ..operators.extract import extract
+from ..schemas import DOCUMENTS_SCHEMA
 
 
 def run_stream_job(

@@ -12,6 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.extract import extract
+from ..schemas import DOCUMENTS_SCHEMA
+
 
 def windowed_quality(
     extracted_with_ts: DataFrame,
@@ -43,32 +46,6 @@ def windowed_quality(
     )
 
 
-def extract_stream_with_ts(stream_df: DataFrame) -> DataFrame:
-    """Extraction transform that carries ``warc_ts`` through the UDF — the
-    event-time column survives for downstream windowing (no stream-stream
-    join needed)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..core.pipeline import extract_batch
-    from ..schemas import OUTPUT_SCHEMA
-
-    schema = T.StructType(
-        [T.StructField("warc_ts", T.TimestampType(), True)]
-        + list(OUTPUT_SCHEMA.fields)
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = extract_batch(pdf["url"].tolist(), pdf["html"].tolist())
-            out.insert(0, "warc_ts", pdf["warc_ts"].values)
-            yield out
-
-    return stream_df.select("url", "warc_ts", "html").mapInPandas(fn, schema)
-
-
 def run_quality_stream(
     spark,
     in_dir: str,
@@ -82,10 +59,9 @@ def run_quality_stream(
     Append mode: a window row is emitted once the watermark passes its end —
     late pages inside the watermark are folded in, later ones dropped.
     """
-    from ..schemas import DOCUMENTS_SCHEMA
-
     stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(in_dir)
-    q = windowed_quality(extract_stream_with_ts(stream), window, watermark)
+    extracted = extract(stream, passthrough=("warc_ts",))
+    q = windowed_quality(extracted, window, watermark)
     return (
         q.writeStream.outputMode("append")
         .format("parquet")

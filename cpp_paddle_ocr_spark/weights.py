@@ -14,6 +14,8 @@ weights — the analog of shipping ``models/*/inference.pdmodel``.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 SEED = 42
@@ -119,18 +121,20 @@ CLS_CLASS_LOGITS = np.array(
 _REC_PRIME = np.uint64(2654435761)
 
 # prob(cp) is a pure function of the codepoint, so it is precomputed over
-# the full domain once (8.9 MB of float64) and answered with one gather —
-# the same full-domain-table pattern as the det/cls class tables. Values
-# are bit-identical to the formula (same elementwise float ops, evaluated
-# per codepoint at import instead of per timestep per batch).
-_REC_PROB_TABLE = 0.75 + 0.25 * (
-    (
-        (np.arange(0x110000, dtype=np.uint64) * _REC_PRIME) % np.uint64(1000)
-    ).astype(np.float64)
-    / 1000.0
-)
+# the full domain (8.9 MB of float64) and answered with one gather — the
+# same full-domain-table pattern as the det/cls class tables. Values are
+# bit-identical to the formula (same elementwise float ops, evaluated per
+# codepoint once instead of per timestep per batch). The table is built on
+# the first ``rec_timestep_probs`` call, so a process that imports this
+# module but never runs rec never pays for it.
+@functools.cache
+def _rec_prob_table() -> np.ndarray:
+    cp = np.arange(0x110000, dtype=np.uint64)
+    return 0.75 + 0.25 * (
+        ((cp * _REC_PRIME) % np.uint64(1000)).astype(np.float64) / 1000.0
+    )
 
 
 def rec_timestep_probs(codepoints: np.ndarray) -> np.ndarray:
     """Vectorized prob(codepoint) in [0.75, 1.0), float64, deterministic."""
-    return _REC_PROB_TABLE[codepoints]
+    return _rec_prob_table()[codepoints]

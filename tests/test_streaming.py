@@ -5,7 +5,8 @@ from __future__ import annotations
 import hashlib
 
 from cpp_paddle_ocr_spark.sources.documents import generate_documents
-from cpp_paddle_ocr_spark.streaming.ingest import extract_stream, run_stream_job
+from cpp_paddle_ocr_spark.operators.extract import extract
+from cpp_paddle_ocr_spark.streaming.ingest import run_stream_job
 
 
 def sha(t: str) -> str:
@@ -32,16 +33,15 @@ def test_stream_job_matches_golden(spark, tmp_path, golden_checksums):
 def test_extract_stream_executes_and_matches_golden(
     spark, tmp_path, golden_checksums
 ):
-    # regression: extract_stream used to feed raw (url, html) into a payload
-    # expecting prepare_routed's (html_size, route) columns — the plan built
-    # fine but KeyError'd on the first REAL micro-batch, so this test must
-    # actually execute the stream, not just inspect the schema
+    # extract on a streaming frame: the plan must not only build but run —
+    # a payload fed the wrong columns KeyErrors only on the first REAL
+    # micro-batch, so this test executes the stream, not just its schema
     in_dir = str(tmp_path / "in2")
     generate_documents(spark, 40, oversize_max=2_000_000).write.parquet(in_dir)
     from cpp_paddle_ocr_spark.schemas import DOCUMENTS_SCHEMA
 
     s = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(in_dir)
-    out = extract_stream(s)
+    out = extract(s)
     assert out.isStreaming
     assert [f.name for f in out.schema.fields][:4] == [
         "url", "success", "error", "n_blocks",
