@@ -27,25 +27,79 @@ import time
 ROOT = pathlib.Path(__file__).resolve().parent
 sys.path.insert(0, str(ROOT))
 
-from cpp_paddle_ocr_spark.operators import (  # noqa: E402
-    clustering,
-    corpus,
-    dedup,
-    governance,
-    graph,
-    layout,
-    quantize,
-    regression,
-    relational,
-    similarity,
-    text_analysis,
-)
+from cpp_paddle_ocr_spark.operators import layout  # noqa: E402
 from cpp_paddle_ocr_spark.operators.extract import extract  # noqa: E402
 from cpp_paddle_ocr_spark.session import get_spark  # noqa: E402
 from cpp_paddle_ocr_spark.sources.documents import write_documents_parquet  # noqa: E402
+from __spark_entry__ import _N_EXTRACT, queries  # noqa: E402
 
 DOCS_PER_SF = 200_000  # 20k pages at sf0.1
 OVERSIZE_MAX = 2_000_000
+
+#: operator leaves in bench order. Each name resolves through
+#: ``__spark_entry__.queries()``, so every leaf times exactly the function
+#: the driver checks against its oracle.
+OPERATOR_LEAVES = (
+    "dedup_exact",
+    "dedup_simhash",
+    "dedup_minhash",
+    "dedup_lsh_pairs",
+    "dedup_spans",
+    "winnow_sketch",
+    "sim_cosine_topk",
+    "sim_lsh_ann",
+    "sim_ivf_ann",
+    "sim_knn_join",
+    "sim_knn_multitable",
+    "emb_quantize_report",
+    # cluster resolution: verified pairs → connected components
+    "dedup_increment",
+    "dedup_neardup_increment",
+    "dedup_clusters",
+    "sim_semantic_clusters",
+    "corpus_keep",
+    "corpus_stats",
+    "repetition_stats",
+    "repetition_filter",
+    "chunk_documents",
+    "hash_sample",
+    "mix_sample",
+    "temperature_sample",
+    "term_stats",
+    "vocab_topk",
+    "encode_documents",
+    "lm_score",
+    "tfidf_topterms",
+    "domain_stats",
+    "domain_cap",
+    "decontaminate",
+    "pack_chunks",
+    "pii_redact",
+    "url_canonical",
+    "graph_pagerank",
+    "crawl_schedule",
+    "lang_id",
+    "quality_score",
+    "token_count",
+    "fingerprint",
+    "status_agg",
+    "overlap_iou",
+    "revisit_latest",
+    "quality_fit",
+    "quality_fit_predict",
+    # remaining oracle entries, benched for per-entry completeness:
+    # generic relational shapes, the capped pairwise baselines, the
+    # mixture weight sub-frame and the LM gate form
+    "broadcast_join_agg",
+    "doc_order_sort",
+    "threshold_filter",
+    "topk_per_group",
+    "window_dedup",
+    "dedup_ngram_jaccard",
+    "dedup_embedding_neardup",
+    "mix_weights",
+    "lm_filter",
+)
 
 
 def sf_of(sf_dir: str) -> float:
@@ -109,69 +163,8 @@ def main() -> None:
     times["extract_pipeline"] = round(ext_sec, 3)
     docs_per_sec = n_out / ext_sec
 
-    others = [
-        ("dedup_exact", dedup.QUERIES["dedup_exact"]),
-        ("dedup_simhash", dedup.QUERIES["dedup_simhash"]),
-        ("dedup_minhash", dedup.QUERIES["dedup_minhash"]),
-        ("dedup_lsh_pairs", dedup.QUERIES["dedup_lsh_pairs"]),
-        ("dedup_spans", dedup.QUERIES["dedup_spans"]),
-        ("winnow_sketch", dedup.QUERIES["winnow_sketch"]),
-        ("sim_cosine_topk", similarity.QUERIES["sim_cosine_topk"]),
-        ("sim_lsh_ann", similarity.QUERIES["sim_lsh_ann"]),
-        # benches the PRODUCTION batched-matmul assignment (round-4); the
-        # fold form stays the driver-oracle path only
-        ("sim_ivf_ann", similarity.q_ivf_ann_batched),
-        ("sim_knn_join", similarity.q_knn_join_batched),
-        ("sim_knn_multitable", similarity.q_knn_join_multitable_batched),
-        ("emb_quantize_report", quantize.QUERIES["emb_quantize_report"]),
-        # cluster resolution: verified pairs → connected components
-        ("dedup_increment", dedup.QUERIES["dedup_increment"]),
-        ("dedup_neardup_increment", dedup.QUERIES["dedup_neardup_increment"]),
-        ("dedup_clusters", clustering.QUERIES["dedup_clusters"]),
-        ("sim_semantic_clusters", clustering.q_semantic_clusters_batched),
-        ("corpus_keep", corpus.QUERIES["corpus_keep"]),
-        ("corpus_stats", corpus.QUERIES["corpus_stats"]),
-        ("repetition_stats", text_analysis.QUERIES["repetition_stats"]),
-        ("repetition_filter", text_analysis.QUERIES["repetition_filter"]),
-        ("chunk_documents", text_analysis.QUERIES["chunk_documents"]),
-        ("hash_sample", text_analysis.QUERIES["hash_sample"]),
-        ("mix_sample", text_analysis.QUERIES["mix_sample"]),
-        ("temperature_sample", text_analysis.QUERIES["temperature_sample"]),
-        ("term_stats", text_analysis.QUERIES["term_stats"]),
-        ("vocab_topk", text_analysis.QUERIES["vocab_topk"]),
-        ("encode_documents", text_analysis.QUERIES["encode_documents"]),
-        ("lm_score", text_analysis.QUERIES["lm_score"]),
-        ("tfidf_topterms", text_analysis.QUERIES["tfidf_topterms"]),
-        ("domain_stats", governance.QUERIES["domain_stats"]),
-        ("domain_cap", governance.QUERIES["domain_cap"]),
-        ("decontaminate", governance.QUERIES["decontaminate"]),
-        ("pack_chunks", governance.QUERIES["pack_chunks"]),
-        ("pii_redact", governance.QUERIES["pii_redact"]),
-        ("url_canonical", governance.QUERIES["url_canonical"]),
-        ("graph_pagerank", graph.QUERIES["graph_pagerank"]),
-        ("crawl_schedule", graph.QUERIES["crawl_schedule"]),
-        ("lang_id", text_analysis.QUERIES["lang_id"]),
-        ("quality_score", text_analysis.QUERIES["quality_score"]),
-        ("token_count", text_analysis.QUERIES["token_count"]),
-        ("fingerprint", text_analysis.QUERIES["fingerprint"]),
-        ("status_agg", relational.QUERIES["status_agg"]),
-        ("overlap_iou", relational.QUERIES["overlap_iou"]),
-        ("revisit_latest", relational.QUERIES["revisit_latest"]),
-        ("quality_fit", regression.QUERIES["quality_fit"]),
-        ("quality_fit_predict", regression.QUERIES["quality_fit_predict"]),
-        # remaining oracle entries, benched for per-entry completeness:
-        # generic relational shapes, the capped pairwise baselines, the
-        # mixture weight sub-frame and the LM gate form
-        ("broadcast_join_agg", relational.QUERIES["broadcast_join_agg"]),
-        ("doc_order_sort", relational.QUERIES["doc_order_sort"]),
-        ("threshold_filter", relational.QUERIES["threshold_filter"]),
-        ("topk_per_group", relational.QUERIES["topk_per_group"]),
-        ("window_dedup", relational.QUERIES["window_dedup"]),
-        ("dedup_ngram_jaccard", dedup.QUERIES["dedup_ngram_jaccard"]),
-        ("dedup_embedding_neardup", dedup.QUERIES["dedup_embedding_neardup"]),
-        ("mix_weights", text_analysis.QUERIES["mix_weights"]),
-        ("lm_filter", text_analysis.QUERIES["lm_filter"]),
-    ]
+    entry_queries = queries()
+    others = [(name, entry_queries[name]) for name in OPERATOR_LEAVES]
     # remaining driver query families (round-4 verdict bench-coverage nit).
     # The staged-cascade leg reads a CACHED parquet fixture: the driver
     # entry regenerates its 240 pages in-plan (fine for a correctness
@@ -179,7 +172,6 @@ def main() -> None:
     # (~6-15 s of page building vs the operator itself) and mislabel the
     # staged form. multimodal_meta's 60-row media synthesis is negligible.
     from cpp_paddle_ocr_spark.operators.staged import extract_staged
-    from __spark_entry__ import _N_EXTRACT, _q_multimodal_meta
 
     staged_fixture = ensure_fixture(spark, _N_EXTRACT)
 
@@ -188,7 +180,7 @@ def main() -> None:
             "extract_pages_staged",
             lambda s, d: extract_staged(s.read.parquet(staged_fixture)),
         ),
-        ("multimodal_meta", _q_multimodal_meta),
+        ("multimodal_meta", entry_queries["multimodal_meta"]),
     ]
     for name, fn in others:
         t0 = time.perf_counter()

@@ -263,7 +263,6 @@ SEMANTIC_DRIVER_THRESH = 0.45
 def semantic_clusters(
     df: DataFrame,
     thresh: float = SEMANTIC_THRESH,
-    engine: str = "batched",
     checkpoint_dir: str | None = None,
     n_tables: int = 1,
 ) -> DataFrame:
@@ -273,13 +272,12 @@ def semantic_clusters(
 
     The edge set comes from ``knn_join`` (bucketed, capped — never n²), so
     cluster recall inherits the bucket scheme's recall; that is the
-    documented ANN trade, not a defect of the components step. Both kNN
-    engines produce identical 6-dp cosines (test-pinned), so the cluster
-    partition is engine-independent; the driver oracle pins ``expr`` for
-    DuckDB bit-parity while production/bench default to the matmul engine.
+    documented ANN trade, not a defect of the components step. The kNN
+    cosines are the per-bucket matmul rounded half-up at 6 dp, checked
+    against ``SEMANTIC_CLUSTERS_SQL`` by the driver.
     """
     pairs = (
-        knn_join(df, engine=engine, n_tables=n_tables)
+        knn_join(df, n_tables=n_tables)
         .filter(F.col("cosine") >= thresh)
         .select("vec_id", "neighbor_id")
     )
@@ -354,18 +352,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # expr engine: kNN cosines bit-identical to the DuckDB oracle (the
-    # same parity pin as the sim_knn_join driver entry); driver threshold
-    # 0.45 — see SEMANTIC_DRIVER_THRESH
-    return semantic_clusters(
-        load(spark, sf_dir, "embeddings"),
-        thresh=SEMANTIC_DRIVER_THRESH,
-        engine="expr",
-    )
-
-
-def q_semantic_clusters_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production engine (per-bucket matmul kNN), benched form."""
+    # driver threshold 0.45 — see SEMANTIC_DRIVER_THRESH
     return semantic_clusters(
         load(spark, sf_dir, "embeddings"), thresh=SEMANTIC_DRIVER_THRESH
     )

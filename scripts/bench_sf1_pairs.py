@@ -31,81 +31,72 @@ import time
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
-from cpp_paddle_ocr_spark.operators import (  # noqa: E402
-    clustering,
-    corpus,
-    dedup,
-    governance,
-    graph,
-    quantize,
-    regression,
-    relational,
-    similarity,
-    text_analysis,
-)
 from cpp_paddle_ocr_spark.operators.extract import extract  # noqa: E402
 from cpp_paddle_ocr_spark.session import get_spark  # noqa: E402
+from __spark_entry__ import queries  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.1"
 SF_BIG = str(ROOT / ".benchdata" / "sf1")
 
-#: pass query names as argv to run a subset (results merge into sf1.json)
-QUERY_SET = [
-    ("dedup_exact", dedup.QUERIES["dedup_exact"]),
-    ("dedup_simhash", dedup.QUERIES["dedup_simhash"]),
-    ("dedup_minhash", dedup.QUERIES["dedup_minhash"]),
-    ("dedup_lsh_pairs", dedup.QUERIES["dedup_lsh_pairs"]),
-    ("dedup_spans", dedup.QUERIES["dedup_spans"]),
-    ("winnow_sketch", dedup.QUERIES["winnow_sketch"]),
-    ("dedup_clusters", clustering.QUERIES["dedup_clusters"]),
-    ("sim_cosine_topk", similarity.QUERIES["sim_cosine_topk"]),
-    ("sim_lsh_ann", similarity.QUERIES["sim_lsh_ann"]),
-    ("sim_ivf_ann", similarity.q_ivf_ann_batched),
-    ("sim_knn_join", similarity.q_knn_join_batched),
-    ("sim_semantic_clusters", clustering.q_semantic_clusters_batched),
-    ("lang_id", text_analysis.QUERIES["lang_id"]),
-    ("quality_score", text_analysis.QUERIES["quality_score"]),
-    ("token_count", text_analysis.QUERIES["token_count"]),
-    ("fingerprint", text_analysis.QUERIES["fingerprint"]),
-    ("corpus_keep", corpus.QUERIES["corpus_keep"]),
-    ("repetition_stats", text_analysis.QUERIES["repetition_stats"]),
-    ("chunk_documents", text_analysis.QUERIES["chunk_documents"]),
-    ("hash_sample", text_analysis.QUERIES["hash_sample"]),
-    ("status_agg", relational.QUERIES["status_agg"]),
-    ("overlap_iou", relational.QUERIES["overlap_iou"]),
-    ("term_stats", text_analysis.QUERIES["term_stats"]),
-    ("vocab_topk", text_analysis.QUERIES["vocab_topk"]),
-    ("lm_score", text_analysis.QUERIES["lm_score"]),
-    ("tfidf_topterms", text_analysis.QUERIES["tfidf_topterms"]),
-    ("emb_quantize_report", quantize.QUERIES["emb_quantize_report"]),
-    ("sim_knn_multitable", similarity.q_knn_join_multitable_batched),
-    ("domain_stats", governance.QUERIES["domain_stats"]),
-    ("domain_cap", governance.QUERIES["domain_cap"]),
-    ("decontaminate", governance.QUERIES["decontaminate"]),
-    ("pack_chunks", governance.QUERIES["pack_chunks"]),
-    ("pii_redact", governance.QUERIES["pii_redact"]),
-    ("url_canonical", governance.QUERIES["url_canonical"]),
-    ("graph_pagerank", graph.QUERIES["graph_pagerank"]),
-    ("crawl_schedule", graph.QUERIES["crawl_schedule"]),
-    ("revisit_latest", relational.QUERIES["revisit_latest"]),
-    ("quality_fit", regression.QUERIES["quality_fit"]),
-    ("quality_fit_predict", regression.QUERIES["quality_fit_predict"]),
-    ("temperature_sample", text_analysis.QUERIES["temperature_sample"]),
-    ("dedup_increment", dedup.QUERIES["dedup_increment"]),
-    ("dedup_neardup_increment", dedup.QUERIES["dedup_neardup_increment"]),
-    ("corpus_stats", corpus.QUERIES["corpus_stats"]),
+#: pass query names as argv to run a subset (results merge into sf1.json).
+#: Each name resolves through ``__spark_entry__.queries()``, so every leg
+#: times exactly the function the driver checks against its oracle.
+QUERY_NAMES = (
+    "dedup_exact",
+    "dedup_simhash",
+    "dedup_minhash",
+    "dedup_lsh_pairs",
+    "dedup_spans",
+    "winnow_sketch",
+    "dedup_clusters",
+    "sim_cosine_topk",
+    "sim_lsh_ann",
+    "sim_ivf_ann",
+    "sim_knn_join",
+    "sim_semantic_clusters",
+    "lang_id",
+    "quality_score",
+    "token_count",
+    "fingerprint",
+    "corpus_keep",
+    "repetition_stats",
+    "chunk_documents",
+    "hash_sample",
+    "status_agg",
+    "overlap_iou",
+    "term_stats",
+    "vocab_topk",
+    "lm_score",
+    "tfidf_topterms",
+    "emb_quantize_report",
+    "sim_knn_multitable",
+    "domain_stats",
+    "domain_cap",
+    "decontaminate",
+    "pack_chunks",
+    "pii_redact",
+    "url_canonical",
+    "graph_pagerank",
+    "crawl_schedule",
+    "revisit_latest",
+    "quality_fit",
+    "quality_fit_predict",
+    "temperature_sample",
+    "dedup_increment",
+    "dedup_neardup_increment",
+    "corpus_stats",
     # sf-dependent remainder of the bench surface (the fixed-fixture legs —
     # staged extract, media meta, layout — have no input decade to measure)
-    ("broadcast_join_agg", relational.QUERIES["broadcast_join_agg"]),
-    ("doc_order_sort", relational.QUERIES["doc_order_sort"]),
-    ("threshold_filter", relational.QUERIES["threshold_filter"]),
-    ("topk_per_group", relational.QUERIES["topk_per_group"]),
-    ("window_dedup", relational.QUERIES["window_dedup"]),
-    ("dedup_ngram_jaccard", dedup.QUERIES["dedup_ngram_jaccard"]),
-    ("dedup_embedding_neardup", dedup.QUERIES["dedup_embedding_neardup"]),
-    ("mix_weights", text_analysis.QUERIES["mix_weights"]),
-    ("lm_filter", text_analysis.QUERIES["lm_filter"]),
-]
+    "broadcast_join_agg",
+    "doc_order_sort",
+    "threshold_filter",
+    "topk_per_group",
+    "window_dedup",
+    "dedup_ngram_jaccard",
+    "dedup_embedding_neardup",
+    "mix_weights",
+    "lm_filter",
+)
 
 N_PAIRS = 3
 N_EXTRACT_PAIRS = 2
@@ -130,14 +121,15 @@ def main() -> None:
     import bench as benchmod
 
     subset = set(sys.argv[1:])
-    unknown = subset - {n for n, _ in QUERY_SET}
+    unknown = subset - set(QUERY_NAMES)
     if unknown:
         # fail BEFORE get_spark/fixture work: a typo'd name would otherwise
         # burn minutes, measure nothing, and still rewrite sf1.json
         raise SystemExit(f"unknown query names: {sorted(unknown)}")
-    query_set = (
-        [(n, f) for n, f in QUERY_SET if n in subset] if subset else QUERY_SET
-    )
+    entry_queries = queries()
+    query_set = [
+        (n, entry_queries[n]) for n in QUERY_NAMES if not subset or n in subset
+    ]
 
     spark = get_spark(app_name="bench_sf1_pairs")
     spark.sparkContext.setLogLevel("ERROR")

@@ -2,7 +2,7 @@
 
 Oracle parity for the two driver entries runs in test_oracle_parity (the
 registry auto-discovers them); here: the CC kernel itself against a pure-
-Python union-find, engine agreement, and the convergence guard.
+Python union-find and the convergence guard.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from cpp_paddle_ocr_spark.operators.clustering import (  # noqa: E402
     connected_components,
     dedup_clusters,
-    semantic_clusters,
 )
 from cpp_paddle_ocr_spark.operators.dedup import lsh_candidate_pairs  # noqa: E402
 
@@ -123,19 +122,6 @@ def test_dedup_clusters_covers_every_doc_once(spark):
         (F.col("n_canon") != 1) | (F.col("min_id") != F.col("cluster_id"))
     ).count()
     assert bad == 0
-
-
-def test_semantic_cluster_engines_agree(spark):
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    a = {
-        r["vec_id"]: r["cluster_id"]
-        for r in semantic_clusters(emb, engine="expr").collect()
-    }
-    b = {
-        r["vec_id"]: r["cluster_id"]
-        for r in semantic_clusters(emb, engine="batched").collect()
-    }
-    assert a == b
 
 
 def test_cc_reliable_checkpoint_mode_same_labels(spark, tmp_path):

@@ -73,74 +73,57 @@ def test_ivf_probe_covers_query_list_and_ranks_exact(spark, embeddings):
     assert again == [(r.vec_id, r.list_id, r.cosine) for r in ivf]
 
 
-def test_ivf_probe_is_broadcast(spark, embeddings):
-    # the fold (oracle) path keeps the broadcast probe join; the batched
-    # production path has NO join at all (asserted separately below)
-    from cpp_paddle_ocr_spark.operators.similarity import ivf_topk
-
-    plan = (
-        ivf_topk(embeddings, assign="fold")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Broadcast" in plan
-
-
-def test_ivf_assign_fold_vs_batched_agree(spark, embeddings):
-    # round-3 verdict #1: the production batched-matmul assignment must agree
-    # with the oracle-pinned sequential fold on argmax for every fixture row.
-    # Ties are the only divergence risk; the closed-form centroids make exact
-    # ties measure-zero — assert both (no ties, identical assignment).
-    import numpy as np
-
+def test_ivf_assign_batched_matches_sequential_argmax(spark, embeddings):
+    # the batched-matmul assignment must equal the argmax of the closed-form
+    # centroid dot summed sequentially (the DuckDB oracle's ``list_sum``
+    # order) for every fixture row. Ties are the only divergence risk; the
+    # closed-form centroids make exact ties measure-zero — assert none.
     from cpp_paddle_ocr_spark.operators.similarity import (
+        DIM,
         N_CENTROIDS,
-        _centroid_dot,
-        _centroid_matrix,
-        ivf_scores_batched,
+        ivf_assign_batched,
     )
 
-    e = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    rows = (
+        embeddings.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+        )
+        .withColumn("list_id", ivf_assign_batched()(F.col("emb")))
+        .collect()
     )
-    fold = e.select(
-        "vec_id",
-        F.array(
-            *[F.expr(_centroid_dot("emb", j)) for j in range(N_CENTROIDS)]
-        ).alias("scores"),
+    assert rows
+    for r in rows:
+        scores = []
+        for j in range(N_CENTROIDS):
+            acc = 0.0
+            for i in range(DIM):
+                acc += r.emb[i] * (((i * 31 + j * 57) % 17 - 8.0) / 8.0)
+            scores.append(acc)
+        top = max(scores)
+        assert scores.count(top) == 1, r.vec_id
+        assert r.list_id == scores.index(top), r.vec_id
+
+
+def _half_up_6(x: float) -> float:
+    """Spark's F.round: HALF_UP over the shortest decimal repr."""
+    import decimal
+
+    return float(
+        decimal.Decimal(repr(x)).quantize(
+            decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
+        )
     )
-    fold_rows = {r.vec_id: list(r.scores) for r in fold.collect()}
-    batched = e.select("vec_id", ivf_scores_batched()(F.col("emb")).alias("scores"))
-    bat_rows = {r.vec_id: list(r.scores) for r in batched.collect()}
-    assert set(fold_rows) == set(bat_rows)
-    for vid, fs in fold_rows.items():
-        fa = np.asarray(fs)
-        ba = np.asarray(bat_rows[vid])
-        # no exact ties at the top in either scoring
-        assert np.sum(fa == fa.max()) == 1, vid
-        assert np.sum(ba == ba.max()) == 1, vid
-        assert int(fa.argmax()) == int(ba.argmax()), vid
-        # scores agree to float tolerance (only summation order differs)
-        assert np.allclose(fa, ba, rtol=1e-12, atol=1e-9), vid
 
 
-def test_ivf_topk_batched_default_matches_fold(spark, embeddings):
-    from cpp_paddle_ocr_spark.operators.similarity import ivf_topk
-
-    got_b = [(r.vec_id, r.list_id, r.cosine) for r in ivf_topk(embeddings).collect()]
-    got_f = [
-        (r.vec_id, r.list_id, r.cosine)
-        for r in ivf_topk(embeddings, assign="fold").collect()
-    ]
-    assert got_b == got_f
-    assert len(got_b) == 10
-
-
-def test_knn_join_matches_per_bucket_bruteforce(spark, embeddings):
+@pytest.mark.parametrize("n_planes,n_tables", [(8, 1), (12, 1), (12, 2)])
+def test_knn_join_matches_per_bucket_bruteforce(
+    spark, embeddings, n_planes, n_tables
+):
     # every row's reported neighbors must be exactly the top-k by rounded
-    # cosine among its bucket peers (tie-break neighbor_id asc) — verified
-    # against an independent NumPy recomputation
+    # cosine among its bucket peers — the union of peers over all tables —
+    # (tie-break neighbor_id asc), verified against an independent NumPy
+    # recomputation. Covers the oracle geometry, a finer hash, and the
+    # multi-table merge.
     import numpy as np
 
     from cpp_paddle_ocr_spark.operators.similarity import (
@@ -149,43 +132,48 @@ def test_knn_join_matches_per_bucket_bruteforce(spark, embeddings):
     )
 
     got = {}
-    for r in knn_join(embeddings, k=3).collect():
+    for r in knn_join(
+        embeddings, k=3, n_planes=n_planes, n_tables=n_tables
+    ).collect():
         got.setdefault(r.vec_id, []).append((r.knn_rank, r.neighbor_id, r.cosine))
     e = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).withColumn("bucket", _bucket_col("emb"))
+    )
+    for t in range(n_tables):
+        e = e.withColumn(f"b{t}", _bucket_col("emb", n_planes, table=t))
     rows = e.collect()
-    by_bucket: dict[int, list] = {}
+    vecs = {r.vec_id: np.asarray(r.emb, dtype=np.float64) for r in rows}
+    by_bucket: dict[tuple[int, int], set] = {}
     for r in rows:
-        by_bucket.setdefault(r.bucket, []).append(
-            (r.vec_id, np.asarray(r.emb, dtype=np.float64))
-        )
+        for t in range(n_tables):
+            by_bucket.setdefault((t, r[f"b{t}"]), set()).add(r.vec_id)
     exp = {}
-    for members in by_bucket.values():
-        for vid, v in members:
-            cands = []
-            for nid, u in members:
-                if nid == vid:
-                    continue
-                c = round(
-                    float(v @ u)
-                    / (float(np.sqrt(v @ v)) * float(np.sqrt(u @ u))),
-                    6,
-                )
-                cands.append((-c, nid))
-            cands.sort()
-            if cands:
-                exp[vid] = [
-                    (i + 1, nid, -negc)
-                    for i, (negc, nid) in enumerate(cands[:3])
-                ]
+    for r in rows:
+        vid = r.vec_id
+        peers = set().union(
+            *(by_bucket[(t, r[f"b{t}"])] for t in range(n_tables))
+        ) - {vid}
+        v = vecs[vid]
+        cands = []
+        for nid in peers:
+            u = vecs[nid]
+            c = _half_up_6(
+                float(v @ u) / (float(np.sqrt(v @ v)) * float(np.sqrt(u @ u)))
+            )
+            cands.append((-c, nid))
+        cands.sort()
+        if cands:
+            exp[vid] = [
+                (i + 1, nid, -negc) for i, (negc, nid) in enumerate(cands[:3])
+            ]
+    assert got  # the hash still yields candidate pairs at this width
     assert set(got) == set(exp)
     mismatches = 0
     for vid in exp:
         if sorted(got[vid]) != exp[vid]:
             mismatches += 1
-    # float summation order (numpy pairwise vs Spark fold) may flip a 6-dp
-    # rounding at the exact .5 boundary — allow none in practice
+    # float summation order (numpy dot vs the per-bucket matmul) may flip a
+    # 6-dp rounding at the exact .5 boundary — allow none in practice
     assert mismatches == 0
 
 
@@ -222,17 +210,6 @@ def test_knn_join_ivf_method_runs_and_is_deterministic(spark, embeddings):
     assert a == b and len(a) > 0
 
 
-def test_knn_join_engines_agree(spark, embeddings):
-    # the per-bucket matmul engine and the oracle-pinned expression engine
-    # must produce identical rows (both round half-up at 6 dp; bucket
-    # membership is the deterministic unrolled plane-dot either way)
-    from cpp_paddle_ocr_spark.operators.similarity import knn_join
-
-    b = sorted(map(tuple, knn_join(embeddings, k=4).collect()))
-    e = sorted(map(tuple, knn_join(embeddings, k=4, engine="expr").collect()))
-    assert b == e and len(b) > 0
-
-
 def test_ivf_topk_batched_plan_has_no_join(spark, embeddings):
     # the production single-query IVF resolves probes driver-side: the plan
     # must be a filtered scan + sort, with no join operator at all
@@ -242,15 +219,13 @@ def test_ivf_topk_batched_plan_has_no_join(spark, embeddings):
     assert "Join" not in plan
 
 
-def test_ivf_topk_missing_query_id_empty_both_engines(spark, embeddings):
+def test_ivf_topk_missing_query_id_empty(spark, embeddings):
     from cpp_paddle_ocr_spark.operators.similarity import ivf_topk
 
-    for assign in ("batched", "fold"):
-        out = ivf_topk(embeddings, query_vec_id=10_000_000, assign=assign)
-        assert out.count() == 0, assign
-        assert [f.name for f in out.schema.fields] == [
-            "vec_id", "list_id", "cosine",
-        ], assign
+    with pytest.warns(UserWarning, match="not found"):
+        out = ivf_topk(embeddings, query_vec_id=10_000_000)
+    assert out.count() == 0
+    assert [f.name for f in out.schema.fields] == ["vec_id", "list_id", "cosine"]
 
 
 def test_round_half_up_6_matches_shortest_repr_decimal():
@@ -258,20 +233,9 @@ def test_round_half_up_6_matches_shortest_repr_decimal():
     Decimal(repr(x)) HALF_UP) must hold INCLUDING at representation
     boundaries where the vectorized floor(|x|*1e6+0.5) form can land on
     the wrong side."""
-    import decimal
-
     import numpy as np
 
     from cpp_paddle_ocr_spark.operators.similarity import _round_half_up_6
-
-    q = decimal.Decimal("0.000001")
-
-    def gold(v: float) -> float:
-        return float(
-            decimal.Decimal(repr(v)).quantize(
-                q, rounding=decimal.ROUND_HALF_UP
-            )
-        )
 
     # boundary-adjacent doubles (nearest doubles to k.5e-6 values) plus a
     # deterministic sweep of ordinary values
@@ -283,14 +247,14 @@ def test_round_half_up_6_matches_shortest_repr_decimal():
     arr = np.asarray(vals, dtype=np.float64)
     got = _round_half_up_6(arr)
     for v, g in zip(vals, got):
-        assert g == gold(float(v)), (v, g, gold(float(v)))
+        assert g == _half_up_6(float(v)), (v, g, _half_up_6(float(v)))
 
 
 def test_knn_group_kernel_tripwire_rejects_over_cap_group():
     """Round-4 verdict #1: over-cap keys must be ROUTED around the pandas
     kernel, never materialized into it. The kernel enforces that invariant
-    with a hard raise — so the skew test (500 identical vectors, cap 100,
-    batched engine) passing IS proof no over-cap group was materialized."""
+    with a hard raise — so the skew test (500 identical vectors, cap 100)
+    passing IS proof no over-cap group was materialized."""
     import numpy as np
     import pandas as pd
     import pytest as _pytest
@@ -356,24 +320,6 @@ def test_ivf_query_vec_bypasses_plan_time_lookup(spark, embeddings):
     assert out.collect() == baseline
 
 
-def test_knn_join_engines_agree_at_nondefault_width(spark, embeddings):
-    """The geometry parameterization must hold beyond the oracle default:
-    at 12 planes (4096 buckets) both engines still produce the identical
-    (vec_id, neighbor_id, cosine, knn_rank) set."""
-    from cpp_paddle_ocr_spark.operators.similarity import knn_join
-
-    def rows(engine):
-        return {
-            (r.vec_id, r.neighbor_id, r.cosine, r.knn_rank)
-            for r in knn_join(embeddings, engine=engine, n_planes=12).collect()
-        }
-
-    got_b = rows("batched")
-    got_e = rows("expr")
-    assert got_b == got_e
-    assert got_b  # 12-plane bucketing still yields candidate pairs here
-
-
 def _knn_pairs(df):
     return {(r.vec_id, r.neighbor_id) for r in df.collect()}
 
@@ -394,7 +340,7 @@ def test_knn_join_multi_table_recall(spark, embeddings):
     e = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     ).withColumn("key", F.lit(0))
-    truth = _knn_pairs(_knn_one_table(e, 5, 10**9, "batched"))
+    truth = _knn_pairs(_knn_one_table(e, 5, 10**9))
 
     one = _knn_pairs(knn_join(embeddings, n_planes=12, n_tables=1))
     three = _knn_pairs(knn_join(embeddings, n_planes=12, n_tables=3))
@@ -404,20 +350,6 @@ def test_knn_join_multi_table_recall(spark, embeddings):
     # tables probe genuinely different bucketings — pre-round-5 this
     # assertion would fail, since every table hashed identically
     assert r3 > r1, (r1, r3)
-
-
-def test_knn_join_multi_table_engines_agree(spark, embeddings):
-    from cpp_paddle_ocr_spark.operators.similarity import knn_join
-
-    def rows(engine):
-        return {
-            (r.vec_id, r.neighbor_id, r.cosine, r.knn_rank)
-            for r in knn_join(
-                embeddings, engine=engine, n_planes=12, n_tables=2
-            ).collect()
-        }
-
-    assert rows("batched") == rows("expr")
 
 
 def test_auto_n_planes_formula():
@@ -477,7 +409,7 @@ def test_knn_join_ivf_nprobe_recall(spark, embeddings):
     e = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     ).withColumn("key", F.lit(0))
-    truth = _knn_pairs(_knn_one_table(e, 5, 10**9, "batched"))
+    truth = _knn_pairs(_knn_one_table(e, 5, 10**9))
 
     p1 = _knn_pairs(knn_join(embeddings, method="ivf", nprobe=1))
     p2 = _knn_pairs(knn_join(embeddings, method="ivf", nprobe=2))
