@@ -102,10 +102,6 @@ CTC_BLANK = 0
 #: We allow 8 MiB before rejecting (web pages are bigger than screenshots).
 MAX_HTML_BYTES = 8 * 1024 * 1024
 
-#: Inline threshold analog (600 KB, src/ocr_ipc_client.cpp:149): pages above
-#: this are routed into their own range partitions by ``plans.partitioning``.
-OVERSIZE_ROUTE_BYTES = 600 * 1024
-
 # --- parallelism -------------------------------------------------------------
 
 #: Default salt buckets for skewed-host salting (SURVEY.md §2.8 P2).

@@ -108,13 +108,6 @@ def write_documents(
         df.write.mode("overwrite").parquet(target)
 
 
-def read_documents(spark: SparkSession, target: str) -> DataFrame:
-    """Read a documents table from an Iceberg identifier or a parquet path."""
-    if _is_table_ident(target):
-        return spark.read.table(target)
-    return spark.read.parquet(target)
-
-
 def overwrite_result_partitions(
     df: DataFrame, target: str, partition_col: str = "bucket"
 ) -> None:

@@ -9,8 +9,8 @@ processing time — ``include/paddle_ocr/ocr_ipc_service.h:91-93``,
 * buckets are processed in ``n_groups`` commit groups of two Spark jobs: the
   output is durably written (dynamic partition overwrite on ``bucket``), then
   one file with a lineage row per bucket is appended — only then is it "committed";
-* on restart the job anti-joins the lineage table and processes only
-  uncommitted buckets. Partial files from a crashed group sit in partition
+* on restart the job reads the run's committed buckets from the lineage
+  table (``_committed``) and processes only the others. Partial files from a crashed group sit in partition
   dirs that get dynamically overwritten on retry, so retries are idempotent:
   re-extraction of a bucket is byte-identical (core is deterministic) and
   replaces, never duplicates.
@@ -112,15 +112,27 @@ _NOT_FOUND_TOKENS = (
 )
 
 
-def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int]:
+def _committed(
+    spark: SparkSession, out_dir: str, run_id: str
+) -> set[tuple[int, str | None]]:
+    """``(bucket, transform)`` pairs committed for ``run_id``, transform None
+    on pre-round-3 lineage. Empty ONLY when the lineage sink is missing: a
+    transient read failure raises instead of silently restarting from zero,
+    which would re-extract committed buckets and bypass the transform guard."""
     try:
-        lin = read_lineage(spark, out_dir)
-    except Exception as e:  # missing sink = fresh run; anything else raises
+        lin = read_lineage(spark, out_dir).filter(F.col("run_id") == run_id)
+        if "transform" not in lin.columns:  # pre-round-3 lineage table
+            lin = lin.withColumn("transform", F.lit(None).cast("string"))
+        rows = lin.select("bucket", "transform").distinct().collect()
+    except Exception as e:
         if not any(tok in str(e) for tok in _NOT_FOUND_TOKENS):
             raise
         return set()
-    rows = lin.filter(F.col("run_id") == run_id).select("bucket").distinct().collect()
-    return {r.bucket for r in rows}
+    return {(r.bucket, r.transform) for r in rows}
+
+
+def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int]:
+    return {b for b, _ in _committed(spark, out_dir, run_id)}
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -184,21 +196,9 @@ def run_extract_job(
     # would change, marking buckets "done" whose membership no longer
     # matches (pages skipped or doubled) and leaving stale rows behind
     # partition overwrites.
-    try:
-        lin = read_lineage(spark, out_dir).filter(F.col("run_id") == run_id)
-        if "transform" not in lin.columns:  # pre-round-3 lineage table
-            lin = lin.withColumn("transform", F.lit(None).cast("string"))
-        rows = lin.select("bucket", "transform").distinct().collect()
-    except Exception as e:
-        # ONLY a genuinely missing lineage sink means "fresh run"; a
-        # transient read failure must NOT silently restart from zero (it
-        # would re-extract every committed bucket and bypass the transform
-        # guard above)
-        if not any(tok in str(e) for tok in _NOT_FOUND_TOKENS):
-            raise
-        rows = []
-    done = {r.bucket for r in rows}
-    prior = {r.transform for r in rows if r.transform is not None}
+    committed = _committed(spark, out_dir, run_id)
+    done = {b for b, _ in committed}
+    prior = {t for _, t in committed if t is not None}
     if prior and prior != {transform}:
         raise RuntimeError(
             f"run {run_id} has lineage committed under bucket transform "

@@ -13,9 +13,8 @@ The ``processRequest`` analog (``src/ocr_worker.cpp:213-311``) as one
   design scanned it 4×; see BENCH/BASELINE.md);
 * optional single shuffle: salted url-hash repartition spreads pages —
   including the rare multi-MB ones — uniformly, which measured faster than
-  confining big pages to dedicated range partitions (they serialize there);
-  ``plans.partitioning.size_routed_repartition`` remains available for
-  memory-constrained clusters;
+  confining big pages to dedicated range partitions (they serialize there;
+  BENCH/BASELINE.md finding 2);
 * ``run_cascade`` — the only Python hop, shared by every cascade surface
   (``extract``, ``layout.extract_with_layout``, the streaming jobs).
   Incoming Arrow batches are re-sliced to a byte budget so a run of

@@ -3,25 +3,23 @@
 The reference dispatches requests idle-first/round-robin across workers
 (``src/cpu_worker_pool.cpp:43-56``) and rejects oversized requests at the
 1 MB pipe buffer (``src/ocr_ipc_service.cpp:222-239``). At 100 TB the
-equivalents are:
+equivalent is **url-hash + salt partitioning**: ``xxhash64(url)`` spreads
+pages uniformly; the explicit salt term keeps the layout uniform even when a
+single mega-host dominates the crawl *and* someone partitions or buckets by
+host upstream (north-rule requirement). Salt = ``xxhash64(url, SALT_SEED) %
+SALT_BUCKETS`` so it is deterministic, not random — retries produce the same
+layout (required for resume idempotence).
 
-* **url-hash + salt partitioning** — ``xxhash64(url)`` spreads pages
-  uniformly; the explicit salt term keeps the layout uniform even when a
-  single mega-host dominates the crawl *and* someone partitions or buckets by
-  host upstream (north-rule requirement). Salt = ``xxhash64(url, SALT_SEED) %
-  SALT_BUCKETS`` so it is deterministic, not random — retries produce the
-  same layout (required for resume idempotence).
-* **size routing** — pages above ``OVERSIZE_ROUTE_BYTES`` go to their own
-  range partitions ordered by length, so one 8 MiB page never sits in an
-  Arrow batch with 31 others (X2's global form: size-homogeneous batches via
-  ``repartitionByRange(length(html))``).
+Big pages get no partitions of their own: confining them to range
+partitions serialized them (BENCH/BASELINE.md finding 2). ``operators.extract``
+instead bounds the bytes of each Arrow batch inside the UDF.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import OVERSIZE_ROUTE_BYTES, SALT_BUCKETS
+from ..config import SALT_BUCKETS
 
 SALT_SEED = 0x5A17
 
@@ -33,28 +31,3 @@ def salted_url_partitioning(
     host = F.parse_url(F.col("url"), F.lit("HOST"))
     salt = F.pmod(F.xxhash64(F.col("url"), F.lit(SALT_SEED)), F.lit(salt_buckets))
     return df.repartition(num_partitions, F.xxhash64(host), salt)
-
-
-def size_routed_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    threshold_bytes: int = OVERSIZE_ROUTE_BYTES,
-    size_col: str | None = None,
-) -> DataFrame:
-    """Explicit oversized-blob routing: small pages → salted hash layout;
-    big pages → ``repartitionByRange`` on size at FULL parallelism (an early
-    variant used ``num_partitions // 8`` here and serialized the heavy pages
-    — see BENCH/BASELINE.md).
-
-    This is the optional memory-constrained mode (north-rule facility): it
-    guarantees size-homogeneous Arrow batches at the cost of a second source
-    scan (union of two filter branches). The default ``extract`` path instead
-    spreads big pages uniformly by salted hash and bounds per-batch bytes
-    inside the UDF, which measured faster on balanced hardware.
-    """
-    size = F.col(size_col) if size_col else F.length(F.col("html"))
-    small = df.filter((size <= threshold_bytes) | size.isNull())
-    big = df.filter(size > threshold_bytes)
-    small_p = salted_url_partitioning(small, num_partitions)
-    big_p = big.repartitionByRange(num_partitions, size)
-    return small_p.unionByName(big_p)

@@ -45,6 +45,11 @@ def get_spark(
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     )
+    # driver heap: half of physical memory, at most 32g. ParallelGC grows the
+    # heap toward its maximum under html churn; a 32g maximum on a 16 GB host
+    # got the test-suite JVM OOM-killed at 13.4 GB RSS
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(32, phys_gib // 2))}g")
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -68,7 +73,7 @@ def get_spark(
         # 128 rows ≈ 4 MB typical / 256 MB worst-case (measured 5x at
         # local[32], BENCH/BASELINE.md)
         .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", mem)
         # G1's humongous-allocation handling collapses under the 2 MB html
         # byte-array churn (measured 600+ s of GC per 20k-page job);
         # throughput-oriented ParallelGC fits this batch workload: ~3× and

@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..fixtures import layout_page, media_item, page
+from ..iceberg import _is_table_ident
 from ..schemas import DOCUMENTS_SCHEMA, MEDIA_SCHEMA
 
 
@@ -119,11 +120,12 @@ def write_documents_parquet(
     ).parquet(path)
 
 
-def read_documents(spark: SparkSession, path: str) -> DataFrame:
-    """S1: table scan. Parquet path or Iceberg table name both accepted."""
-    if "/" in path or path.endswith(".parquet"):
-        return spark.read.schema(DOCUMENTS_SCHEMA).parquet(path)
-    return spark.read.table(path)
+def read_documents(spark: SparkSession, target: str) -> DataFrame:
+    """S1: table scan of an Iceberg table identifier or a parquet path, told
+    apart by the rule every sink uses (``iceberg._is_table_ident``)."""
+    if _is_table_ident(target):
+        return spark.read.table(target)
+    return spark.read.schema(DOCUMENTS_SCHEMA).parquet(target)
 
 
 def from_base64(df: DataFrame, col: str = "html_b64") -> DataFrame:

@@ -32,7 +32,6 @@ import shutil
 import subprocess
 import sys
 import time
-import zipfile
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
@@ -49,13 +48,10 @@ FIXTURE = ROOT / ".benchdata" / f"docs_n{N_DOCS}_o{OVERSIZE_MAX}_f256"
 
 def _engine_zip() -> str:
     """Rebuild engine.zip every run — a stale zip silently ships an old
-    kernel to the executors (burned once)."""
-    zip_path = ROOT / "engine.zip"
-    zip_path.unlink(missing_ok=True)
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
-        for p in sorted(ROOT.glob("cpp_paddle_ocr_spark/**/*.py")):
-            z.write(p, p.relative_to(ROOT).as_posix())
-    return str(zip_path)
+    kernel to the executors (burned once). Same recipe as spark-submit
+    users and tests/test_engine_zip.py: scripts/make_pyfiles.sh."""
+    subprocess.run(["sh", str(ROOT / "scripts" / "make_pyfiles.sh")], check=True)
+    return str(ROOT / "engine.zip")
 
 
 def leg(n_exec: int, cores_per: int) -> None:

@@ -14,11 +14,10 @@ from cpp_paddle_ocr_spark.iceberg import (
     CATALOG,
     iceberg_available,
     iceberg_conf,
-    read_documents,
     snapshots,
     write_documents,
 )
-from cpp_paddle_ocr_spark.sources.documents import generate_documents
+from cpp_paddle_ocr_spark.sources.documents import generate_documents, read_documents
 
 
 def test_iceberg_conf_shape(tmp_path):
@@ -85,6 +84,30 @@ def test_table_ident_requires_dotted_name():
     assert _child_target("results", "_lineage") == "results/_lineage"
     assert _child_target("results.v2", "_lineage") == "results.v2/_lineage"
     assert _child_target("crawl.db.out", "_lineage") == "crawl.db.out__lineage"
+
+
+def test_read_documents_relative_dirs_are_parquet(spark, tmp_path, monkeypatch):
+    # the source follows the sinks' path-vs-table rule: a relative directory,
+    # dotted or not, is a parquet path, never a table name. Relative paths
+    # resolve against the JVM's local FileSystem working directory, so it
+    # moves into tmp_path together with the Python cwd.
+    jvm = spark._jvm
+    local_fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration()
+    )
+    old_wd = local_fs.getWorkingDirectory()
+    monkeypatch.chdir(tmp_path)
+    local_fs.setWorkingDirectory(jvm.org.apache.hadoop.fs.Path(str(tmp_path)))
+    try:
+        docs = generate_documents(spark, 40, oversize_max=2_000_000)
+        for name in ("docs", "results.v2"):
+            write_documents(docs, name)
+            assert (tmp_path / name / "_SUCCESS").is_file()
+            back = read_documents(spark, name)
+            assert back.count() == 40
+            assert back.schema.names == docs.schema.names
+    finally:
+        local_fs.setWorkingDirectory(old_wd)
 
 
 def test_parquet_overwrite_mode_is_per_write(spark, tmp_path):

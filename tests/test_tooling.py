@@ -1,0 +1,89 @@
+"""Tooling drift guard, no Spark session: every bench/job/script file
+compiles, its engine imports resolve, the bench leaf names are driver
+queries, and ``scripts/ab.py`` summarizes pairs correctly.
+
+The scripts run rarely and by hand, so a rename in the engine otherwise
+surfaces only as an ``ImportError``/``AttributeError`` minutes into a run.
+"""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import importlib.util
+import pathlib
+
+import pytest
+
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+TOOLING = sorted(ROOT.glob("scripts/*.py")) + [ROOT / "bench.py", ROOT / "jobs" / "extract_job.py"]
+IDS = [p.relative_to(ROOT).as_posix() for p in TOOLING]
+
+
+def _tree(path: pathlib.Path) -> ast.Module:
+    return ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+
+
+@pytest.mark.parametrize("path", TOOLING, ids=IDS)
+def test_tooling_file_compiles(path):
+    compile(path.read_text(encoding="utf-8"), str(path), "exec")
+
+
+@pytest.mark.parametrize("path", TOOLING, ids=IDS)
+def test_tooling_engine_imports_resolve(path):
+    missing = []
+    for node in ast.walk(_tree(path)):
+        if not (
+            isinstance(node, ast.ImportFrom)
+            and node.module
+            and node.module.split(".")[0] == "cpp_paddle_ocr_spark"
+        ):
+            continue
+        mod = importlib.import_module(node.module)
+        for alias in node.names:
+            if hasattr(mod, alias.name):
+                continue
+            try:  # a submodule not imported by its package's __init__
+                importlib.import_module(f"{node.module}.{alias.name}")
+            except ModuleNotFoundError:
+                missing.append(f"{node.module}.{alias.name} (line {node.lineno})")
+    assert not missing, f"{path.name}: unresolved engine imports {missing}"
+
+
+def _tuple_constant(path: pathlib.Path, name: str) -> tuple[str, ...]:
+    for node in _tree(path).body:
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == name for t in node.targets
+        ):
+            return ast.literal_eval(node.value)
+    raise AssertionError(f"{name} not assigned at module level in {path.name}")
+
+
+@pytest.mark.parametrize(
+    "path, name",
+    [("bench.py", "OPERATOR_LEAVES"), ("scripts/bench_sf1_pairs.py", "QUERY_NAMES")],
+)
+def test_bench_leaf_names_are_driver_queries(path, name):
+    import __spark_entry__
+
+    names = _tuple_constant(ROOT / path, name)
+    assert names, f"{path}: {name} is empty"
+    unknown = sorted(set(names) - set(__spark_entry__.queries()))
+    assert not unknown, f"{path}: {name} names no driver query: {unknown}"
+
+
+def test_ab_pair_summary():
+    spec = importlib.util.spec_from_file_location("ab", ROOT / "scripts" / "ab.py")
+    ab = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ab)
+
+    a = [10.0, 12.0, 11.0, 13.0, 9.0]
+    b = [11.0, 12.0, 10.0, 14.0, 10.0]
+    # B/A = 1.1, 1.0, 0.909, 1.077, 1.111; A quartiles 10 and 12, median 11
+    s = ab.pair_summary(a, b, "higher")
+    assert s["wins"] == 3  # the tie in pair 2 counts for neither side
+    assert s["median_ratio"] == pytest.approx(14.0 / 13.0)
+    assert s["a_iqr_over_median"] == pytest.approx(2.0 / 11.0)
+    assert ab.pair_summary(a, b, "lower")["wins"] == 1
+    one = ab.pair_summary([4.0], [3.0], "lower")
+    assert (one["wins"], one["median_ratio"], one["a_iqr_over_median"]) == (1, 0.75, 0.0)
