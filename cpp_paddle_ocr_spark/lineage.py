@@ -6,9 +6,12 @@ processing time — ``include/paddle_ocr/ocr_ipc_service.h:91-93``,
 
 * pages are assigned to ``n_buckets`` deterministic **lineage buckets** by
   ``pmod(xxhash64(url), n_buckets)`` — the unit of commit/retry;
-* buckets are processed in ``n_groups`` commit groups of two Spark jobs: the
-  output is durably written (dynamic partition overwrite on ``bucket``), then
-  one file with a lineage row per bucket is appended — only then is it "committed";
+* buckets are processed in ``n_groups`` commit groups: the output is durably
+  written in one Spark job (dynamic partition overwrite on ``bucket``), then
+  one file with a lineage row per bucket is added to the lineage table — only
+  then is the group "committed". On a lineage path the driver writes that
+  file itself (temp name, then rename), so a group costs one Spark job; an
+  Iceberg lineage table takes a ``saveAsTable`` append;
 * on restart the job reads the run's committed buckets from the lineage
   table (``_committed``) and processes only the others. Partial files from a crashed group sit in partition
   dirs that get dynamically overwritten on retry, so retries are idempotent:
@@ -25,9 +28,12 @@ from __future__ import annotations
 import logging
 import time
 import uuid
+from datetime import datetime, timezone
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
 
 from .config import LINEAGE_BUCKETS
@@ -36,6 +42,8 @@ from .schemas import LINEAGE_SCHEMA
 
 
 _log = logging.getLogger(__name__)
+
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 
 class SimulatedFailure(RuntimeError):
@@ -135,6 +143,30 @@ def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int
     return {b for b, _ in _committed(spark, out_dir, run_id)}
 
 
+def _write_lineage_file(spark: SparkSession, target: str, table: pa.Table) -> None:
+    """Commit one lineage parquet file into the ``target`` dir with no Spark
+    job: encode on the driver, write through the target's Hadoop
+    ``FileSystem`` (so ``hdfs://`` and ``s3a://`` targets work) under a
+    dot-prefixed name, then rename it to ``part-<uuid>.parquet``. Spark's
+    reader skips dot-prefixed files, so a crash before the rename leaves no
+    committed row."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    root = Path(target)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = Path(root, f".{name}")
+    out = fs.create(tmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, Path(root, name)):
+        fs.delete(tmp, False)
+        raise OSError(f"could not rename lineage file {tmp} to {name} in {target}")
+
+
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     from .iceberg import _is_table_ident
 
@@ -174,11 +206,19 @@ def run_extract_job(
     job falls back to ONE full scan whose output is persisted
     (MEMORY_AND_DISK) and sliced per group — right locally, but at 100 TB
     the extracted output is still O(corpus-text) and can exceed executor
-    storage, which is exactly why the pruned path exists.
+    storage, which is exactly why the pruned path exists. The fallback cache
+    is clustered by bucket (one hash exchange after extraction), so each
+    bucket is one data file; the trade-off is that one task writes each
+    bucket, so a group has at most as many writer tasks as it has buckets.
+    The pruned Iceberg path remains the path for large inputs.
 
-    Per commit group: one data write, then one single-file lineage append
+    Per commit group: one data write, then one single-file lineage commit
     built on the driver from ``_bucket_stats`` — taken once by the pass that
-    fills the fallback cache, or from each persisted group when pruned.
+    fills the fallback cache, or from each persisted group when pruned. A
+    lineage path gets that file from the driver through the Hadoop
+    ``FileSystem`` (no Spark job, ``_write_lineage_file``); an Iceberg
+    lineage table gets a ``saveAsTable`` append. ``wall_ms`` is the group's
+    data-write time.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
 
@@ -268,11 +308,19 @@ def run_extract_job(
         docs_b = docs.withColumn("_bucket", _bucket_col(n_buckets))
         if len(todo) < n_buckets:  # resume: only uncommitted buckets
             docs_b = docs_b.filter(F.col("_bucket").isin(todo))
-        out_all = extract(
-            docs_b.drop("_bucket"),
-            num_partitions=num_partitions,
-            metrics=metrics,
-        ).withColumn("bucket", _bucket_col(n_buckets))
+        # cluster the cache by bucket: extraction runs at the input's
+        # parallelism before the exchange, and each bucket then sits in ONE
+        # cache partition, so a group writes one file per bucket instead of
+        # one per cache task per bucket
+        out_all = (
+            extract(
+                docs_b.drop("_bucket"),
+                num_partitions=num_partitions,
+                metrics=metrics,
+            )
+            .withColumn("bucket", _bucket_col(n_buckets))
+            .repartition(spark.sparkContext.defaultParallelism, "bucket")
+        )
         out_all.persist(StorageLevel.MEMORY_AND_DISK)
         # materialize the cache BEFORE the timed loop — otherwise the first
         # group's wall_ms absorbs the whole job's extraction cost and
@@ -306,27 +354,39 @@ def run_extract_job(
             wall_ms = (time.perf_counter() - t0) * 1000.0
             if pruned:
                 stats = _bucket_stats(part)
-            # a row per bucket, zeros if empty (it still must be "committed");
-            # pyarrow is the cheap createDataFrame input, Arrow conf on or off
+            # a row per bucket, zeros if empty (it still must be "committed")
             cols = ("run_id", "bucket", "n_pages", "n_ok", "n_blocks", "wall_ms")
             rows = [
                 dict(zip(cols, (run_id, b, *stats.get(b, (0, 0, 0)), wall_ms)))
                 for b in chunk
             ]
-            lineage = (
-                spark.createDataFrame(
-                    pa.Table.from_pylist(rows),
-                    "run_id string, bucket int, n_pages long, n_ok long, n_blocks long, wall_ms double",
-                )
-                .coalesce(1)
-                .withColumn("committed_at", F.current_timestamp())
-                .withColumn("transform", F.lit(transform))
-            )
             t = _child_target(out_dir, "_lineage")
-            if _is_table_ident(t):  # Iceberg: append creates-or-appends
-                lineage.write.mode("append").saveAsTable(t)
+            if _is_table_ident(t):
+                # Iceberg: append creates-or-appends. This frame fixes the
+                # column nullability the lineage table is created with, so
+                # later appends must keep building it the same way; pyarrow
+                # is the cheap createDataFrame input, Arrow conf on or off.
+                (
+                    spark.createDataFrame(
+                        pa.Table.from_pylist(rows),
+                        "run_id string, bucket int, n_pages long, n_ok long, n_blocks long, wall_ms double",
+                    )
+                    .coalesce(1)
+                    .withColumn("committed_at", F.current_timestamp())
+                    .withColumn("transform", F.lit(transform))
+                    .write.mode("append")
+                    .saveAsTable(t)
+                )
             else:
-                lineage.write.mode("append").parquet(t)
+                now = datetime.now(timezone.utc)
+                _write_lineage_file(
+                    spark,
+                    t,
+                    pa.Table.from_pylist(
+                        [{**r, "committed_at": now, "transform": transform} for r in rows],
+                        schema=_LINEAGE_ARROW,
+                    ),
+                )
             if group_cache is not None:
                 group_cache.unpersist()
                 group_cache = None

@@ -11,7 +11,7 @@ JVMs at once: the same seed on both refs, the order alternating from pair to
 pair. The script fails when a leg is not ``correct`` or when the two refs'
 row digests differ for a seed. For each end-to-end metric of BENCHMARK.json
 it prints the per-pair values, B's wins, the median of the per-pair B/A
-ratios and ref A's IQR over its median.
+ratios, ref A's IQR over its median, and whether B may claim a gain.
 """
 
 from __future__ import annotations
@@ -30,17 +30,22 @@ import tempfile
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 
 
-def pair_summary(a: list[float], b: list[float], better: str) -> dict[str, float]:
+def pair_summary(a: list[float], b: list[float], better: str) -> dict:
     """B's wins (ties count for neither side), the median of per-pair B/A
-    ratios and A's interquartile range over A's median."""
+    ratios, A's interquartile range over A's median, and ``gain``: whether
+    B may claim a gain — it wins at least nine tenths of the pairs and its
+    median is better than A's by more than A's interquartile range."""
     wins = sum((y > x) if better == "higher" else (y < x) for x, y in zip(a, b))
     q1, _, q3 = (
         statistics.quantiles(a, n=4, method="inclusive") if len(a) > 1 else a * 3
     )
+    med_a, med_b = statistics.median(a), statistics.median(b)
+    lead = med_b - med_a if better == "higher" else med_a - med_b
     return {
         "wins": wins,
         "median_ratio": statistics.median(y / x for x, y in zip(a, b)),
-        "a_iqr_over_median": (q3 - q1) / statistics.median(a),
+        "a_iqr_over_median": (q3 - q1) / med_a,
+        "gain": 10 * wins >= 9 * len(a) and lead > q3 - q1,
     }
 
 
@@ -128,6 +133,8 @@ def main(argv: list[str]) -> int:
         print(f"  median A {statistics.median(a):.4g}  B {statistics.median(b):.4g}  "
               f"B wins {s['wins']}/{len(a)}  median B/A {s['median_ratio']:.3f}  "
               f"A IQR/median {s['a_iqr_over_median']:.3f}{spread}")
+        print(f"  gain: {'yes' if s['gain'] else 'no'} (B wins >= 9/10 of pairs "
+              "and its median leads A's by more than A's IQR)")
     return 0
 
 

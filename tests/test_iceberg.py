@@ -64,7 +64,8 @@ def test_iceberg_roundtrip(spark, tmp_path):
     write_documents(docs, table, n_buckets=8)
     back = read_documents(spark, table)
     assert back.count() == 40
-    # partition pruning: a bucket-restricted read must scan < all files
+    # the write left a snapshot in the table's log; test_iceberg_pruned_group_scan
+    # pins that a bucket-restricted read prunes files
     assert snapshots(spark, table).count() >= 1
 
 

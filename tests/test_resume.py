@@ -108,8 +108,9 @@ def test_single_source_scan_per_job(spark, tmp_path_factory):
 
 
 def test_commit_loop_job_budget(spark, docs, tmp_path_factory):
-    # each commit group is one data write plus one lineage append; the
-    # materializing stats pass adds a few fixed jobs (3 under AQE)
+    # each commit group is one data write (the driver writes the lineage
+    # file without a Spark job); the materializing stats pass over the
+    # bucket-clustered cache adds a few fixed jobs (3 under AQE)
     sc = spark.sparkContext
     out = str(tmp_path_factory.mktemp("budget"))
     sc.setJobGroup("lineage-budget", "commit-loop job budget")
@@ -118,7 +119,21 @@ def test_commit_loop_job_budget(spark, docs, tmp_path_factory):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("lineage-budget")
-    assert len(jobs) <= 2 * GROUPS + 4, f"{len(jobs)} Spark jobs for {GROUPS} groups"
+    assert len(jobs) <= GROUPS + 4, f"{len(jobs)} Spark jobs for {GROUPS} groups"
+
+
+def test_one_data_file_per_bucket(spark, docs, tmp_path_factory):
+    # the fallback cache is clustered by bucket, so a group writes each
+    # bucket as one file, not one file per cache task per bucket
+    import pathlib
+
+    assert docs.rdd.getNumPartitions() > 1, "an unsplit input pins nothing"
+    out = str(tmp_path_factory.mktemp("files"))
+    run_extract_job(spark, docs, out, run_id="f", n_buckets=BUCKETS, n_groups=GROUPS)
+    dirs = list(pathlib.Path(out, "extracted").glob("bucket=*"))
+    assert len(dirs) > BUCKETS // 2
+    per_dir = {d.name: len(list(d.glob("*.parquet"))) for d in dirs}
+    assert max(per_dir.values()) == 1, per_dir
 
 
 @pytest.mark.parametrize("arrow", ["true", "false"])
@@ -157,6 +172,124 @@ def test_lineage_rows_match_output(spark, docs, tmp_path_factory, arrow):
     assert len({r.wall_ms for r in lin}) == GROUPS
     files = list(pathlib.Path(out, "_lineage").glob("*.parquet"))
     assert len(files) == GROUPS, "one lineage file per commit group"
+
+
+@pytest.fixture(scope="module")
+def killed_run(spark, docs, tmp_path_factory):
+    """A run killed after commit group 1 of 4: (out_dir, start, end), the
+    bounds in epoch microseconds."""
+    import time
+
+    out = str(tmp_path_factory.mktemp("killed"))
+    t0 = time.time()
+    with pytest.raises(SimulatedFailure):
+        run_extract_job(
+            spark, docs, out, run_id="k", n_buckets=BUCKETS,
+            n_groups=GROUPS, fail_after_group=1,
+        )
+    return out, int(t0 * 1e6), int(time.time() * 1e6) + 1
+
+
+def test_driver_written_lineage_reads_back(spark, killed_run):
+    import pathlib
+
+    from pyspark.sql import functions as F
+
+    from cpp_paddle_ocr_spark.schemas import LINEAGE_SCHEMA
+
+    out, start, end = killed_run
+    names = sorted(p.name for p in pathlib.Path(out, "_lineage").iterdir())
+    files = [n for n in names if n.endswith(".parquet")]
+    assert len(files) == 2 and all(n.startswith("part-") for n in files), names
+    lin = read_lineage(spark, out)
+    assert [(f.name, f.dataType) for f in lin.schema] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA
+    ]
+    rows = lin.withColumn("at_us", F.unix_micros("committed_at")).collect()
+    assert sorted(r.bucket for r in rows) == sorted(completed_buckets(spark, out, "k"))
+    assert len(rows) == 2 * BUCKETS // GROUPS
+    assert all(r.committed_at is not None and start <= r.at_us <= end for r in rows)
+    assert {r.transform for r in rows} == {"xxhash64"}
+
+
+def test_dot_prefixed_lineage_file_is_ignored(spark, killed_run, tmp_path):
+    # a crash between the write and the rename leaves a dot-prefixed file:
+    # neither a complete one (rows for every bucket) nor a truncated one
+    # may commit anything
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "out")
+    shutil.copytree(killed_run[0], out)
+    done = completed_buckets(spark, out, "k")
+    assert 0 < len(done) < BUCKETS
+    lin_dir = tmp_path / "out" / "_lineage"
+    src = next(lin_dir.glob("part-*.parquet"))
+    one = pq.read_table(src).slice(0, 1)
+    every = pa.concat_tables(
+        [one.set_column(1, "bucket", pa.array([b], pa.int32())) for b in range(BUCKETS)]
+    )
+    pq.write_table(every, lin_dir / ".part-complete.parquet")
+    data = src.read_bytes()
+    (lin_dir / ".part-torn.parquet").write_bytes(data[: len(data) // 2])
+    assert completed_buckets(spark, out, "k") == done
+
+
+def test_spark_written_lineage_file_still_resumes(spark, docs, killed_run, tmp_path):
+    # a lineage dir from before the driver writer holds Spark-written files
+    # (INT96 committed_at); a mixed dir must read and resume must skip
+    # the buckets those files commit
+    import shutil
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path / "out")
+    shutil.copytree(killed_run[0], out)
+    lin_dir = tmp_path / "out" / "_lineage"
+    old = next(lin_dir.glob("part-*.parquet"))
+    rows = pq.read_table(old).drop_columns(["committed_at", "transform"])
+    old.unlink()
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        (
+            spark.createDataFrame(
+                rows,
+                "run_id string, bucket int, n_pages long, n_ok long, n_blocks long, wall_ms double",
+            )
+            .coalesce(1)
+            .withColumn("committed_at", F.current_timestamp())
+            .withColumn("transform", F.lit("xxhash64"))
+            .write.mode("append")
+            .parquet(str(lin_dir))
+        )
+    finally:
+        spark.conf.set(key, prev)
+    kinds = {
+        pq.ParquetFile(p).schema.column(6).physical_type
+        for p in lin_dir.glob("part-*.parquet")
+    }
+    assert kinds == {"INT96", "INT64"}, "one legacy and one driver-written file"
+    done = completed_buckets(spark, out, "k")
+    assert set(rows.column("bucket").to_pylist()) <= done
+    assert len(done) == 2 * BUCKETS // GROUPS
+    committed_pages = sum(
+        r.n_pages for r in read_lineage(spark, out).filter("run_id = 'k'").collect()
+    )
+
+    m = make_metrics(spark)
+    run_extract_job(
+        spark, docs, out, run_id="k", n_buckets=BUCKETS, n_groups=GROUPS, metrics=m
+    )
+    assert m["n_pages"].value == N - committed_pages
+    lin = read_lineage(spark, out).filter("run_id = 'k'").collect()
+    assert sorted(r.bucket for r in lin) == list(range(BUCKETS))
+    urls = [r.url for r in read_extracted(spark, out).select("url").collect()]
+    assert len(urls) == len(set(urls)) == N
 
 
 # ---------------------------------------------------------------------------

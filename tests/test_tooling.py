@@ -85,5 +85,17 @@ def test_ab_pair_summary():
     assert s["median_ratio"] == pytest.approx(14.0 / 13.0)
     assert s["a_iqr_over_median"] == pytest.approx(2.0 / 11.0)
     assert ab.pair_summary(a, b, "lower")["wins"] == 1
+    assert not s["gain"]
     one = ab.pair_summary([4.0], [3.0], "lower")
     assert (one["wins"], one["median_ratio"], one["a_iqr_over_median"]) == (1, 0.75, 0.0)
+
+    # the gain rule: B wins >= 9 of 10 pairs AND its median leads A's by
+    # more than A's IQR (A: median 104.5, quartiles 102.25 and 106.75)
+    a = [100.0, 102.0, 104.0, 106.0, 108.0, 101.0, 103.0, 105.0, 107.0, 109.0]
+    up = [x + 8.0 for x in a[:9]] + [a[9] - 1.0]  # 9/10 wins, median +7
+    assert ab.pair_summary(a, up, "higher")["gain"]
+    assert not ab.pair_summary(a, up, "lower")["gain"]
+    near = [x + 4.0 for x in a]  # 10/10 wins, but +4 is inside A's IQR
+    s = ab.pair_summary(a, near, "higher")
+    assert s["wins"] == 10 and not s["gain"]
+    assert not ab.pair_summary(a, up[:8] + a[8:], "higher")["gain"]  # 8/10 wins
