@@ -120,9 +120,23 @@ def ensure_fixture(spark, n_docs: int) -> str:
     return str(path)
 
 
-def bench_extract(
-    spark, fixture_path: str, n_docs: int
-) -> tuple[float, int, list[float]]:
+def extract_pass(docs, out_dir: str) -> tuple[float, int]:
+    """The one timed extraction pass every bench script runs: ``extract``
+    over ``docs`` written as parquet into a fresh ``out_dir``. Returns the
+    write's seconds and the rows it wrote (counted after the timing).
+
+    No repartition: extraction is a pure map over the scan — shuffling raw
+    html measured ~2x slower in executor-process mode (BENCH/BASELINE.md);
+    salted repartition stays available for skew.
+    """
+    shutil.rmtree(out_dir, ignore_errors=True)
+    t0 = time.perf_counter()
+    extract(docs).write.mode("overwrite").parquet(out_dir)
+    dt = time.perf_counter() - t0
+    return dt, docs.sparkSession.read.parquet(out_dir).count()
+
+
+def bench_extract(spark, fixture_path: str) -> tuple[float, int, list[float]]:
     """Headline leg: best of 2 passes (first pass doubles as the warmup).
 
     This host's per-core capacity drifts 2x+ on minute scales under noisy
@@ -134,19 +148,9 @@ def bench_extract(
     """
     out_dir = str(ROOT / ".benchdata" / "out")
     docs = spark.read.parquet(fixture_path)
-    passes: list[float] = []
-    n_out = 0
-    for _ in range(2):
-        shutil.rmtree(out_dir, ignore_errors=True)
-        t0 = time.perf_counter()
-        # no repartition: extraction is a pure map over the scan — shuffling
-        # raw html measured ~2x slower in executor-process mode
-        # (BENCH/BASELINE.md); salted repartition stays available for skew
-        extract(docs).write.mode("overwrite").parquet(out_dir)
-        passes.append(time.perf_counter() - t0)
-        if n_out == 0:
-            n_out = spark.read.parquet(out_dir).count()
-    return min(passes), n_out, [round(p, 3) for p in passes]
+    passes = [extract_pass(docs, out_dir) for _ in range(2)]
+    secs = [dt for dt, _ in passes]
+    return min(secs), passes[0][1], [round(dt, 3) for dt in secs]
 
 
 def main() -> None:
@@ -159,7 +163,7 @@ def main() -> None:
     fixture = ensure_fixture(spark, n_docs)
     times: dict[str, float] = {}
 
-    ext_sec, n_out, ext_passes = bench_extract(spark, fixture, n_docs)
+    ext_sec, n_out, ext_passes = bench_extract(spark, fixture)
     times["extract_pipeline"] = round(ext_sec, 3)
     docs_per_sec = n_out / ext_sec
 

@@ -32,7 +32,6 @@ from .classify import classify_spans
 from .decode import recognize_spans
 from .detect import Span, detect_page
 from .html_parse import parse_blocks
-from .order import sort_spans
 
 OUTPUT_COLUMNS = [
     "url",

@@ -111,50 +111,48 @@ def _child_target(out_dir: str, name: str) -> str:
     return f"{out_dir}/{name}"
 
 
-_NOT_FOUND_TOKENS = (
-    "PATH_NOT_FOUND",
-    "Path does not exist",
-    "TABLE_OR_VIEW_NOT_FOUND",
-    "cannot be found",
-    "UnresolvedRelation",
-)
+def _hadoop_path(spark: SparkSession, target: str):
+    """``(FileSystem, Path)`` of a path target, resolved through Hadoop so
+    ``hdfs://`` and ``s3a://`` targets work."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(target)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
 
 def _committed(
     spark: SparkSession, out_dir: str, run_id: str
 ) -> set[tuple[int, str | None]]:
     """``(bucket, transform)`` pairs committed for ``run_id``, transform None
-    on pre-round-3 lineage. Empty ONLY when the lineage sink is missing: a
-    transient read failure raises instead of silently restarting from zero,
-    which would re-extract committed buckets and bypass the transform guard."""
-    try:
-        lin = read_lineage(spark, out_dir).filter(F.col("run_id") == run_id)
-        if "transform" not in lin.columns:  # pre-round-3 lineage table
-            lin = lin.withColumn("transform", F.lit(None).cast("string"))
-        rows = lin.select("bucket", "transform").distinct().collect()
-    except Exception as e:
-        if not any(tok in str(e) for tok in _NOT_FOUND_TOKENS):
-            raise
-        return set()
+    on pre-round-3 lineage. Empty ONLY when the lineage sink does not exist:
+    any failure reading an existing sink raises instead of silently
+    restarting from zero, which would re-extract committed buckets and
+    bypass the transform guard."""
+    from .iceberg import _is_table_ident
+
+    t = _child_target(out_dir, "_lineage")
+    if _is_table_ident(t):
+        if not spark.catalog.tableExists(t):
+            return set()
+    else:
+        fs, path = _hadoop_path(spark, t)
+        if not fs.exists(path):
+            return set()
+    lin = read_lineage(spark, out_dir).filter(F.col("run_id") == run_id)
+    if "transform" not in lin.columns:  # pre-round-3 lineage table
+        lin = lin.withColumn("transform", F.lit(None).cast("string"))
+    rows = lin.select("bucket", "transform").distinct().collect()
     return {(r.bucket, r.transform) for r in rows}
-
-
-def completed_buckets(spark: SparkSession, out_dir: str, run_id: str) -> set[int]:
-    return {b for b, _ in _committed(spark, out_dir, run_id)}
 
 
 def _write_lineage_file(spark: SparkSession, target: str, table: pa.Table) -> None:
     """Commit one lineage parquet file into the ``target`` dir with no Spark
     job: encode on the driver, write through the target's Hadoop
-    ``FileSystem`` (so ``hdfs://`` and ``s3a://`` targets work) under a
-    dot-prefixed name, then rename it to ``part-<uuid>.parquet``. Spark's
-    reader skips dot-prefixed files, so a crash before the rename leaves no
-    committed row."""
+    ``FileSystem`` under a dot-prefixed name, then rename it to
+    ``part-<uuid>.parquet``. Spark's reader skips dot-prefixed files, so a
+    crash before the rename leaves no committed row."""
     buf = pa.BufferOutputStream()
     pq.write_table(table, buf)
+    fs, root = _hadoop_path(spark, target)
     Path = spark._jvm.org.apache.hadoop.fs.Path
-    root = Path(target)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     name = f"part-{uuid.uuid4().hex}.parquet"
     tmp = Path(root, f".{name}")
     out = fs.create(tmp, False)

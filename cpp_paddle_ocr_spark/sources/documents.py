@@ -13,10 +13,10 @@ driver-side loop.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 from ..fixtures import layout_page, media_item, page
 from ..iceberg import _is_table_ident
@@ -42,6 +42,25 @@ def _gen_partitions(spark: SparkSession, n: int) -> int:
     return min(4 * dp, max(dp, n // 1000))
 
 
+def _generate(
+    spark: SparkSession,
+    n: int,
+    row_fn: Callable[[int], dict],
+    schema: T.StructType,
+    num_partitions: int | None,
+) -> DataFrame:
+    """``n`` rows ``row_fn(id)`` of ``schema``, generated in parallel over
+    ``spark.range`` — every fixture row is a pure function of its id."""
+    columns = [f.name for f in schema.fields]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame([row_fn(int(i)) for i in pdf["id"]], columns=columns)
+
+    rng = spark.range(0, n, 1, num_partitions or _gen_partitions(spark, n))
+    return rng.mapInPandas(gen, schema)
+
+
 def generate_documents(
     spark: SparkSession,
     n: int,
@@ -49,16 +68,9 @@ def generate_documents(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic documents table of ``n`` rows, generated in parallel."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [page(int(i), oversize_max) for i in pdf["id"]],
-                columns=[f.name for f in DOCUMENTS_SCHEMA.fields],
-            )
-
-    rng = spark.range(0, n, 1, num_partitions or _gen_partitions(spark, n))
-    return rng.mapInPandas(gen, DOCUMENTS_SCHEMA)
+    return _generate(
+        spark, n, lambda i: page(i, oversize_max), DOCUMENTS_SCHEMA, num_partitions
+    )
 
 
 def generate_media(
@@ -66,19 +78,17 @@ def generate_media(
     n: int,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Deterministic media table (url, media binary) — same distributed
-    generation shape as ``generate_documents``; rows are pure functions of
-    the row id (``fixtures.media_item``)."""
+    """Deterministic media table (url, media binary) — rows are pure
+    functions of the row id (``fixtures.media_item``)."""
+    return _generate(spark, n, media_item, MEDIA_SCHEMA, num_partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [media_item(int(i)) for i in pdf["id"]],
-                columns=[f.name for f in MEDIA_SCHEMA.fields],
-            )
 
-    rng = spark.range(0, n, 1, num_partitions or _gen_partitions(spark, n))
-    return rng.mapInPandas(gen, MEDIA_SCHEMA)
+_LAYOUT_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("html", T.BinaryType(), True),
+    ]
+)
 
 
 def generate_layout_docs(
@@ -88,24 +98,7 @@ def generate_layout_docs(
 ) -> DataFrame:
     """Deterministic layout-fixture table (url, html binary) for the T1-T3
     structure stage — pure function of the row id (``fixtures.layout_page``)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("html", T.BinaryType(), True),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [layout_page(int(i)) for i in pdf["id"]],
-                columns=["url", "html"],
-            )
-
-    rng = spark.range(0, n, 1, num_partitions or _gen_partitions(spark, n))
-    return rng.mapInPandas(gen, schema)
+    return _generate(spark, n, layout_page, _LAYOUT_SCHEMA, num_partitions)
 
 
 def write_documents_parquet(

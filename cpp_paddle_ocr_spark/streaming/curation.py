@@ -54,7 +54,7 @@ from ..operators.text_analysis import (
     quality_cols,
     repetition_metrics_udf,
 )
-from .stateful import capped_admission_stream, first_seen_stream
+from .stateful import capped_admission_stream
 
 CURATED_SCHEMA = T.StructType(
     [
@@ -98,8 +98,8 @@ def curate_stream(
     ``text IS NOT NULL`` filter enforces the non-null ``fp`` the schema
     declares (round-4 advice: success=true does not by itself guarantee
     non-null text). ``ttl_ms`` bounds the dedup state store exactly as in
-    ``stateful.dedup_stream`` (both are instantiations of
-    ``first_seen_stream`` — one state machine, two keys).
+    ``stateful.dedup_stream`` (both are ``cap=1`` instantiations of
+    ``capped_admission_stream`` — one state machine, two keys).
     ``redact_pii=True`` replaces emails/IPv4s/phones in the gated text
     with placeholder tokens BEFORE fingerprinting — the exact
     ``governance.pii_scan_redact`` patterns and placeholders, as a
@@ -210,11 +210,12 @@ def curate_stream(
         gated = gated.join(
             corpus_fps.select("fp").distinct(), "fp", "left_anti"
         )
-    return first_seen_stream(
+    return capped_admission_stream(
         gated,
         key_col="fp",
         out_cols=_OUT_COLS,
         out_schema=CURATED_SCHEMA,
+        cap=1,
         ttl_ms=ttl_ms,
     )
 

@@ -109,37 +109,16 @@ def capped_admission_stream(
     )
 
 
-def first_seen_stream(
-    df: DataFrame,
-    key_col: str,
-    out_cols: list[str],
-    out_schema: T.StructType,
-    ttl_ms: int | None = None,
-    extra_cols: dict[str, object] | None = None,
-) -> DataFrame:
-    """Cross-batch first-seen filter: one output row per distinct
-    ``key_col`` value across ALL micro-batches — the ``cap=1`` admission
-    (see ``capped_admission_stream`` for the state/TTL semantics)."""
-    return capped_admission_stream(
-        df,
-        key_col=key_col,
-        out_cols=out_cols,
-        out_schema=out_schema,
-        cap=1,
-        ttl_ms=ttl_ms,
-        extra_cols=extra_cols,
-    )
-
-
 def dedup_stream(stream_df: DataFrame, ttl_ms: int | None = None) -> DataFrame:
     """First-seen filter over a streaming (url, html, ...) DataFrame —
-    the url-keyed instantiation of ``first_seen_stream`` (see there for
+    the url-keyed ``cap=1`` admission (see ``capped_admission_stream`` for
     the state/TTL semantics)."""
-    return first_seen_stream(
+    return capped_admission_stream(
         stream_df.select("url", "html"),
         key_col="url",
         out_cols=["url", "html", "n_seen_before"],
         out_schema=DEDUP_OUT_SCHEMA,
+        cap=1,
         ttl_ms=ttl_ms,
         extra_cols={"n_seen_before": 0},
     )

@@ -1,40 +1,44 @@
 """N-vs-4N scaling-efficiency harness (north rule; target ≥0.8).
 
-No real cluster exists in this sandbox, so per the driver instruction the
-two-cluster-size criterion is evidenced by running the IDENTICAL extraction
-job at two parallelism levels on the same input and reporting throughput at
-both plus ``efficiency = (docs/s at 4N) / (4 × docs/s at N)``.
+No real cluster exists in this sandbox, so the two-cluster-size criterion is
+evidenced by running the IDENTICAL extraction job at two parallelism levels
+on the same input and reporting throughput at both plus
+``efficiency = (docs/s at 4N) / (4 × docs/s at N)``.
 
 Methodology (each point matters; BENCH/BASELINE.md has the full analysis):
 
-* **Two pairings, both reported.**
-  - PRIMARY ``local[2] → local[8]``: 4× the parallelism in the regime where
-    this host itself can scale. The host is a shared-tenant VM whose
-    aggregate 32-core capacity fluctuates with invisible neighbors; a
-    pure-compute control (spin loop, no memory traffic) scales 8→32 at only
-    ~0.6-0.8 depending on the minute, so no software could evidence ≥0.8
-    there reliably.
-  - SECONDARY ``local[8] → local[32]``: reported transparently with the
-    same protocol plus the spin-loop hardware control measured in the same
-    minutes, so the reader can separate engine scaling from host ceiling.
+* **Two modes, one pairing table (``RUNS``).**
+  - Thread mode → BENCH/scaling.json. PRIMARY ``local[2] → local[8]``: 4×
+    the parallelism in the regime where this host itself can scale.
+    SECONDARY ``local[8] → local[32]``, reported with the spin-loop
+    hardware control measured in the same minutes: the host is a
+    shared-tenant VM whose pure-compute rate scales 8→32 at only ~0.6-0.8
+    depending on the minute, so the reader can separate engine scaling
+    from host ceiling.
+  - Executor mode → BENCH/scaling_executors.json. ``local-cluster[n, c,
+    mem]`` runs real executor PROCESSES (own heaps, GC, shuffle servers
+    and Python daemons), the closest available proxy to "N and 4N
+    executors" on one box. The engine ships to them as engine.zip via
+    ``addPyFile``, the spark-submit --py-files shape. PRIMARY 2 → 8
+    executors × 1 core; SECONDARY 2 → 8 executors × 4 cores.
 * **CPU affinity**: each leg runs in its own subprocess pinned with
   ``taskset -c`` so "N cores" means N cores.
-* **Fresh JVM per leg + FULL warmup pass + best-of-2 timed passes.**
+* **Fresh JVM per leg + FULL warmup pass + best-of-2 timed passes**
+  (``bench.extract_pass``).
 * **Interleaved pairs**: the host drifts on minute scales, so legs are run
-  (small, big) × PAIRS back-to-back and efficiency is the MEDIAN of the
+  (small, big) × pairs back-to-back and efficiency is the MEDIAN of the
   per-pair ratios — a slow minute hits both legs of a pair, not one.
-* **No shuffle**: extraction is a pure map over the scan (the salted
-  repartition is for skewed clusters; shuffling raw html measured ~2×
-  slower in executor mode).
+* **No shuffle**: extraction is a pure map over the scan (shuffling raw
+  html between executor JVMs measured ~2× slower end-to-end).
+* Each output file records the run it measured; earlier runs live in git.
 
-Writes BENCH/scaling.json.
+Usage: python scripts/bench_scaling.py   (``--leg MASTER`` runs one leg)
 """
 
 from __future__ import annotations
 
 import json
 import pathlib
-import shutil
 import subprocess
 import sys
 import time
@@ -44,11 +48,33 @@ sys.path.insert(0, str(ROOT))
 
 N_DOCS = 24_000
 OVERSIZE_MAX = 2_000_000
-N_SMALL = 2
-N_BIG = 8
-SECONDARY = (8, 32)
 PAIRS = 3
 FIXTURE = ROOT / ".benchdata" / f"docs_n{N_DOCS}_o{OVERSIZE_MAX}_f256"
+
+#: one row per output file: (file, method, key of the secondary pairing,
+#: (primary, secondary) pairings as (master at N, master at 4N, pairs)).
+RUNS = (
+    (
+        "scaling.json",
+        "taskset-pinned local[N] legs, fresh JVM per leg, full warmup pass, "
+        "best-of-2 timed passes, (small,big) pairs interleaved, efficiency "
+        "= median of paired ratios; no-shuffle map-over-scan",
+        "secondary_8_to_32",
+        (("local[2]", "local[8]", PAIRS), ("local[8]", "local[32]", 1)),
+    ),
+    (
+        "scaling_executors.json",
+        "local-cluster executor processes shipped engine.zip via addPyFile "
+        "(--py-files shape), taskset-pinned, fresh JVMs, full warmup, "
+        "best-of-2 per leg, interleaved (small,big) pairs, efficiency = "
+        "median of paired ratios; no-shuffle map-over-scan",
+        "secondary_4cores_per_exec",
+        (
+            ("local-cluster[2,1,5120]", "local-cluster[8,1,5120]", PAIRS),
+            ("local-cluster[2,4,5120]", "local-cluster[8,4,5120]", 1),
+        ),
+    ),
+)
 
 SCAN_CONF = {
     "spark.ui.enabled": "false",
@@ -60,6 +86,18 @@ SCAN_CONF = {
     # hundreds of MB per in-flight task at high core counts
     "spark.sql.parquet.columnarReaderBatchSize": "32",
 }
+
+
+def _shape(master: str) -> tuple[int | None, int]:
+    """``(executors, cores each)`` of a ``local-cluster[n, c, mem]``
+    master, ``(None, N)`` of a ``local[N]`` one."""
+    nums = [int(x) for x in master[master.index("[") + 1 : -1].split(",")]
+    return (nums[0], nums[1]) if len(nums) == 3 else (None, nums[0])
+
+
+def _cores(master: str) -> int:
+    executors, cores_each = _shape(master)
+    return (executors or 1) * cores_each
 
 
 def ensure_fixture() -> None:
@@ -76,32 +114,39 @@ def ensure_fixture() -> None:
     spark.stop()
 
 
-def leg(cores: int) -> None:
+def leg(master: str) -> None:
     """Timed run inside a taskset-pinned subprocess; prints docs/s."""
-    from cpp_paddle_ocr_spark.operators.extract import extract
+    from bench import extract_pass
     from cpp_paddle_ocr_spark.session import get_spark
 
+    executors, cores_each = _shape(master)
+    cores = _cores(master)
+    conf = dict(SCAN_CONF)
+    if executors:
+        conf["spark.executor.memory"] = "4g"
+        # each executor JVM sees the whole machine; bound its service
+        # threads to its share of the pin
+        conf["spark.executor.extraJavaOptions"] = (
+            "-XX:+UseParallelGC "
+            f"-XX:ParallelGCThreads={max(2, cores_each)} "
+            f"-XX:ActiveProcessorCount={cores_each}"
+        )
     spark = get_spark(
-        app_name=f"scaling-{cores}",
-        master=f"local[{cores}]",
+        app_name=f"scaling-{master}",
+        master=master,
         shuffle_partitions=cores,
-        extra_conf=SCAN_CONF,
+        extra_conf=conf,
     )
     spark.sparkContext.setLogLevel("ERROR")
+    if executors:
+        # rebuilt every leg: a stale zip silently ships an old kernel to
+        # the executors; same recipe as spark-submit users
+        subprocess.run(["sh", str(ROOT / "scripts" / "make_pyfiles.sh")], check=True)
+        spark.sparkContext.addPyFile(str(ROOT / "engine.zip"))
     docs = spark.read.parquet(str(FIXTURE))
-
-    def one(tag: str) -> float:
-        out = str(ROOT / ".benchdata" / f"scaling_out_{cores}_{tag}")
-        shutil.rmtree(out, ignore_errors=True)
-        t0 = time.perf_counter()
-        extract(docs).write.mode("overwrite").parquet(out)
-        dt = time.perf_counter() - t0
-        n = spark.read.parquet(out).count()
-        shutil.rmtree(out, ignore_errors=True)
-        return n / dt
-
-    one("warm")  # FULL warmup: C2 + python worker spawn/imports + page cache
-    best = max(one("t1"), one("t2"))
+    out = str(ROOT / ".benchdata" / f"scaling_out_{cores}")
+    extract_pass(docs, out)  # FULL warmup: C2 + python worker spawn/imports + page cache
+    best = max(n / dt for dt, n in (extract_pass(docs, out) for _ in range(2)))
     print(f"RATE {best:.2f}", flush=True)
     spark.stop()
 
@@ -127,11 +172,11 @@ def spin_control(cores: int) -> float:
     return round(sum(rates) / len(rates) / 1e6, 2)
 
 
-def run_leg(cores: int) -> float:
+def run_leg(master: str) -> float:
     cmd = [
-        "taskset", "-c", f"0-{cores - 1}",
+        "taskset", "-c", f"0-{_cores(master) - 1}",
         sys.executable, str(pathlib.Path(__file__).resolve()),
-        "--leg", str(cores),
+        "--leg", master,
     ]
     out = subprocess.run(cmd, capture_output=True, text=True, check=True)
     for line in out.stdout.splitlines():
@@ -140,73 +185,64 @@ def run_leg(cores: int) -> float:
     raise RuntimeError(f"no RATE in leg output: {out.stdout[-500:]} {out.stderr[-500:]}")
 
 
-def paired(n_small: int, n_big: int, pairs: int) -> dict:
+def paired(small: str, big: str, pairs: int) -> dict:
     ratios, raw = [], []
     for _ in range(pairs):
-        rs = run_leg(n_small)
-        rb = run_leg(n_big)
+        rs = run_leg(small)
+        rb = run_leg(big)
         raw.append({"small": round(rs, 2), "big": round(rb, 2)})
-        ratios.append((rb / rs) / (n_big / n_small))
-        print(f"PAIR {n_small}->{n_big}: {rs:.1f} -> {rb:.1f} "
+        ratios.append((rb / rs) / (_cores(big) / _cores(small)))
+        print(f"PAIR {small}->{big}: {rs:.1f} -> {rb:.1f} "
               f"eff {ratios[-1]:.3f}", flush=True)
     ratios.sort()
+    (exec_small, cores_each), (exec_big, _) = _shape(small), _shape(big)
+    if exec_small is None:
+        sizes = {"cores_small": _cores(small), "cores_big": _cores(big)}
+    else:
+        sizes = {
+            "executors_small": exec_small,
+            "executors_big": exec_big,
+            "cores_per_executor": cores_each,
+        }
     return {
-        "cores_small": n_small,
-        "cores_big": n_big,
+        **sizes,
         "pairs": raw,
-        "efficiencies": [round(r, 3) for r in sorted(ratios)],
+        "efficiencies": [round(r, 3) for r in ratios],
         "scaling_efficiency": round(ratios[len(ratios) // 2], 3),
     }
 
 
+def write_result(out_file: pathlib.Path, result: dict) -> None:
+    """Record the run measured, whatever an earlier file held."""
+    out_file.parent.mkdir(exist_ok=True)
+    out_file.write_text(json.dumps(result, indent=2))
+    print(json.dumps(result))
+
+
 def main() -> None:
     if "--leg" in sys.argv:
-        leg(int(sys.argv[sys.argv.index("--leg") + 1]))
+        leg(sys.argv[sys.argv.index("--leg") + 1])
         return
     ensure_fixture()
 
-    primary = paired(N_SMALL, N_BIG, PAIRS)
-    secondary = paired(*SECONDARY, 1)
-    control = {
-        f"spin_per_core_Mips_{c}": spin_control(c) for c in (N_SMALL, N_BIG, 32)
-    }
-
-    result = {
-        "n_docs": N_DOCS,
-        "method": "taskset-pinned local[N] legs, fresh JVM per leg, full "
-        "warmup pass, best-of-2 timed passes, (small,big) pairs interleaved, "
-        "efficiency = median of paired ratios; no-shuffle map-over-scan",
-        **primary,
-        "docs_per_sec_small": primary["pairs"][-1]["small"],
-        "docs_per_sec_big": primary["pairs"][-1]["big"],
-        "target": 0.8,
-        "pass": primary["scaling_efficiency"] >= 0.8,
-        "secondary_8_to_32": secondary,
-        "hardware_control": control,
-    }
-    bench_dir = ROOT / "BENCH"
-    bench_dir.mkdir(exist_ok=True)
-    out_file = bench_dir / "scaling.json"
-    best = result
-    if out_file.exists():
-        try:
-            prev = json.loads(out_file.read_text())
-            prev.pop("last_run", None)
-            if (
-                prev.get("cores_small") == N_SMALL
-                and prev.get("scaling_efficiency", 0)
-                > result["scaling_efficiency"]
-            ):
-                best = prev
-        except Exception:
-            pass
-    best = dict(best)
-    best["last_run"] = {
-        "scaling_efficiency": result["scaling_efficiency"],
-        "pairs": result["pairs"],
-    }
-    out_file.write_text(json.dumps(best, indent=2))
-    print(json.dumps(best))
+    for name, method, secondary_key, pairings in RUNS:
+        primary, secondary = (paired(*p) for p in pairings)
+        result = {
+            "n_docs": N_DOCS,
+            "method": method,
+            **primary,
+            "docs_per_sec_small": primary["pairs"][-1]["small"],
+            "docs_per_sec_big": primary["pairs"][-1]["big"],
+            "target": 0.8,
+            "pass": primary["scaling_efficiency"] >= 0.8,
+            secondary_key: secondary,
+        }
+        if _shape(pairings[0][0])[0] is None:  # thread mode: hardware control
+            cores = sorted({_cores(m) for p in pairings for m in p[:2]})
+            result["hardware_control"] = {
+                f"spin_per_core_Mips_{c}": spin_control(c) for c in cores
+            }
+        write_result(ROOT / "BENCH" / name, result)
 
 
 if __name__ == "__main__":

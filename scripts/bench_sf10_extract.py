@@ -16,45 +16,32 @@ from __future__ import annotations
 
 import json
 import pathlib
-import shutil
 import statistics
 import sys
-import time
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
-from cpp_paddle_ocr_spark.operators.extract import extract  # noqa: E402
+import bench  # noqa: E402
 from cpp_paddle_ocr_spark.session import get_spark  # noqa: E402
 
 N_SMALL = 200_000
 N_BIG = 2_000_000
 
 
-def _leg(spark, fixture: str) -> tuple[float, int]:
-    out = str(ROOT / ".benchdata" / "out_sf10")
-    shutil.rmtree(out, ignore_errors=True)
-    docs = spark.read.parquet(fixture)
-    t0 = time.perf_counter()
-    extract(docs).write.mode("overwrite").parquet(out)
-    dt = time.perf_counter() - t0
-    n = spark.read.parquet(out).count()
-    return dt, n
-
-
 def main() -> None:
     n_pairs = int(sys.argv[1]) if len(sys.argv) > 1 else 2
-    import bench as benchmod
 
     spark = get_spark(app_name="bench_sf10")
     spark.sparkContext.setLogLevel("ERROR")
-    fix_small = benchmod.ensure_fixture(spark, N_SMALL)
-    fix_big = benchmod.ensure_fixture(spark, N_BIG)
+    fix_small = bench.ensure_fixture(spark, N_SMALL)
+    fix_big = bench.ensure_fixture(spark, N_BIG)
 
+    out = str(ROOT / ".benchdata" / "out_sf10")
     pairs = []
     for i in range(n_pairs):
-        t_s, n_s = _leg(spark, fix_small)
-        t_b, n_b = _leg(spark, fix_big)
+        t_s, n_s = bench.extract_pass(spark.read.parquet(fix_small), out)
+        t_b, n_b = bench.extract_pass(spark.read.parquet(fix_big), out)
         pairs.append(
             {
                 "small_s": round(t_s, 2),

@@ -1,11 +1,11 @@
 """Paired sf0.1 ↔ sf1 scaling measurement → BENCH/sf1.json.
 
 One decade of measured input scaling (10x rows per table, gen_sf1.py) for
-every benched operator query plus the extract headline. Methodology per
-BENCH/BASELINE.md: this host's capacity drifts 2x+ on minute scales, so
-isolated per-sf numbers are meaningless — each query runs as interleaved
-(sf0.1, sf1) leg PAIRS within one session, and the statistic is the MEDIAN
-of per-pair time ratios. A ratio ≤ 10 means the decade costs no more than
+every ``bench.OPERATOR_LEAVES`` query plus the extract headline.
+Methodology per BENCH/BASELINE.md: this host's capacity drifts 2x+ on
+minute scales, so isolated per-sf numbers are meaningless — each query runs
+as interleaved (sf0.1, sf1) leg PAIRS within one session, and the statistic
+is the MEDIAN of per-pair time ratios. A ratio ≤ 10 means the decade costs no more than
 the data grew (sublinear/linear); the per-query scaling exponent is
 log10(ratio).
 
@@ -14,16 +14,16 @@ one JVM — within-session pairing controls JIT state and host drift better
 than fresh JVMs would control anything here, and it is the ratio we are
 after, not the absolute time (the absolute headline lives in bench.py).
 
-Usage: python scripts/bench_sf1_pairs.py   (requires .benchdata/sf1 from
-gen_sf1.py and the 20k/200k extract fixtures from prior bench.py runs —
-both are built automatically if absent)
+Usage: python scripts/bench_sf1_pairs.py [LEAF ...]   (requires
+.benchdata/sf1 from gen_sf1.py and the 20k/200k extract fixtures from prior
+bench.py runs — both are built automatically if absent). Leaf names run a
+subset of the queries, merged into sf1.json.
 """
 
 from __future__ import annotations
 
 import json
 import pathlib
-import shutil
 import statistics
 import sys
 import time
@@ -31,72 +31,12 @@ import time
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
-from cpp_paddle_ocr_spark.operators.extract import extract  # noqa: E402
+import bench  # noqa: E402
 from cpp_paddle_ocr_spark.session import get_spark  # noqa: E402
 from __spark_entry__ import queries  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.1"
 SF_BIG = str(ROOT / ".benchdata" / "sf1")
-
-#: pass query names as argv to run a subset (results merge into sf1.json).
-#: Each name resolves through ``__spark_entry__.queries()``, so every leg
-#: times exactly the function the driver checks against its oracle.
-QUERY_NAMES = (
-    "dedup_exact",
-    "dedup_simhash",
-    "dedup_minhash",
-    "dedup_lsh_pairs",
-    "dedup_spans",
-    "winnow_sketch",
-    "dedup_clusters",
-    "sim_cosine_topk",
-    "sim_lsh_ann",
-    "sim_ivf_ann",
-    "sim_knn_join",
-    "sim_semantic_clusters",
-    "lang_id",
-    "quality_score",
-    "token_count",
-    "fingerprint",
-    "corpus_keep",
-    "repetition_stats",
-    "chunk_documents",
-    "hash_sample",
-    "status_agg",
-    "overlap_iou",
-    "term_stats",
-    "vocab_topk",
-    "lm_score",
-    "tfidf_topterms",
-    "emb_quantize_report",
-    "sim_knn_multitable",
-    "domain_stats",
-    "domain_cap",
-    "decontaminate",
-    "pack_chunks",
-    "pii_redact",
-    "url_canonical",
-    "graph_pagerank",
-    "crawl_schedule",
-    "revisit_latest",
-    "quality_fit",
-    "quality_fit_predict",
-    "temperature_sample",
-    "dedup_increment",
-    "dedup_neardup_increment",
-    "corpus_stats",
-    # sf-dependent remainder of the bench surface (the fixed-fixture legs —
-    # staged extract, media meta, layout — have no input decade to measure)
-    "broadcast_join_agg",
-    "doc_order_sort",
-    "threshold_filter",
-    "topk_per_group",
-    "window_dedup",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_neardup",
-    "mix_weights",
-    "lm_filter",
-)
 
 N_PAIRS = 3
 N_EXTRACT_PAIRS = 2
@@ -108,34 +48,25 @@ def _run(fn, spark, sf_dir: str) -> float:
     return time.perf_counter() - t0
 
 
-def _extract_leg(spark, fixture: str) -> float:
-    out = str(ROOT / ".benchdata" / "out_pairs")
-    shutil.rmtree(out, ignore_errors=True)
-    docs = spark.read.parquet(fixture)
-    t0 = time.perf_counter()
-    extract(docs).write.mode("overwrite").parquet(out)
-    return time.perf_counter() - t0
-
-
 def main() -> None:
-    import bench as benchmod
-
     subset = set(sys.argv[1:])
-    unknown = subset - set(QUERY_NAMES)
+    unknown = subset - set(bench.OPERATOR_LEAVES)
     if unknown:
         # fail BEFORE get_spark/fixture work: a typo'd name would otherwise
         # burn minutes, measure nothing, and still rewrite sf1.json
         raise SystemExit(f"unknown query names: {sorted(unknown)}")
     entry_queries = queries()
     query_set = [
-        (n, entry_queries[n]) for n in QUERY_NAMES if not subset or n in subset
+        (n, entry_queries[n])
+        for n in bench.OPERATOR_LEAVES
+        if not subset or n in subset
     ]
 
     spark = get_spark(app_name="bench_sf1_pairs")
     spark.sparkContext.setLogLevel("ERROR")
 
-    fix_small = benchmod.ensure_fixture(spark, 20_000)
-    fix_big = benchmod.ensure_fixture(spark, 200_000)
+    fix_small = bench.ensure_fixture(spark, 20_000)
+    fix_big = bench.ensure_fixture(spark, 200_000)
     # all three markers: a partially generated dir (interrupted gen_sf1)
     # must be repaired, not trusted 45 minutes into the measurement loop
     if not all(
@@ -171,9 +102,10 @@ def main() -> None:
 
     if not subset:  # extract legs only in full runs (too costly per subset)
         pairs = []
+        out = str(ROOT / ".benchdata" / "out_pairs")
         for _ in range(N_EXTRACT_PAIRS):
-            t_small = _extract_leg(spark, fix_small)
-            t_big = _extract_leg(spark, fix_big)
+            t_small, _ = bench.extract_pass(spark.read.parquet(fix_small), out)
+            t_big, _ = bench.extract_pass(spark.read.parquet(fix_big), out)
             pairs.append((round(t_small, 3), round(t_big, 3)))
         ratios = [b / s for s, b in pairs]
         results["extract_pipeline"] = {

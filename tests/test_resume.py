@@ -11,7 +11,7 @@ import pytest
 
 from cpp_paddle_ocr_spark.lineage import (
     SimulatedFailure,
-    completed_buckets,
+    _committed,
     read_extracted,
     read_lineage,
     run_extract_job,
@@ -51,7 +51,7 @@ def test_kill_and_resume(spark, docs, tmp_path_factory):
             spark, docs, out_b, run_id="r1", n_buckets=BUCKETS,
             n_groups=GROUPS, fail_after_group=1,
         )
-    done = completed_buckets(spark, out_b, "r1")
+    done = {b for b, _ in _committed(spark, out_b, "r1")}
     assert 0 < len(done) < BUCKETS, "failure must land mid-job"
 
     # resume: only remaining buckets are processed
@@ -206,7 +206,7 @@ def test_driver_written_lineage_reads_back(spark, killed_run):
         (f.name, f.dataType) for f in LINEAGE_SCHEMA
     ]
     rows = lin.withColumn("at_us", F.unix_micros("committed_at")).collect()
-    assert sorted(r.bucket for r in rows) == sorted(completed_buckets(spark, out, "k"))
+    assert sorted(r.bucket for r in rows) == sorted(b for b, _ in _committed(spark, out, "k"))
     assert len(rows) == 2 * BUCKETS // GROUPS
     assert all(r.committed_at is not None and start <= r.at_us <= end for r in rows)
     assert {r.transform for r in rows} == {"xxhash64"}
@@ -223,7 +223,7 @@ def test_dot_prefixed_lineage_file_is_ignored(spark, killed_run, tmp_path):
 
     out = str(tmp_path / "out")
     shutil.copytree(killed_run[0], out)
-    done = completed_buckets(spark, out, "k")
+    done = {b for b, _ in _committed(spark, out, "k")}
     assert 0 < len(done) < BUCKETS
     lin_dir = tmp_path / "out" / "_lineage"
     src = next(lin_dir.glob("part-*.parquet"))
@@ -234,7 +234,29 @@ def test_dot_prefixed_lineage_file_is_ignored(spark, killed_run, tmp_path):
     pq.write_table(every, lin_dir / ".part-complete.parquet")
     data = src.read_bytes()
     (lin_dir / ".part-torn.parquet").write_bytes(data[: len(data) // 2])
-    assert completed_buckets(spark, out, "k") == done
+    assert {b for b, _ in _committed(spark, out, "k")} == done
+
+
+def test_missing_lineage_sink_is_empty(spark, tmp_path):
+    # a fresh out_dir has no lineage sink: nothing committed, no read tried
+    assert _committed(spark, str(tmp_path / "fresh"), "k") == set()
+    assert _committed(spark, str(tmp_path), "k") == set()
+
+
+def test_unreadable_lineage_file_raises(spark, docs, killed_run, tmp_path):
+    # a lineage sink that exists but cannot be read must stop the job, not
+    # restart it from zero over committed buckets
+    import shutil
+
+    out = str(tmp_path / "out")
+    shutil.copytree(killed_run[0], out)
+    (tmp_path / "out" / "_lineage" / "part-garbage.parquet").write_bytes(b"not parquet")
+    m = make_metrics(spark)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_extract_job(
+            spark, docs, out, run_id="k", n_buckets=BUCKETS, n_groups=GROUPS, metrics=m
+        )
+    assert m["n_pages"].value == 0
 
 
 def test_spark_written_lineage_file_still_resumes(spark, docs, killed_run, tmp_path):
@@ -274,7 +296,7 @@ def test_spark_written_lineage_file_still_resumes(spark, docs, killed_run, tmp_p
         for p in lin_dir.glob("part-*.parquet")
     }
     assert kinds == {"INT96", "INT64"}, "one legacy and one driver-written file"
-    done = completed_buckets(spark, out, "k")
+    done = {b for b, _ in _committed(spark, out, "k")}
     assert set(rows.column("bucket").to_pylist()) <= done
     assert len(done) == 2 * BUCKETS // GROUPS
     committed_pages = sum(

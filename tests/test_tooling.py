@@ -1,6 +1,7 @@
 """Tooling drift guard, no Spark session: every bench/job/script file
 compiles, its engine imports resolve, the bench leaf names are driver
-queries, and ``scripts/ab.py`` summarizes pairs correctly.
+queries, ``scripts/bench_scaling.py`` holds both scaling modes and writes
+the run it measured, and ``scripts/ab.py`` summarizes pairs correctly.
 
 The scripts run rarely and by hand, so a rename in the engine otherwise
 surfaces only as an ``ImportError``/``AttributeError`` minutes into a run.
@@ -59,10 +60,7 @@ def _tuple_constant(path: pathlib.Path, name: str) -> tuple[str, ...]:
     raise AssertionError(f"{name} not assigned at module level in {path.name}")
 
 
-@pytest.mark.parametrize(
-    "path, name",
-    [("bench.py", "OPERATOR_LEAVES"), ("scripts/bench_sf1_pairs.py", "QUERY_NAMES")],
-)
+@pytest.mark.parametrize("path, name", [("bench.py", "OPERATOR_LEAVES")])
 def test_bench_leaf_names_are_driver_queries(path, name):
     import __spark_entry__
 
@@ -72,10 +70,35 @@ def test_bench_leaf_names_are_driver_queries(path, name):
     assert not unknown, f"{path}: {name} names no driver query: {unknown}"
 
 
+def _load_script(name: str):
+    spec = importlib.util.spec_from_file_location(name, ROOT / "scripts" / f"{name}.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_scaling_pairings_and_writer(tmp_path):
+    import json
+
+    scaling = _load_script("bench_scaling")
+    files = {name: pairings for name, _, _, pairings in scaling.RUNS}
+    assert set(files) == {"scaling.json", "scaling_executors.json"}
+    masters = [m for pairings in files.values() for p in pairings for m in p[:2]]
+    assert {"local[2]", "local[8]", "local[32]"} <= set(masters)
+    assert sum(m.startswith("local-cluster[") for m in masters) == 4
+    for pairings in files.values():  # every pairing is N -> 4N cores
+        for small, big, _ in pairings:
+            assert scaling._cores(big) == 4 * scaling._cores(small)
+
+    # the writer records the run it measured, not a better earlier one
+    out = tmp_path / "scaling.json"
+    out.write_text(json.dumps({"cores_small": 2, "scaling_efficiency": 1.04}))
+    scaling.write_result(out, {"cores_small": 2, "scaling_efficiency": 0.92})
+    assert json.loads(out.read_text())["scaling_efficiency"] == 0.92
+
+
 def test_ab_pair_summary():
-    spec = importlib.util.spec_from_file_location("ab", ROOT / "scripts" / "ab.py")
-    ab = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(ab)
+    ab = _load_script("ab")
 
     a = [10.0, 12.0, 11.0, 13.0, 9.0]
     b = [11.0, 12.0, 10.0, 14.0, 10.0]
