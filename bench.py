@@ -17,6 +17,7 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import pathlib
@@ -120,6 +121,17 @@ def ensure_fixture(spark, n_docs: int) -> str:
     return str(path)
 
 
+@contextlib.contextmanager
+def labelled(sc, name: str):
+    """Give the Spark jobs the block runs the description ``name`` (the
+    leaf name, as the UI and the event log show it); cleared on exit."""
+    sc.setJobDescription(name)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(None)
+
+
 def extract_pass(docs, out_dir: str) -> tuple[float, int]:
     """The one timed extraction pass every bench script runs: ``extract``
     over ``docs`` written as parquet into a fresh ``out_dir``. Returns the
@@ -148,7 +160,8 @@ def bench_extract(spark, fixture_path: str) -> tuple[float, int, list[float]]:
     """
     out_dir = str(ROOT / ".benchdata" / "out")
     docs = spark.read.parquet(fixture_path)
-    passes = [extract_pass(docs, out_dir) for _ in range(2)]
+    with labelled(spark.sparkContext, "extract_pipeline"):
+        passes = [extract_pass(docs, out_dir) for _ in range(2)]
     secs = [dt for dt, _ in passes]
     return min(secs), passes[0][1], [round(dt, 3) for dt in secs]
 
@@ -187,9 +200,10 @@ def main() -> None:
         ("multimodal_meta", entry_queries["multimodal_meta"]),
     ]
     for name, fn in others:
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times[name] = round(time.perf_counter() - t0, 3)
+        with labelled(spark.sparkContext, name):
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            times[name] = round(time.perf_counter() - t0, 3)
 
     # layout/table stage (T1-T3) over its own fixture table, scaled with sf
     from cpp_paddle_ocr_spark.sources.documents import generate_layout_docs
@@ -218,9 +232,10 @@ def main() -> None:
         # composed flagship: cascade + tables + regions in ONE scan/pass
         ("extract_with_layout", layout.extract_with_layout),
     ]:
-        t0 = time.perf_counter()
-        op(ldocs).write.format("noop").mode("overwrite").save()
-        times[name] = round(time.perf_counter() - t0, 3)
+        with labelled(spark.sparkContext, name):
+            t0 = time.perf_counter()
+            op(ldocs).write.format("noop").mode("overwrite").save()
+            times[name] = round(time.perf_counter() - t0, 3)
 
     total = round(sum(times.values()), 3)
     print(

@@ -33,8 +33,8 @@ Why Iceberg at 100 TB (and what this module uses of it):
   Iceberg snapshot; a resume can diff against ``VERSION AS OF`` instead of a
   side lineage table;
 * **atomic overwrite** — ``overwritePartitions`` replaces a bucket's data
-  files in one metadata swap (the dynamic-partition-overwrite analog used by
-  the parquet fallback).
+  files in one metadata swap (the analog of the parquet fallback's
+  per-bucket delete-then-rename publish).
 """
 
 from __future__ import annotations

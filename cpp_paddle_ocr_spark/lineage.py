@@ -6,15 +6,21 @@ processing time — ``include/paddle_ocr/ocr_ipc_service.h:91-93``,
 
 * pages are assigned to ``n_buckets`` deterministic **lineage buckets** by
   ``pmod(xxhash64(url), n_buckets)`` — the unit of commit/retry;
-* buckets are processed in ``n_groups`` commit groups: the output is durably
-  written in one Spark job (dynamic partition overwrite on ``bucket``), then
-  one file with a lineage row per bucket is added to the lineage table — only
-  then is the group "committed". On a lineage path the driver writes that
-  file itself (temp name, then rename), so a group costs one Spark job; an
-  Iceberg lineage table takes a ``saveAsTable`` append;
+* buckets are processed in ``n_groups`` commit groups: the group's output
+  is published to ``extracted`` (partitioned on ``bucket``), then one file
+  with a lineage row per bucket is added to the lineage table — only then
+  is the group "committed". On the fallback path with a path target the job
+  writes every uncommitted bucket ONCE, in one Spark job, to
+  ``{out_dir}/_staging``; each group then publishes its buckets from the
+  driver (delete ``extracted/bucket=b``, rename ``_staging/bucket=b`` onto
+  it). Iceberg targets and the pruned path run one partition overwrite per
+  group instead. On a lineage path the driver writes the lineage file
+  itself (temp name, then rename); an Iceberg lineage table takes a
+  ``saveAsTable`` append;
 * on restart the job reads the run's committed buckets from the lineage
-  table (``_committed``) and processes only the others. Partial files from a crashed group sit in partition
-  dirs that get dynamically overwritten on retry, so retries are idempotent:
+  table (``_committed``) and processes only the others. A crashed group's
+  buckets sit in ``_staging`` (cleared by the next run's overwrite) or in
+  partition dirs that the retry replaces, so retries are idempotent:
   re-extraction of a bucket is byte-identical (core is deterministic) and
   replaces, never duplicates.
 
@@ -165,6 +171,22 @@ def _write_lineage_file(spark: SparkSession, target: str, table: pa.Table) -> No
         raise OSError(f"could not rename lineage file {tmp} to {name} in {target}")
 
 
+def _publish_buckets(spark: SparkSession, stage: str, target: str, buckets) -> None:
+    """Move each staged ``bucket=b`` dir of ``buckets`` onto ``target`` with
+    no Spark job: delete ``target/bucket=b``, then rename the staged dir onto
+    it — the delete-then-rename a dynamic partition overwrite runs at job
+    commit. A false return from ``rename`` raises ``OSError``."""
+    fs, src_root = _hadoop_path(spark, stage)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    dst_root = Path(target)
+    fs.mkdirs(dst_root)
+    for b in buckets:
+        src, dst = Path(src_root, f"bucket={b}"), Path(dst_root, f"bucket={b}")
+        fs.delete(dst, True)
+        if not fs.rename(src, dst):
+            raise OSError(f"could not rename staged {src} to {dst}")
+
+
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     from .iceberg import _is_table_ident
 
@@ -207,16 +229,30 @@ def run_extract_job(
     storage, which is exactly why the pruned path exists. The fallback cache
     is clustered by bucket (one hash exchange after extraction), so each
     bucket is one data file; the trade-off is that one task writes each
-    bucket, so a group has at most as many writer tasks as it has buckets.
+    bucket, so a write has at most as many writer tasks as it has buckets.
     The pruned Iceberg path remains the path for large inputs.
 
-    Per commit group: one data write, then one single-file lineage commit
-    built on the driver from ``_bucket_stats`` — taken once by the pass that
-    fills the fallback cache, or from each persisted group when pruned. A
-    lineage path gets that file from the driver through the Hadoop
+    Data writes: on the fallback path with a path target, after the stats
+    pass the cache is written ONCE, partitioned by ``bucket``, to
+    ``{out_dir}/_staging`` (a static overwrite, so whatever a crashed run
+    left there is cleared). Each commit group then publishes its buckets
+    from the driver through the Hadoop ``FileSystem``: delete
+    ``extracted/bucket=b``, rename ``_staging/bucket=b`` onto it. A job then
+    costs the same Spark jobs for any ``n_groups``; resume granularity is
+    still the group. A rename is a metadata move on HDFS and local disks but
+    a copy of the bucket's bytes on object stores (``s3a://``), so there
+    the publish costs as much as a write. The ``finally`` block deletes
+    ``_staging``, so the groups a failure leaves uncommitted are never
+    published. Iceberg table targets and the pruned path keep one
+    partition overwrite per group (``overwrite_result_partitions``).
+
+    Per commit group, after its data is published: one single-file lineage
+    commit built on the driver from ``_bucket_stats`` — taken once by the
+    pass that fills the fallback cache, or from each persisted group when
+    pruned. A lineage path gets that file from the driver through the Hadoop
     ``FileSystem`` (no Spark job, ``_write_lineage_file``); an Iceberg
     lineage table gets a ``saveAsTable`` append. ``wall_ms`` is the group's
-    data-write time.
+    publish time: its renames on the staged path, its data write otherwise.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
 
@@ -249,8 +285,10 @@ def run_extract_job(
         return run_id
 
     group_size = max(1, -(-len(todo) // n_groups))
+    extracted = _child_target(out_dir, "extracted")
 
     out_all = None
+    stage = None  # the fallback path's one data write, published per group
     if pruned:
         # the filter prunes files ONLY if it matches the table's physical
         # partition transform: bucket(n_buckets, url). A mismatched
@@ -331,24 +369,41 @@ def run_extract_job(
 
     group_cache = None
     try:
+        if out_all is not None and not _is_table_ident(out_dir):
+            # one data write for every group: a static overwrite (it clears
+            # what a crashed run left here), one dir per bucket with rows —
+            # exactly the buckets ``stats`` holds
+            stage = _child_target(out_dir, "_staging")
+            (
+                out_all.write.mode("overwrite")
+                .option("partitionOverwriteMode", "static")
+                .partitionBy("bucket")
+                .parquet(stage)
+            )
         for g in range(0, len(todo), group_size):
             chunk = todo[g : g + group_size]
             t0 = time.perf_counter()
-            part = group_output(chunk)
-            if pruned:
-                # the pruned group plan re-extracts from the source; it is
-                # consumed below by the write AND the stats aggregation —
-                # persist so the mapInPandas extraction runs ONCE per
-                # group, not twice. Unpersisted in the finally below so a
-                # failed group does not leak pinned executor storage.
-                part = part.persist(StorageLevel.MEMORY_AND_DISK)
-                group_cache = part
-            # Iceberg overwritePartitions when out_dir is a table identifier
-            # (atomic metadata swap, one snapshot per commit group); dynamic
-            # partition overwrite on the parquet path fallback
-            from .iceberg import overwrite_result_partitions
+            if stage is not None:
+                # a bucket without rows has no staged dir and keeps what
+                # ``extracted`` holds, as a dynamic overwrite would
+                _publish_buckets(spark, stage, extracted, [b for b in chunk if b in stats])
+            else:
+                part = group_output(chunk)
+                if pruned:
+                    # the pruned group plan re-extracts from the source; it
+                    # is consumed below by the write AND the stats
+                    # aggregation — persist so the mapInPandas extraction
+                    # runs ONCE per group, not twice. Unpersisted in the
+                    # finally below so a failed group does not leak pinned
+                    # executor storage.
+                    part = part.persist(StorageLevel.MEMORY_AND_DISK)
+                    group_cache = part
+                # Iceberg overwritePartitions when out_dir is a table
+                # identifier (atomic metadata swap, one snapshot per commit
+                # group); dynamic partition overwrite on a pruned path target
+                from .iceberg import overwrite_result_partitions
 
-            overwrite_result_partitions(part, _child_target(out_dir, "extracted"))
+                overwrite_result_partitions(part, extracted)
             wall_ms = (time.perf_counter() - t0) * 1000.0
             if pruned:
                 stats = _bucket_stats(part)
@@ -397,6 +452,9 @@ def run_extract_job(
             out_all.unpersist()
         if group_cache is not None:  # a failed group must not leak its cache
             group_cache.unpersist()
+        if stage is not None:  # uncommitted groups stay unpublished
+            fs, path = _hadoop_path(spark, stage)
+            fs.delete(path, True)
     return run_id
 
 

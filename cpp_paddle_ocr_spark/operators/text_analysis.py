@@ -580,6 +580,12 @@ def tfidf_topterms(df: DataFrame, k: int = TFIDF_K) -> DataFrame:
     the corpus once per branch (round-6 A/B at sf1: 0.49× from the one
     persist; MEMORY_AND_DISK, already smaller than the token stream it
     replaces recomputing).
+
+    The persisted per-doc count frame (``tf_d`` per (doc_id, tok)) stays
+    cached after the result is consumed: it is document-term-sized and
+    this function returns only the lazy result, so a long-lived session
+    owner unpersists it (``spark.catalog.clearCache()``) once the top
+    terms are written.
     """
     toks = df.filter(F.col("text").isNotNull()).select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("tok")

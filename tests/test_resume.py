@@ -108,18 +108,27 @@ def test_single_source_scan_per_job(spark, tmp_path_factory):
 
 
 def test_commit_loop_job_budget(spark, docs, tmp_path_factory):
-    # each commit group is one data write (the driver writes the lineage
-    # file without a Spark job); the materializing stats pass over the
-    # bucket-clustered cache adds a few fixed jobs (3 under AQE)
+    # the fallback path writes every bucket once and each commit group
+    # publishes from the driver (renames plus a lineage file, no Spark job),
+    # so the job count does not grow with the group count: the
+    # materializing stats pass over the bucket-clustered cache (3 jobs
+    # under AQE) plus the one data write
     sc = spark.sparkContext
-    out = str(tmp_path_factory.mktemp("budget"))
-    sc.setJobGroup("lineage-budget", "commit-loop job budget")
-    try:
-        run_extract_job(spark, docs, out, run_id="b", n_buckets=16, n_groups=GROUPS)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("lineage-budget")
-    assert len(jobs) <= GROUPS + 4, f"{len(jobs)} Spark jobs for {GROUPS} groups"
+    docs.count()  # fill the input cache outside the counted jobs
+    jobs = {}
+    for n_groups in (1, GROUPS):
+        out = str(tmp_path_factory.mktemp("budget"))
+        sc.setJobGroup(f"lineage-budget-{n_groups}", "commit-loop job budget")
+        try:
+            run_extract_job(
+                spark, docs, out, run_id="b", n_buckets=16, n_groups=n_groups
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n_groups] = len(
+            sc.statusTracker().getJobIdsForGroup(f"lineage-budget-{n_groups}")
+        )
+    assert jobs[1] == jobs[GROUPS] <= 5, f"Spark jobs per n_groups: {jobs}"
 
 
 def test_one_data_file_per_bucket(spark, docs, tmp_path_factory):
@@ -188,6 +197,70 @@ def killed_run(spark, docs, tmp_path_factory):
             n_groups=GROUPS, fail_after_group=1,
         )
     return out, int(t0 * 1e6), int(time.time() * 1e6) + 1
+
+
+def test_killed_run_publishes_only_committed_buckets(spark, killed_run):
+    # the groups after the failure stay in _staging, which the failed run
+    # deletes: the output holds exactly the committed buckets
+    import pathlib
+
+    out = killed_run[0]
+    done = {b for b, _ in _committed(spark, out, "k")}
+    got = {r.bucket for r in read_extracted(spark, out).select("bucket").distinct().collect()}
+    assert 0 < len(done) < BUCKETS
+    assert got == done
+    assert not pathlib.Path(out, "_staging").exists()
+
+
+def test_stale_staging_files_do_not_publish(spark, docs, killed_run, tmp_path):
+    # a crash that skipped the cleanup leaves files in _staging; the resumed
+    # run's staging write must clear them, whether their bucket is committed
+    # or still to do
+    import shutil
+
+    out = str(tmp_path / "out")
+    shutil.copytree(killed_run[0], out)
+    done = {b for b, _ in _committed(spark, out, "k")}
+    for b in (0, min(set(range(BUCKETS)) - done)):
+        stale = tmp_path / "out" / "_staging" / f"bucket={b}"
+        stale.mkdir(parents=True)
+        (stale / "part-x.parquet").write_bytes(b"not parquet")
+    run_extract_job(spark, docs, out, run_id="k", n_buckets=BUCKETS, n_groups=GROUPS)
+    clean = str(tmp_path / "clean")
+    run_extract_job(spark, docs, clean, run_id="c", n_buckets=BUCKETS, n_groups=GROUPS)
+    assert _snapshot(spark, out) == _snapshot(spark, clean)
+
+
+def test_failed_publish_rename_raises(spark, docs, tmp_path, monkeypatch):
+    # a FileSystem.rename that returns false must stop the job before the
+    # group commits, not publish a group with missing buckets
+    import pathlib
+
+    from cpp_paddle_ocr_spark import lineage
+
+    real = lineage._hadoop_path
+
+    class NoRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            return False
+
+    def no_rename(spark_, target):
+        fs, path = real(spark_, target)
+        return NoRename(fs), path
+
+    monkeypatch.setattr(lineage, "_hadoop_path", no_rename)
+    out = str(tmp_path / "out")
+    with pytest.raises(OSError, match="could not rename staged"):
+        run_extract_job(spark, docs, out, run_id="r", n_buckets=BUCKETS, n_groups=GROUPS)
+    monkeypatch.undo()
+    assert _committed(spark, out, "r") == set()
+    assert not pathlib.Path(out, "_staging").exists()
 
 
 def test_driver_written_lineage_reads_back(spark, killed_run):

@@ -122,3 +122,24 @@ def test_ab_pair_summary():
     s = ab.pair_summary(a, near, "higher")
     assert s["wins"] == 10 and not s["gain"]
     assert not ab.pair_summary(a, up[:8] + a[8:], "higher")["gain"]  # 8/10 wins
+
+
+def test_bench_leaf_label_set_and_cleared():
+    # each timed bench leaf labels its Spark jobs with the leaf name and
+    # clears the label afterwards, even when the leaf fails
+    spec = importlib.util.spec_from_file_location("bench", ROOT / "bench.py")
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    class Sc:
+        calls: list = []
+
+        def setJobDescription(self, value):
+            self.calls.append(value)
+
+    sc = Sc()
+    with bench.labelled(sc, "dedup_clusters"):
+        assert sc.calls == ["dedup_clusters"]
+    with pytest.raises(ValueError), bench.labelled(sc, "fingerprint"):
+        raise ValueError
+    assert sc.calls == ["dedup_clusters", None, "fingerprint", None]
