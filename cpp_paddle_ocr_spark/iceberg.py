@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .config import LINEAGE_BUCKETS
+
 #: Catalog name used by every table identifier this engine emits.
 CATALOG = "crawl"
 
@@ -49,15 +51,15 @@ CATALOG = "crawl"
 ICEBERG_RUNTIME_PACKAGE = "org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:1.10.0"
 
 
-def iceberg_conf(warehouse: str, catalog: str = CATALOG) -> dict[str, str]:
+def iceberg_conf(warehouse: str) -> dict[str, str]:
     """The exact session conf enabling the Iceberg catalog (see module doc)."""
     return {
         "spark.sql.extensions": (
             "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
         ),
-        f"spark.sql.catalog.{catalog}": "org.apache.iceberg.spark.SparkCatalog",
-        f"spark.sql.catalog.{catalog}.type": "hadoop",
-        f"spark.sql.catalog.{catalog}.warehouse": warehouse,
+        f"spark.sql.catalog.{CATALOG}": "org.apache.iceberg.spark.SparkCatalog",
+        f"spark.sql.catalog.{CATALOG}.type": "hadoop",
+        f"spark.sql.catalog.{CATALOG}.warehouse": warehouse,
     }
 
 
@@ -86,10 +88,7 @@ def _is_table_ident(target: str) -> bool:
 
 
 def write_documents(
-    df: DataFrame,
-    target: str,
-    n_buckets: int = 64,
-    mode: str = "createOrReplace",
+    df: DataFrame, target: str, n_buckets: int = LINEAGE_BUCKETS
 ) -> None:
     """Write a documents table: Iceberg (partitioned by ``bucket(n, url)``
     so per-bucket reads prune files) when ``target`` is a table identifier,
@@ -97,13 +96,9 @@ def write_documents(
     if _is_table_ident(target):
         from pyspark.sql import functions as F
 
-        writer = df.writeTo(target).partitionedBy(
+        df.writeTo(target).partitionedBy(
             F.bucket(n_buckets, F.col("url"))
-        )
-        if mode == "append":
-            writer.append()
-        else:
-            writer.createOrReplace()
+        ).createOrReplace()
     else:
         df.write.mode("overwrite").parquet(target)
 

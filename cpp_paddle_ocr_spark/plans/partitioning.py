@@ -24,10 +24,8 @@ from ..config import SALT_BUCKETS
 SALT_SEED = 0x5A17
 
 
-def salted_url_partitioning(
-    df: DataFrame, num_partitions: int, salt_buckets: int = SALT_BUCKETS
-) -> DataFrame:
+def salted_url_partitioning(df: DataFrame, num_partitions: int) -> DataFrame:
     """Repartition by (host-hash, salt): uniform layout under host skew."""
     host = F.parse_url(F.col("url"), F.lit("HOST"))
-    salt = F.pmod(F.xxhash64(F.col("url"), F.lit(SALT_SEED)), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64(F.col("url"), F.lit(SALT_SEED)), F.lit(SALT_BUCKETS))
     return df.repartition(num_partitions, F.xxhash64(host), salt)

@@ -42,9 +42,7 @@ def get_spark(
         os.environ.setdefault(var, "1")  # local mode: workers inherit
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    )
+    shuffle_partitions = shuffle_partitions or int(cpus)
     # driver heap: half of physical memory, at most 32g. ParallelGC grows the
     # heap toward its maximum under html churn; a 32g maximum on a 16 GB host
     # got the test-suite JVM OOM-killed at 13.4 GB RSS

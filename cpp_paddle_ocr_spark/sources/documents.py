@@ -47,7 +47,7 @@ def _generate(
     n: int,
     row_fn: Callable[[int], dict],
     schema: T.StructType,
-    num_partitions: int | None,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """``n`` rows ``row_fn(id)`` of ``schema``, generated in parallel over
     ``spark.range`` — every fixture row is a pure function of its id."""
@@ -73,14 +73,10 @@ def generate_documents(
     )
 
 
-def generate_media(
-    spark: SparkSession,
-    n: int,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def generate_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic media table (url, media binary) — rows are pure
     functions of the row id (``fixtures.media_item``)."""
-    return _generate(spark, n, media_item, MEDIA_SCHEMA, num_partitions)
+    return _generate(spark, n, media_item, MEDIA_SCHEMA)
 
 
 _LAYOUT_SCHEMA = T.StructType(
@@ -91,26 +87,16 @@ _LAYOUT_SCHEMA = T.StructType(
 )
 
 
-def generate_layout_docs(
-    spark: SparkSession,
-    n: int,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def generate_layout_docs(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic layout-fixture table (url, html binary) for the T1-T3
     structure stage — pure function of the row id (``fixtures.layout_page``)."""
-    return _generate(spark, n, layout_page, _LAYOUT_SCHEMA, num_partitions)
+    return _generate(spark, n, layout_page, _LAYOUT_SCHEMA)
 
 
 def write_documents_parquet(
-    spark: SparkSession,
-    path: str,
-    n: int,
-    oversize_max: int = 16_000_000,
-    num_partitions: int | None = None,
+    spark: SparkSession, path: str, n: int, oversize_max: int = 16_000_000
 ) -> None:
-    generate_documents(spark, n, oversize_max, num_partitions).write.mode(
-        "overwrite"
-    ).parquet(path)
+    generate_documents(spark, n, oversize_max).write.mode("overwrite").parquet(path)
 
 
 def read_documents(spark: SparkSession, target: str) -> DataFrame:

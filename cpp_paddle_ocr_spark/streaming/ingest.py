@@ -9,7 +9,8 @@ Iceberg CDC in production), the cascade runs incrementally, results append.
 ``run_stream_job`` is the file-source job: ``foreachBatch`` running the
 same ``extract`` per micro-batch. ``foreachBatch`` is at-least-once, so the
 sink is made idempotent: output is partitioned by ``epoch_id`` and written
-with dynamic partition overwrite — a retried epoch REPLACES its own
+with the extraction job's sink, ``iceberg.overwrite_result_partitions``
+(dynamic partition overwrite on a path) — a retried epoch REPLACES its own
 partition (extraction is deterministic, so the replay is byte-identical),
 giving exactly-once *visible* results on top of the streaming checkpoint —
 the streaming counterpart of the lineage/resume protocol.
@@ -19,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..iceberg import overwrite_result_partitions
 from ..operators.extract import extract
 from ..schemas import DOCUMENTS_SCHEMA
 
@@ -38,18 +40,13 @@ def run_stream_job(
     )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        # idempotent epoch replay: dynamic overwrite of THIS epoch's
-        # partition only — a blind append would duplicate rows whenever
-        # foreachBatch retries an epoch after a failure. The overwrite mode
-        # is a per-WRITE option, not a session conf flip (which would
-        # silently change overwrite semantics for unrelated writes).
-        (
-            extract(batch_df)
-            .withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
+        # idempotent epoch replay: overwrite THIS epoch's partition only —
+        # a blind append would duplicate rows whenever foreachBatch retries
+        # an epoch after a failure
+        overwrite_result_partitions(
+            extract(batch_df).withColumn("epoch_id", F.lit(int(epoch_id))),
+            out_dir,
+            "epoch_id",
         )
 
     writer = (

@@ -4,28 +4,34 @@ Usage:
     spark-submit --py-files engine.zip jobs/extract_job.py \
         --input /path/to/documents_parquet_or_iceberg_table \
         --output /path/to/out_dir \
-        [--run-id RID] [--buckets 64] [--groups 8] [--partitions P] \
+        [--run-id RID] [--buckets N] [--groups G] \
         [--generate N]          # generate a fixture table instead of reading
 
-Build engine.zip with scripts/make_pyfiles.sh. The job is resumable: rerun
-with the same --run-id and --output after a failure and only uncommitted
-lineage buckets are processed (cpp_paddle_ocr_spark.lineage).
+Build engine.zip with scripts/make_pyfiles.sh. ``--input`` goes to
+``lineage.run_extract_job`` as its ``source``, which picks the scan (pruned
+per-group reads of an Iceberg table, else one cached scan); ``--buckets``
+and ``--groups`` default to the job's own defaults. The job is resumable:
+rerun with the same --run-id and --output after a failure and only
+uncommitted lineage buckets are processed.
 """
 
 from __future__ import annotations
 
 import argparse
+import inspect
 import sys
 
 
 def main(argv: list[str]) -> None:
+    from cpp_paddle_ocr_spark.lineage import run_extract_job
+
+    job = inspect.signature(run_extract_job).parameters
     p = argparse.ArgumentParser()
     p.add_argument("--input", default=None)
     p.add_argument("--output", required=True)
     p.add_argument("--run-id", default=None)
-    p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--groups", type=int, default=8)
-    p.add_argument("--partitions", type=int, default=None)
+    p.add_argument("--buckets", type=int, default=job["n_buckets"].default)
+    p.add_argument("--groups", type=int, default=job["n_groups"].default)
     p.add_argument("--generate", type=int, default=None)
     p.add_argument(
         "--status",
@@ -35,15 +41,13 @@ def main(argv: list[str]) -> None:
         "src/ocr_ipc_service.cpp:438-448)",
     )
     args = p.parse_args(argv)
+    if not (args.status or args.generate or args.input):
+        p.error("one of --input / --generate is required")
 
     from pyspark.sql import SparkSession
 
-    from cpp_paddle_ocr_spark.lineage import run_extract_job
     from cpp_paddle_ocr_spark.operators.extract import make_metrics
-    from cpp_paddle_ocr_spark.sources.documents import (
-        generate_documents,
-        read_documents,
-    )
+    from cpp_paddle_ocr_spark.sources.documents import generate_documents
 
     # don't tear down a session this entry didn't create (in-process
     # callers — tests, notebooks — own their session's lifecycle)
@@ -67,32 +71,16 @@ def main(argv: list[str]) -> None:
             spark.stop()
         return
 
-    source_table = None
-    if args.generate:
-        docs = generate_documents(spark, args.generate)
-    elif args.input:
-        docs = read_documents(spark, args.input)
-        from cpp_paddle_ocr_spark.iceberg import _is_table_ident
-
-        if _is_table_ident(args.input):
-            # Iceberg source: lineage uses per-commit-group pruned scans on
-            # the table's own bucket transform instead of persisting the
-            # full extraction output (lineage.run_extract_job docstring)
-            source_table = args.input
-    else:
-        p.error("one of --input / --generate is required")
-
+    source = generate_documents(spark, args.generate) if args.generate else args.input
     metrics = make_metrics(spark)
     run_id = run_extract_job(
         spark,
-        docs,
+        source,
         args.output,
         run_id=args.run_id,
         n_buckets=args.buckets,
         n_groups=args.groups,
-        num_partitions=args.partitions,
         metrics=metrics,
-        source_table=source_table,
     )
     print(
         f"run_id={run_id} "

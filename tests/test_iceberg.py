@@ -159,12 +159,7 @@ def test_iceberg_pruned_group_scan(spark, tmp_path):
     scan_section = plan[plan.index("BatchScan"):].splitlines()[0:3]
     assert any("bucket" in ln for ln in scan_section), plan
     run_extract_job(
-        spark,
-        docs,
-        f"{CATALOG}.db.out_pruned",
-        n_buckets=n_buckets,
-        n_groups=2,
-        source_table=src,
+        spark, src, f"{CATALOG}.db.out_pruned", n_buckets=n_buckets, n_groups=2
     )
     out = spark.read.table(f"{CATALOG}.db.out_pruned_extracted")
     assert out.count() == 60

@@ -80,6 +80,23 @@ def test_rerun_completed_job_is_noop(spark, docs, tmp_path_factory):
     assert len(_snapshot(spark, out)) == N
 
 
+def test_path_source_matches_dataframe_source(spark, docs, tmp_path_factory):
+    # a string source is read by the job itself (sources.documents
+    # .read_documents) and takes the same single-scan path as a DataFrame
+    src = str(tmp_path_factory.mktemp("path_src") / "docs")
+    docs.write.parquet(src)
+    out_df = str(tmp_path_factory.mktemp("from_df"))
+    out_path = str(tmp_path_factory.mktemp("from_path"))
+    run_extract_job(spark, docs, out_df, run_id="d", n_buckets=BUCKETS, n_groups=GROUPS)
+    run_extract_job(spark, src, out_path, run_id="p", n_buckets=BUCKETS, n_groups=GROUPS)
+    from_path = _snapshot(spark, out_path)
+    assert len(from_path) == N
+    assert from_path == _snapshot(spark, out_df)
+    lin = read_lineage(spark, out_path).collect()
+    assert sorted(r.bucket for r in lin) == list(range(BUCKETS))
+    assert {r.transform for r in lin} == {"xxhash64"}
+
+
 def test_single_source_scan_per_job(spark, tmp_path_factory):
     # the source must be scanned ONCE per job regardless of n_groups (the
     # per-group filter used to re-scan it once per commit group): a canary
