@@ -74,17 +74,18 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def _is_table_ident(target: str) -> bool:
-    """Iceberg table identifiers are catalog-qualified dotted names
+def _is_table_ident(spark: SparkSession, target: str) -> bool:
+    """Table identifiers are catalog-qualified dotted names
     (``crawl.db.table``), never paths. A name routes to the table path only
-    when it is slash-free AND either starts with this engine's catalog or
-    has ≥2 dots (some.catalog.db.table): a plain relative directory like
-    ``"results"`` — or a dotted one like ``"results.v2"`` — stays on the
-    parquet path instead of being silently routed to
-    ``spark.read.table``/``saveAsTable`` (round-2 ADVICE + round-3 review)."""
-    if "/" in target or "\\" in target:
+    when it is slash-free, has a dot, and its first part names a catalog
+    configured on ``spark`` (``spark.sql.catalog.<first>``): a relative
+    directory like ``"results"``, ``"results.v2"`` or ``"docs.v2.parquet"``
+    stays on the parquet path instead of being silently routed to
+    ``spark.read.table``/``saveAsTable``."""
+    if "/" in target or "\\" in target or "." not in target:
         return False
-    return target.startswith(f"{CATALOG}.") or target.count(".") >= 2
+    catalog = target.split(".", 1)[0]
+    return spark.conf.get(f"spark.sql.catalog.{catalog}", None) is not None
 
 
 def write_documents(
@@ -93,7 +94,7 @@ def write_documents(
     """Write a documents table: Iceberg (partitioned by ``bucket(n, url)``
     so per-bucket reads prune files) when ``target`` is a table identifier,
     parquet when it is a path."""
-    if _is_table_ident(target):
+    if _is_table_ident(df.sparkSession, target):
         from pyspark.sql import functions as F
 
         df.writeTo(target).partitionedBy(
@@ -116,11 +117,10 @@ def overwrite_result_partitions(
     would replace the whole table, clobbering prior commit groups (round-2
     ADVICE). Creating it partitioned here makes every later group's
     overwrite scoped to its own partitions."""
-    if _is_table_ident(target):
+    if _is_table_ident(df.sparkSession, target):
         from pyspark.sql import functions as F
 
-        sess = df.sparkSession
-        if not sess.catalog.tableExists(target):
+        if not df.sparkSession.catalog.tableExists(target):
             df.writeTo(target).partitionedBy(F.col(partition_col)).create()
         else:
             df.writeTo(target).overwritePartitions()

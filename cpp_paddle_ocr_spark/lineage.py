@@ -5,22 +5,23 @@ processing time — ``include/paddle_ocr/ocr_ipc_service.h:91-93``,
 ``src/ocr_ipc_service.cpp:438-448``). At 100 TB that becomes durable state:
 
 * the job reads one ``source``: a documents DataFrame, a parquet path or
-  an Iceberg table identifier. An identifier (runtime on the classpath) is
-  scanned per commit group with file pruning; any other source is scanned
-  once and its extraction output cached (``run_extract_job``);
+  an Iceberg table identifier, and runs one loop over scans of it, each
+  scan a list of commit groups. An identifier (runtime on the classpath)
+  gets one pruned scan per group; any other source gets one scan holding
+  every group (``run_extract_job``);
 * pages are assigned to ``n_buckets`` deterministic **lineage buckets** by
   ``pmod(xxhash64(url), n_buckets)`` — the unit of commit/retry;
-* buckets are processed in ``n_groups`` commit groups: the group's output
-  is published to ``extracted`` (partitioned on ``bucket``), then one file
-  with a lineage row per bucket is added to the lineage table — only then
-  is the group "committed". On the fallback path with a path target the job
-  writes every uncommitted bucket ONCE, in one Spark job, to
-  ``{out_dir}/_staging``; each group then publishes its buckets from the
-  driver (delete ``extracted/bucket=b``, rename ``_staging/bucket=b`` onto
-  it). Iceberg targets and the pruned path run one partition overwrite per
-  group instead. On a lineage path the driver writes the lineage file
-  itself (temp name, then rename); an Iceberg lineage table takes a
-  ``saveAsTable`` append;
+* buckets are processed in ``n_groups`` commit groups. Each scan's output
+  is persisted and its per-bucket stats taken; then each group's output is
+  published to ``extracted`` (partitioned on ``bucket``), and one file with
+  a lineage row per bucket is added to the lineage table — only then is
+  the group "committed". The single scan with a path target writes every
+  uncommitted bucket ONCE, in one Spark job, to ``{out_dir}/_staging``;
+  each group then publishes its buckets from the driver (delete
+  ``extracted/bucket=b``, rename ``_staging/bucket=b`` onto it). Iceberg
+  targets and pruned scans run one partition overwrite per group instead.
+  On a lineage path the driver writes the lineage file itself (temp name,
+  then rename); an Iceberg lineage table takes a ``saveAsTable`` append;
 * on restart the job reads the run's committed buckets from the lineage
   table (``_committed``) and processes only the others. A crashed group's
   buckets sit in ``_staging`` (cleared by the next run's overwrite) or in
@@ -47,6 +48,12 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
 
 from .config import LINEAGE_BUCKETS
+from .iceberg import (
+    CATALOG,
+    _is_table_ident,
+    iceberg_available,
+    overwrite_result_partitions,
+)
 from .operators.extract import extract
 from .schemas import LINEAGE_SCHEMA
 from .sources.documents import read_documents
@@ -112,12 +119,10 @@ def _bucket_stats(df: DataFrame) -> dict[int, tuple[int, int, int]]:
     return {r.bucket: (r.n_pages, r.n_ok, r.n_blocks) for r in rows}
 
 
-def _child_target(out_dir: str, name: str) -> str:
+def _child_target(spark: SparkSession, out_dir: str, name: str) -> str:
     """Child sink target: ``{out_dir}_{name}`` for Iceberg table identifiers
     (dotted names can't nest a path), ``{out_dir}/{name}`` for paths."""
-    from .iceberg import _is_table_ident
-
-    if _is_table_ident(out_dir):
+    if _is_table_ident(spark, out_dir):
         return f"{out_dir}_{name}"
     return f"{out_dir}/{name}"
 
@@ -137,10 +142,8 @@ def _committed(
     any failure reading an existing sink raises instead of silently
     restarting from zero, which would re-extract committed buckets and
     bypass the transform guard."""
-    from .iceberg import _is_table_ident
-
-    t = _child_target(out_dir, "_lineage")
-    if _is_table_ident(t):
+    t = _child_target(spark, out_dir, "_lineage")
+    if _is_table_ident(spark, t):
         if not spark.catalog.tableExists(t):
             return set()
     else:
@@ -193,12 +196,86 @@ def _publish_buckets(spark: SparkSession, stage: str, target: str, buckets) -> N
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    from .iceberg import _is_table_ident
-
-    t = _child_target(out_dir, "_lineage")
-    if _is_table_ident(t):
+    t = _child_target(spark, out_dir, "_lineage")
+    if _is_table_ident(spark, t):
         return spark.read.table(t)
     return spark.read.schema(LINEAGE_SCHEMA).parquet(t)
+
+
+def _check_bucket_spec(spark: SparkSession, table: str, n_buckets: int) -> None:
+    """Guard of the pruned scan. Its filter prunes files ONLY if it matches
+    the table's physical partition transform: bucket(n_buckets, url). A
+    mismatched n_buckets would silently degrade every commit group to a full
+    table scan — n_groups × the whole input — so verify the spec.
+    verify_bucket_spec is total over arbitrary row shapes, so only DESCRIBE
+    itself can fail here; when it does, say so (round-3 ADVICE: a silent
+    pass here hides the exact failure the guard exists to catch)."""
+    try:
+        desc = spark.sql(f"DESCRIBE TABLE {table}").collect()
+    except Exception as e:
+        _log.warning(
+            "DESCRIBE TABLE %s failed (%s); cannot verify the "
+            "bucket(%d, url) partition spec — per-group scan pruning "
+            "stays best-effort and may silently degrade to full scans",
+            table,
+            e,
+            n_buckets,
+        )
+    else:
+        if not verify_bucket_spec(desc, table, n_buckets):
+            _log.warning(
+                "DESCRIBE TABLE %s showed no recognizable "
+                "bucket(..., url) partition spec; per-group scan "
+                "pruning is unverified (best-effort)",
+                table,
+            )
+
+
+def _commit_lineage(
+    spark: SparkSession,
+    out_dir: str,
+    run_id: str,
+    transform: str,
+    chunk: list[int],
+    stats: dict[int, tuple[int, int, int]],
+    wall_ms: float,
+) -> None:
+    """Commit one group: a lineage row per bucket of ``chunk``. A lineage
+    path gets one file from the driver (``_write_lineage_file``, no Spark
+    job); an Iceberg lineage table gets a ``saveAsTable`` append."""
+    # a row per bucket, zeros if empty (it still must be "committed")
+    cols = ("run_id", "bucket", "n_pages", "n_ok", "n_blocks", "wall_ms")
+    rows = [
+        dict(zip(cols, (run_id, b, *stats.get(b, (0, 0, 0)), wall_ms)))
+        for b in chunk
+    ]
+    t = _child_target(spark, out_dir, "_lineage")
+    if _is_table_ident(spark, t):
+        # Iceberg: append creates-or-appends. This frame fixes the
+        # column nullability the lineage table is created with, so
+        # later appends must keep building it the same way; pyarrow
+        # is the cheap createDataFrame input, Arrow conf on or off.
+        (
+            spark.createDataFrame(
+                pa.Table.from_pylist(rows),
+                "run_id string, bucket int, n_pages long, n_ok long, n_blocks long, wall_ms double",
+            )
+            .coalesce(1)
+            .withColumn("committed_at", F.current_timestamp())
+            .withColumn("transform", F.lit(transform))
+            .write.mode("append")
+            .saveAsTable(t)
+        )
+    else:
+        now = datetime.now(timezone.utc)
+        _write_lineage_file(
+            spark,
+            t,
+            pa.Table.from_pylist(
+                [{**r, "committed_at": now, "transform": transform} for r in rows],
+                schema=_LINEAGE_ARROW,
+            ),
+        )
 
 
 def run_extract_job(
@@ -216,56 +293,42 @@ def run_extract_job(
     Returns the ``run_id`` (pass it back in to resume after a failure).
 
     ``source`` is a documents DataFrame, or a string naming an Iceberg table
-    identifier or a parquet path. The source picks the scan strategy
-    (round-2 verdict #7):
+    identifier or a parquet path. The uncommitted buckets are split into
+    ``n_groups`` commit groups, and one loop runs over scans, each a list of
+    groups. The source picks the scans (round-2 verdict #7):
 
     * **pruned** — an Iceberg table identifier, with the runtime on the
-      classpath. Each commit group re-reads the table filtered to its
-      buckets. The lineage bucket is Iceberg's own ``system.bucket(n, url)``,
-      the transform the documents table is partitioned by
-      (``iceberg.write_documents``), so the filter is a partition predicate
-      and Iceberg prunes data files (system-function pushdown, Iceberg ≥1.3
-      on Spark ≥3.4): a group's scan reads only its buckets' files.
-      Pre-filtering lives in the table (snapshot/branch) itself.
-    * **fallback** — a DataFrame, or any other string, which
-      ``sources.documents.read_documents`` reads. ONE full scan whose
-      output is persisted (MEMORY_AND_DISK) and sliced per group — right
-      locally, but at 100 TB the extracted output is still O(corpus-text)
-      and can exceed executor storage, which is exactly why the pruned path
-      exists. The cache is clustered by bucket (one hash exchange after
-      extraction), so each bucket is one data file; the trade-off is that
-      one task writes each bucket, so a write has at most as many writer
-      tasks as it has buckets.
+      classpath: one scan per group, filtered by Iceberg's own
+      ``system.bucket(n, url)``, the transform the documents table is
+      partitioned by (``iceberg.write_documents``), so Iceberg prunes data
+      files (system-function pushdown, Iceberg ≥1.3 on Spark ≥3.4). Large
+      inputs keep many writer tasks per bucket.
+    * **single scan** — a DataFrame, or any other string, which
+      ``sources.documents.read_documents`` reads: one scan holding every
+      group, since a filter of a non-prunable source reads all of it. Its
+      output is clustered by bucket (one hash exchange after extraction),
+      so each bucket is one data file but has one writer task. At 100 TB
+      the persisted output is O(corpus-text) and can exceed executor
+      storage, which is why the pruned path exists.
 
-    Data writes: on the fallback path with a path target, after the stats
-    pass the cache is written ONCE, partitioned by ``bucket``, to
-    ``{out_dir}/_staging`` (a static overwrite, so whatever a crashed run
-    left there is cleared). Each commit group then publishes its buckets
-    from the driver through the Hadoop ``FileSystem``: delete
-    ``extracted/bucket=b``, rename ``_staging/bucket=b`` onto it. A job then
-    costs the same Spark jobs for any ``n_groups``; resume granularity is
-    still the group. A rename is a metadata move on HDFS and local disks but
-    a copy of the bucket's bytes on object stores (``s3a://``), so there
-    the publish costs as much as a write. The ``finally`` block deletes
+    Each scan's extraction output is persisted and read first by
+    ``_bucket_stats``. On the single scan with a path target it is then
+    written ONCE, partitioned by ``bucket``, to ``{out_dir}/_staging`` (a
+    static overwrite, so it clears what a crashed run left), and each group
+    publishes its buckets from the driver (``_publish_buckets``: delete
+    ``extracted/bucket=b``, rename ``_staging/bucket=b`` onto it; a copy of
+    the bytes on object stores such as ``s3a://``). Otherwise each group is
+    one partition overwrite (``overwrite_result_partitions``). Then the
+    group commits its lineage (``_commit_lineage``) with ``wall_ms``, its
+    publish time. The ``finally`` block unpersists the scan and deletes
     ``_staging``, so the groups a failure leaves uncommitted are never
-    published. Iceberg table targets and the pruned path keep one
-    partition overwrite per group (``overwrite_result_partitions``).
-
-    Per commit group, after its data is published: one single-file lineage
-    commit built on the driver from ``_bucket_stats`` — taken once by the
-    pass that fills the fallback cache, or from each persisted group when
-    pruned. A lineage path gets that file from the driver through the Hadoop
-    ``FileSystem`` (no Spark job, ``_write_lineage_file``); an Iceberg
-    lineage table gets a ``saveAsTable`` append. ``wall_ms`` is the group's
-    publish time: its renames on the staged path, its data write otherwise.
+    published.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
 
-    from .iceberg import CATALOG, _is_table_ident, iceberg_available
-
     pruned = (
         isinstance(source, str)
-        and _is_table_ident(source)
+        and _is_table_ident(spark, source)
         and iceberg_available(spark)
     )
     transform = "iceberg" if pruned else "xxhash64"
@@ -290,177 +353,78 @@ def run_extract_job(
         return run_id
 
     group_size = max(1, -(-len(todo) // n_groups))
-    extracted = _child_target(out_dir, "extracted")
-
-    out_all = None
-    stage = None  # the fallback path's one data write, published per group
+    chunks = [todo[g : g + group_size] for g in range(0, len(todo), group_size)]
+    groups = list(enumerate(chunks))  # numbered for ``fail_after_group``
     if pruned:
-        # the filter prunes files ONLY if it matches the table's physical
-        # partition transform: bucket(n_buckets, url). A mismatched
-        # n_buckets would silently degrade every commit group to a full
-        # table scan — n_groups × the whole input — so verify the spec.
-        # verify_bucket_spec is total over arbitrary row shapes, so only
-        # DESCRIBE itself can fail here; when it does, say so (round-3
-        # ADVICE: a silent pass here hides the exact failure the guard
-        # exists to catch).
-        try:
-            desc = spark.sql(f"DESCRIBE TABLE {source}").collect()
-        except Exception as e:
-            _log.warning(
-                "DESCRIBE TABLE %s failed (%s); cannot verify the "
-                "bucket(%d, url) partition spec — per-group scan pruning "
-                "stays best-effort and may silently degrade to full scans",
-                source,
-                e,
-                n_buckets,
-            )
-        else:
-            if not verify_bucket_spec(desc, source, n_buckets):
-                _log.warning(
-                    "DESCRIBE TABLE %s showed no recognizable "
-                    "bucket(..., url) partition spec; per-group scan "
-                    "pruning is unverified (best-effort)",
-                    source,
-                )
-        iceberg_bucket = F.expr(f"{CATALOG}.system.bucket({n_buckets}, url)")
-
-        def group_output(chunk: list[int]) -> DataFrame:
-            src = (
-                spark.read.table(source)
-                .withColumn("_bucket", iceberg_bucket)
-                .filter(F.col("_bucket").isin(chunk))
-            )
-            return extract(src.drop("_bucket"), metrics=metrics).withColumn(
-                "bucket", iceberg_bucket
-            )
-
+        _check_bucket_spec(spark, source, n_buckets)
+        docs = spark.read.table(source)
+        bucket = F.expr(f"{CATALOG}.system.bucket({n_buckets}, url)")
+        scans = [[group] for group in groups]
     else:
-        # ONE source scan for the whole job: extract every uncommitted
-        # bucket in a single pass and spool the (far smaller) extraction
-        # output to executor storage; the commit-group loop below then
-        # writes + commits lineage from the cache. (A per-group filter of a
-        # non-prunable source would mean n_groups full scans of the input.)
         docs = read_documents(spark, source) if isinstance(source, str) else source
-        docs_b = docs.withColumn("_bucket", _bucket_col(n_buckets))
-        if len(todo) < n_buckets:  # resume: only uncommitted buckets
-            docs_b = docs_b.filter(F.col("_bucket").isin(todo))
-        # cluster the cache by bucket: extraction runs at the input's
-        # parallelism before the exchange, and each bucket then sits in ONE
-        # cache partition, so a group writes one file per bucket instead of
-        # one per cache task per bucket
-        out_all = (
-            extract(docs_b.drop("_bucket"), metrics=metrics)
-            .withColumn("bucket", _bucket_col(n_buckets))
-            .repartition(spark.sparkContext.defaultParallelism, "bucket")
-        )
-        # the cache has two readers: the stats pass that fills it, then
-        # either the one staging write (path target) or the per-group slices
-        # (table target); extraction runs once for both. Writing the staging
-        # dir uncached and reading the stats back from it measured slower:
-        # small_pages docs_per_s median 430.6 → 381.8, 1 of 5 paired runs
-        # faster, median pair ratio 0.887 (scripts/ab.py, seeds 201-205,
-        # 4-core host)
-        out_all.persist(StorageLevel.MEMORY_AND_DISK)
-        stats = _bucket_stats(out_all)
+        bucket = _bucket_col(n_buckets)
+        scans = [groups]
+    extracted = _child_target(spark, out_dir, "extracted")
+    stage = (
+        None
+        if pruned or _is_table_ident(spark, out_dir)
+        else _child_target(spark, out_dir, "_staging")
+    )
 
-        def group_output(chunk: list[int]) -> DataFrame:
-            return out_all.filter(F.col("bucket").isin(chunk))
-
-    group_cache = None
-    try:
-        if out_all is not None and not _is_table_ident(out_dir):
-            # one data write for every group: a static overwrite (it clears
-            # what a crashed run left here), one dir per bucket with rows —
-            # exactly the buckets ``stats`` holds
-            stage = _child_target(out_dir, "_staging")
-            (
-                out_all.write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy("bucket")
-                .parquet(stage)
-            )
-        for g in range(0, len(todo), group_size):
-            chunk = todo[g : g + group_size]
-            t0 = time.perf_counter()
+    for scan in scans:
+        buckets = [b for _, chunk in scan for b in chunk]
+        src = docs if len(buckets) == n_buckets else docs.filter(bucket.isin(buckets))
+        out = extract(src, metrics=metrics).withColumn("bucket", bucket)
+        if not pruned:
+            # cluster by bucket: extraction runs at the input's parallelism
+            # before the exchange, and each bucket then sits in ONE
+            # partition, so it is written as one file, not one per task
+            out = out.repartition(spark.sparkContext.defaultParallelism, "bucket")
+        # persisted so extraction runs once for the stats pass and the
+        # writes. Writing the staging dir uncached and reading the stats
+        # back from it measured slower: small_pages docs_per_s median
+        # 430.6 → 381.8, 1 of 5 paired runs faster, median pair ratio 0.887
+        # (scripts/ab.py, seeds 201-205, 4-core host)
+        out.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            stats = _bucket_stats(out)
             if stage is not None:
-                # a bucket without rows has no staged dir and keeps what
-                # ``extracted`` holds, as a dynamic overwrite would
-                _publish_buckets(spark, stage, extracted, [b for b in chunk if b in stats])
-            else:
-                part = group_output(chunk)
-                if pruned:
-                    # the pruned group plan re-extracts from the source; it
-                    # is consumed below by the write AND the stats
-                    # aggregation — persist so the mapInPandas extraction
-                    # runs ONCE per group, not twice. Unpersisted in the
-                    # finally below so a failed group does not leak pinned
-                    # executor storage.
-                    part = part.persist(StorageLevel.MEMORY_AND_DISK)
-                    group_cache = part
-                # Iceberg overwritePartitions when out_dir is a table
-                # identifier (atomic metadata swap, one snapshot per commit
-                # group); dynamic partition overwrite on a pruned path target
-                from .iceberg import overwrite_result_partitions
-
-                overwrite_result_partitions(part, extracted)
-            wall_ms = (time.perf_counter() - t0) * 1000.0
-            if pruned:
-                stats = _bucket_stats(part)
-            # a row per bucket, zeros if empty (it still must be "committed")
-            cols = ("run_id", "bucket", "n_pages", "n_ok", "n_blocks", "wall_ms")
-            rows = [
-                dict(zip(cols, (run_id, b, *stats.get(b, (0, 0, 0)), wall_ms)))
-                for b in chunk
-            ]
-            t = _child_target(out_dir, "_lineage")
-            if _is_table_ident(t):
-                # Iceberg: append creates-or-appends. This frame fixes the
-                # column nullability the lineage table is created with, so
-                # later appends must keep building it the same way; pyarrow
-                # is the cheap createDataFrame input, Arrow conf on or off.
+                # one data write for every group: a static overwrite, one
+                # dir per bucket with rows — exactly the buckets ``stats``
+                # holds
                 (
-                    spark.createDataFrame(
-                        pa.Table.from_pylist(rows),
-                        "run_id string, bucket int, n_pages long, n_ok long, n_blocks long, wall_ms double",
+                    out.write.mode("overwrite")
+                    .option("partitionOverwriteMode", "static")
+                    .partitionBy("bucket")
+                    .parquet(stage)
+                )
+            for i, chunk in scan:
+                t0 = time.perf_counter()
+                if stage is not None:
+                    # a bucket without rows has no staged dir and keeps what
+                    # ``extracted`` holds, as a dynamic overwrite would
+                    _publish_buckets(spark, stage, extracted, [b for b in chunk if b in stats])
+                else:
+                    # Iceberg overwritePartitions on a table target (one
+                    # snapshot per group), dynamic partition overwrite on a
+                    # path
+                    overwrite_result_partitions(
+                        out.filter(F.col("bucket").isin(chunk)), extracted
                     )
-                    .coalesce(1)
-                    .withColumn("committed_at", F.current_timestamp())
-                    .withColumn("transform", F.lit(transform))
-                    .write.mode("append")
-                    .saveAsTable(t)
-                )
-            else:
-                now = datetime.now(timezone.utc)
-                _write_lineage_file(
-                    spark,
-                    t,
-                    pa.Table.from_pylist(
-                        [{**r, "committed_at": now, "transform": transform} for r in rows],
-                        schema=_LINEAGE_ARROW,
-                    ),
-                )
-            if group_cache is not None:
-                group_cache.unpersist()
-                group_cache = None
-            if fail_after_group is not None and g // group_size >= fail_after_group:
-                raise SimulatedFailure(
-                    f"injected failure after commit group {g // group_size}"
-                )
-    finally:
-        if out_all is not None:
-            out_all.unpersist()
-        if group_cache is not None:  # a failed group must not leak its cache
-            group_cache.unpersist()
-        if stage is not None:  # uncommitted groups stay unpublished
-            fs, path = _hadoop_path(spark, stage)
-            fs.delete(path, True)
+                wall_ms = (time.perf_counter() - t0) * 1000.0
+                _commit_lineage(spark, out_dir, run_id, transform, chunk, stats, wall_ms)
+                if fail_after_group is not None and i >= fail_after_group:
+                    raise SimulatedFailure(f"injected failure after commit group {i}")
+        finally:
+            out.unpersist()
+            if stage is not None:  # uncommitted groups stay unpublished
+                fs, path = _hadoop_path(spark, stage)
+                fs.delete(path, True)
     return run_id
 
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
-    from .iceberg import _is_table_ident
-
-    t = _child_target(out_dir, "extracted")
-    if _is_table_ident(t):
+    t = _child_target(spark, out_dir, "extracted")
+    if _is_table_ident(spark, t):
         return spark.read.table(t)
     return spark.read.parquet(t)

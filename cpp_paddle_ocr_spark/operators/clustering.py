@@ -46,7 +46,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .common import load, tokens, tokens_sql
-from .dedup import BAND_KEY_CAP, LSH_SQL, lsh_candidate_pairs
+from .dedup import (
+    BAND_KEY_CAP,
+    LSH_SQL,
+    NEARDUP_VERIFY_PCT,
+    jaccard_verified,
+    lsh_candidate_pairs,
+)
 from .similarity import KNN_JOIN_SQL, knn_join
 
 CC_MAX_ITER = 25
@@ -182,36 +188,21 @@ def _attach_labels(
     )
 
 
-#: Verification gate on LSH candidates, as percent (integer — see below).
-#: LSH candidates are high-recall/low-precision BY DESIGN (4 bands of 2
-#: over 8 minhash perms); taking the transitive closure of raw candidates
-#: collapses a similar-ish corpus into one giant cluster (measured: ALL
-#: 500 fixture docs in one component). Real pipelines verify each
-#: candidate's TRUE similarity before union-find; median true Jaccard of
-#: the fixture candidates is 0.59, and 0.8 keeps the ~14% that are actual
-#: near-dups.
-JACCARD_VERIFY_PCT = 80
-
-
 def verified_pairs(
-    df: DataFrame, band_cap: int = BAND_KEY_CAP, pct: int = JACCARD_VERIFY_PCT
+    df: DataFrame, band_cap: int = BAND_KEY_CAP, pct: int = NEARDUP_VERIFY_PCT
 ) -> DataFrame:
     """LSH candidate pairs filtered to TRUE distinct-token Jaccard ≥
-    pct/100.
+    pct/100 (the integer test ``dedup.jaccard_verified``).
 
-    The test is cross-multiplied in INTEGERS (``100·|A∩B| ≥ pct·|A∪B|``) —
-    no float division, so Spark and the DuckDB oracle agree bit-for-bit
-    with no rounding contract. Scale: one extra shuffle joining the pair
-    list (≪ n² rows by the band caps) against the per-doc token sets;
-    intersection cost is per-pair O(|A|+|B|) — the standard
-    candidate-verification stage of a MinHash dedup pipeline.
+    Scale: one extra shuffle joining the pair list (≪ n² rows by the band
+    caps) against the per-doc token sets; intersection cost is per-pair
+    O(|A|+|B|) — the standard candidate-verification stage of a MinHash
+    dedup pipeline.
     """
     pairs = lsh_candidate_pairs(df, band_cap)
     toks = df.select(
         "doc_id", F.array_distinct(tokens(F.col("text"))).alias("t")
     )
-    inter = F.size(F.array_intersect(F.col("ta"), F.col("tb")))
-    union = F.size(F.col("ta")) + F.size(F.col("tb")) - inter
     return (
         pairs.join(
             toks.select(F.col("doc_id").alias("doc_a"), F.col("t").alias("ta")),
@@ -221,7 +212,7 @@ def verified_pairs(
             toks.select(F.col("doc_id").alias("doc_b"), F.col("t").alias("tb")),
             "doc_b",
         )
-        .filter(inter * 100 >= union * pct)
+        .filter(jaccard_verified(F.col("ta"), F.col("tb"), pct))
         .select("doc_a", "doc_b")
     )
 
@@ -229,7 +220,7 @@ def verified_pairs(
 def dedup_clusters(
     df: DataFrame,
     band_cap: int = BAND_KEY_CAP,
-    verify_pct: int = JACCARD_VERIFY_PCT,
+    verify_pct: int = NEARDUP_VERIFY_PCT,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Full near-dup resolution over `documents`: LSH candidate pairs →
@@ -323,7 +314,7 @@ SELECT doc_a, doc_b FROM (
   JOIN (SELECT doc_id, list_distinct({tokens_sql('text')}) AS t
         FROM documents) b ON b.doc_id = p.doc_b
 )
-WHERE inter * 100 >= un * {JACCARD_VERIFY_PCT}
+WHERE inter * 100 >= un * {NEARDUP_VERIFY_PCT}
 """
 
 DEDUP_CLUSTERS_SQL = f"""

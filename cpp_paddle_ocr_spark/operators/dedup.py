@@ -18,7 +18,7 @@ Scale notes (100 TB view):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .common import h28_sql, h60_sql, load, tokens, tokens_sql
 
@@ -705,9 +705,25 @@ def q_dedup_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of 100 TB of corpus text; corpus TEXT is read again only for the verified
 # candidates' token sets.
 
-#: keep in sync with ``clustering.JACCARD_VERIFY_PCT`` (clustering imports
-#: from this module, so the constant cannot live there without a cycle)
+#: Verification gate on LSH candidates, as percent (integer — see
+#: ``jaccard_verified``), for both the increment check here and
+#: ``clustering.dedup_clusters``. LSH candidates are high-recall/low-precision
+#: BY DESIGN (4 bands of 2 over 8 minhash perms); taking the transitive
+#: closure of raw candidates collapses a similar-ish corpus into one giant
+#: cluster (measured: ALL 500 fixture docs in one component). Real pipelines
+#: verify each candidate's TRUE similarity before union-find; median true
+#: Jaccard of the fixture candidates is 0.59, and 0.8 keeps the ~14% that
+#: are actual near-dups.
 NEARDUP_VERIFY_PCT = 80
+
+
+def jaccard_verified(a: Column, b: Column, pct: int) -> Column:
+    """True distinct-token Jaccard of token arrays ``a`` and ``b`` ≥ pct/100,
+    cross-multiplied in INTEGERS (``100·|A∩B| ≥ pct·|A∪B|``) — no float
+    division, so Spark and the DuckDB oracle agree bit-for-bit with no
+    rounding contract."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter * 100 >= (F.size(a) + F.size(b) - inter) * pct
 
 
 def neardup_increment(
@@ -788,12 +804,10 @@ def neardup_increment(
             "corpus_id", F.array_distinct(tokens(F.col("text"))).alias("tb")
         )
     )
-    inter = F.size(F.array_intersect(F.col("ta"), F.col("tb")))
-    union = F.size(F.col("ta")) + F.size(F.col("tb")) - inter
     matches = (
         cand.join(inc_toks, "doc_id")
         .join(cor_toks, "corpus_id")
-        .filter(inter * 100 >= union * verify_pct)
+        .filter(jaccard_verified(F.col("ta"), F.col("tb"), verify_pct))
         .groupBy("doc_id")
         .agg(F.min("corpus_id").alias("match_id"))
     )

@@ -102,7 +102,7 @@ def write_documents_parquet(
 def read_documents(spark: SparkSession, target: str) -> DataFrame:
     """S1: table scan of an Iceberg table identifier or a parquet path, told
     apart by the rule every sink uses (``iceberg._is_table_ident``)."""
-    if _is_table_ident(target):
+    if _is_table_ident(spark, target):
         return spark.read.table(target)
     return spark.read.schema(DOCUMENTS_SCHEMA).parquet(target)
 

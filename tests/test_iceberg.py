@@ -69,22 +69,44 @@ def test_iceberg_roundtrip(spark, tmp_path):
     assert snapshots(spark, table).count() >= 1
 
 
-def test_table_ident_requires_dotted_name():
-    # round-2 ADVICE: a plain relative output dir must stay on the parquet
-    # path, not be silently routed to spark.read.table/saveAsTable
+def test_table_ident_requires_dotted_name(spark):
+    # a name is a table only when it is slash-free, dotted, and its first
+    # part names a catalog configured on the session: a relative output
+    # dir, dotted or not, stays on the parquet path instead of being
+    # silently routed to spark.read.table/saveAsTable
     from cpp_paddle_ocr_spark.iceberg import _is_table_ident
     from cpp_paddle_ocr_spark.lineage import _child_target
 
-    assert not _is_table_ident("results")
-    assert not _is_table_ident("out/dir")
-    assert not _is_table_ident("/abs/path")
-    assert not _is_table_ident("results.v2")  # dotted dirname ≠ table ident
-    assert not _is_table_ident("out.parquet")
-    assert _is_table_ident("crawl.db.extracted")
-    assert _is_table_ident("other.db.extracted")  # ≥2 dots: catalog-qualified
-    assert _child_target("results", "_lineage") == "results/_lineage"
-    assert _child_target("results.v2", "_lineage") == "results.v2/_lineage"
-    assert _child_target("crawl.db.out", "_lineage") == "crawl.db.out__lineage"
+    key = f"spark.sql.catalog.{CATALOG}"
+    prev = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        # no catalog configured: every name is a path
+        assert not _is_table_ident(spark, "crawl.db.extracted")
+        assert not _is_table_ident(spark, "crawl.2024-10.parquet")
+        assert _child_target(spark, "crawl.db.out", "_lineage") == "crawl.db.out/_lineage"
+        spark.conf.set(key, "org.apache.iceberg.spark.SparkCatalog")
+        for path in (
+            "results",
+            "out/dir",
+            "/abs/path",
+            "crawl/db.out",
+            "results.v2",  # dotted dirname ≠ table ident
+            "out.parquet",
+            "docs.v2.parquet",
+            "other.db.extracted",  # no catalog named "other"
+        ):
+            assert not _is_table_ident(spark, path), path
+        assert _is_table_ident(spark, "crawl.db.extracted")
+        assert _is_table_ident(spark, "crawl.extracted")
+        assert _child_target(spark, "results", "_lineage") == "results/_lineage"
+        assert _child_target(spark, "results.v2", "_lineage") == "results.v2/_lineage"
+        assert _child_target(spark, "crawl.db.out", "_lineage") == "crawl.db.out__lineage"
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_read_documents_relative_dirs_are_parquet(spark, tmp_path, monkeypatch):
@@ -101,7 +123,7 @@ def test_read_documents_relative_dirs_are_parquet(spark, tmp_path, monkeypatch):
     local_fs.setWorkingDirectory(jvm.org.apache.hadoop.fs.Path(str(tmp_path)))
     try:
         docs = generate_documents(spark, 40, oversize_max=2_000_000)
-        for name in ("docs", "results.v2"):
+        for name in ("docs", "results.v2", "docs.v2.parquet"):
             write_documents(docs, name)
             assert (tmp_path / name / "_SUCCESS").is_file()
             back = read_documents(spark, name)
@@ -130,6 +152,26 @@ def test_parquet_overwrite_mode_is_per_write(spark, tmp_path):
         spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
         == before
     )
+
+
+def test_bucket_spec_check_logs_describe_failure(caplog):
+    # the pruned path's spec guard cannot run DESCRIBE: it says so and lets
+    # the job go on with best-effort pruning
+    import logging
+
+    from cpp_paddle_ocr_spark.lineage import _check_bucket_spec
+
+    class NoDescribe:
+        def sql(self, query):
+            raise RuntimeError("catalog unreachable")
+
+    with caplog.at_level(logging.WARNING, logger="cpp_paddle_ocr_spark.lineage"):
+        _check_bucket_spec(NoDescribe(), "crawl.db.docs", 64)
+    [record] = caplog.records
+    assert record.levelno == logging.WARNING
+    msg = record.getMessage()
+    assert "DESCRIBE TABLE crawl.db.docs failed (catalog unreachable)" in msg
+    assert "bucket(64, url)" in msg
 
 
 def test_iceberg_pruned_group_scan(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Tooling drift guard, no Spark session: every bench/job/script file
-compiles, its engine imports resolve, the bench leaf names are driver
+"""Tooling drift guard, no Spark session: every bench/job/script file, the
+repo benchmark's included, compiles, its engine imports resolve, the bench leaf names are driver
 queries, ``scripts/bench_scaling.py`` holds both scaling modes and writes
 the run it measured, and ``scripts/ab.py`` summarizes pairs correctly.
 
@@ -17,7 +17,11 @@ import pathlib
 import pytest
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
-TOOLING = sorted(ROOT.glob("scripts/*.py")) + [ROOT / "bench.py", ROOT / "jobs" / "extract_job.py"]
+TOOLING = (
+    sorted(ROOT.glob("scripts/*.py"))
+    + sorted(ROOT.glob("perfbench/*.py"))
+    + [ROOT / "bench.py", ROOT / "jobs" / "extract_job.py"]
+)
 IDS = [p.relative_to(ROOT).as_posix() for p in TOOLING]
 
 
