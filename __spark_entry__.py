@@ -15,6 +15,11 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cpp_paddle_ocr_spark.fixtures import (
+    GOLDEN_OVERSIZE_MAX,
+    N_GOLDEN,
+    N_MEDIA_GOLDEN,
+)
 from cpp_paddle_ocr_spark.operators import (
     clustering,
     corpus,
@@ -41,7 +46,7 @@ _N_EXTRACT = 240  # fixture pages for the extraction-pipeline checks
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: extract main content for every url (SURVEY.md §7.4)."""
-    docs = generate_documents(spark, _N_EXTRACT, oversize_max=2_000_000)
+    docs = generate_documents(spark, _N_EXTRACT, oversize_max=GOLDEN_OVERSIZE_MAX)
     out = extract(docs, num_partitions=8)
     # spans (array<struct>) dropped for a stable, hashable driver check
     return out.select(
@@ -62,12 +67,12 @@ def _digest_shape(out: DataFrame) -> DataFrame:
 
 
 def _q_extract_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = generate_documents(spark, _N_EXTRACT, oversize_max=2_000_000)
+    docs = generate_documents(spark, _N_EXTRACT, oversize_max=GOLDEN_OVERSIZE_MAX)
     return _digest_shape(extract(docs))
 
 
 def _q_extract_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = generate_documents(spark, _N_EXTRACT, oversize_max=2_000_000)
+    docs = generate_documents(spark, _N_EXTRACT, oversize_max=GOLDEN_OVERSIZE_MAX)
     return _digest_shape(extract_staged(docs))
 
 
@@ -75,7 +80,7 @@ def _q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL header decode over the deterministic media fixture table; fully
     oracled against the committed golden TSV (scripts/gen_media_golden.py) —
     closing round-2's last ``no_oracle`` entry."""
-    media = generate_media(spark, 60)
+    media = generate_media(spark, N_MEDIA_GOLDEN)
     return decode_media_meta(media, real=True)
 
 
@@ -85,7 +90,6 @@ _GOLDEN_TSV = str(
     / "golden"
     / "CHECKSUMS.tsv"
 )
-_N_GOLDEN = 2000  # rows in the committed golden set (scripts/gen_golden.py)
 
 
 def _q_extract_golden_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,7 +98,7 @@ def _q_extract_golden_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle reads the COMMITTED golden TSV — values are pinned by
     the repo, not derived from this run, so a hash-green here means the
     distributed pipeline reproduces the committed reference bytes."""
-    docs = generate_documents(spark, _N_GOLDEN, oversize_max=2_000_000)
+    docs = generate_documents(spark, N_GOLDEN, oversize_max=GOLDEN_OVERSIZE_MAX)
     return extract(docs).select(
         "url",
         F.sha2(F.col("extracted_text"), 256).alias("digest"),
@@ -132,7 +136,7 @@ def _q_windowed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     warc_ts over the REAL extraction output. Full oracle: warc_ts is the
     deterministic ``EPOCH + 137s * i`` of fixtures.page, so DuckDB
     reconstructs the identical windows from the committed golden TSV."""
-    docs = generate_documents(spark, _N_GOLDEN, oversize_max=2_000_000)
+    docs = generate_documents(spark, N_GOLDEN, oversize_max=GOLDEN_OVERSIZE_MAX)
     out = extract(docs, passthrough=("warc_ts",))
     # window key from timestamp COMPONENTS, not F.window: the driver's
     # session timezone is not ours to pin, and F.window aligns to the UTC

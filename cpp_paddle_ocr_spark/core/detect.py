@@ -146,7 +146,7 @@ def iou_1d(s1: int, e1: int, s2: int, e2: int) -> float:
     return inter / union if union > 0 else 0.0
 
 
-def nms(spans: list[Span], thresh: float = NMS_IOU_THRESH) -> list[Span]:
+def nms(spans: list[Span]) -> list[Span]:
     """Greedy best-first NMS (O3, ``src/postprocess_op.cpp:559-588``).
 
     Fast path: if no pair overlaps at all (the common case — spans are built
@@ -174,7 +174,7 @@ def nms(spans: list[Span], thresh: float = NMS_IOU_THRESH) -> list[Span]:
         )
         union = lengths + lengths[i] - inter
         iou = np.where(union > 0, inter / np.maximum(union, 1), 0.0)
-        kill = alive & (iou > thresh)
+        kill = alive & (iou > NMS_IOU_THRESH)
         kill[i] = False
         # only suppress strictly-lower-priority spans
         lower = np.zeros(n, dtype=bool)

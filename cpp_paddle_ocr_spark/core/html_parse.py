@@ -84,7 +84,7 @@ class Block:
         return self.segments[-1][1]
 
 
-def parse_blocks(doc: str, max_candidates: int = MAX_CANDIDATES) -> list[Block]:
+def parse_blocks(doc: str) -> list[Block]:
     """Single pass over ``doc`` emitting candidate blocks in document order."""
     blocks: list[Block] = []
     cur: Block | None = None
@@ -110,7 +110,7 @@ def parse_blocks(doc: str, max_candidates: int = MAX_CANDIDATES) -> list[Block]:
         if cur is None and not doc[s:e].strip():
             return  # don't open a block on pure whitespace
         if cur is None:
-            if len(blocks) >= max_candidates:
+            if len(blocks) >= MAX_CANDIDATES:
                 return
             cur = Block(
                 block_id=len(blocks),
@@ -176,9 +176,9 @@ def parse_blocks(doc: str, max_candidates: int = MAX_CANDIDATES) -> list[Block]:
                 open_hint_attr[name] = n - 1
                 if hint_attr_depth > 0:
                     hint_attr_depth -= 1
-        if len(blocks) >= max_candidates and cur is None:
+        if len(blocks) >= MAX_CANDIDATES and cur is None:
             break
 
     add_text(pos, len(doc))
     flush()
-    return blocks[:max_candidates]
+    return blocks[:MAX_CANDIDATES]

@@ -101,13 +101,13 @@ def _step_scores(token_ids: np.ndarray) -> np.ndarray:
     return 0.85 + 0.15 * (h.astype(np.float64) / 1000.0)
 
 
-def table_resize_pad(codes: np.ndarray, max_len: int = TABLE_MAX_LEN) -> np.ndarray:
-    """T2: ratio-preserving downsample to ``max_len`` + zero-pad right.
+def table_resize_pad(codes: np.ndarray) -> np.ndarray:
+    """T2: ratio-preserving downsample to ``TABLE_MAX_LEN`` + zero-pad right.
 
     ``TableResizeImg`` scales the longer side to 488 preserving ratio and
     ``TablePadImg`` zero-pads to the square canvas
     (``src/preprocess_op.cpp:139-159``); in 1-D: longer inputs are
-    stride-sampled down to ``max_len``, shorter ones keep their values and
+    stride-sampled down to ``TABLE_MAX_LEN``, shorter ones keep their values and
     the tail is zero (the pad).
 
     Standalone preprocessing facility (unit-tested, not consumed by
@@ -115,14 +115,14 @@ def table_resize_pad(codes: np.ndarray, max_len: int = TABLE_MAX_LEN) -> np.ndar
     structure MODEL; our decode reads exact tag offsets instead, so the
     canvas has no downstream consumer — kept as the T2 operator surface,
     not wired into a fake model input."""
-    out = np.zeros(max_len, dtype=codes.dtype)
+    out = np.zeros(TABLE_MAX_LEN, dtype=codes.dtype)
     n = codes.size
     if n == 0:
         return out
-    if n <= max_len:
+    if n <= TABLE_MAX_LEN:
         out[:n] = codes
         return out
-    idx = np.floor(np.arange(max_len, dtype=np.float64) * (n / max_len)).astype(np.int64)
+    idx = np.floor(np.arange(TABLE_MAX_LEN, dtype=np.float64) * (n / TABLE_MAX_LEN)).astype(np.int64)
     return codes[idx]
 
 

@@ -22,6 +22,15 @@ SEED = 42
 N_HOSTS = 97
 EPOCH = dt.datetime(2025, 1, 1, 0, 0, 0)
 
+#: The committed golden sets (``tests/golden/``): ``scripts/gen_golden.py``
+#: writes rows [0, N_GOLDEN) with oversized pages capped at
+#: GOLDEN_OVERSIZE_MAX (the 16 MB error path is covered separately by
+#: ``tests/test_spark_extract.py``); ``scripts/gen_media_golden.py`` writes
+#: media rows [0, N_MEDIA_GOLDEN). The driver checks read the same names.
+N_GOLDEN = 2000
+GOLDEN_OVERSIZE_MAX = 2_000_000
+N_MEDIA_GOLDEN = 60
+
 _rng = random.Random(SEED)
 _CONS = "bcdfghjklmnpqrstvwz"
 _VOW = "aeiou"
@@ -166,12 +175,10 @@ def page(i: int, oversize_max: int = 16_000_000) -> dict:
     }
 
 
-def build_documents_pdf(
-    n: int, start: int = 0, oversize_max: int = 16_000_000
-) -> pd.DataFrame:
-    """Rows [start, start+n) as a pandas DataFrame (input_hint columns)."""
+def build_documents_pdf(n: int, oversize_max: int = 16_000_000) -> pd.DataFrame:
+    """Rows [0, n) as a pandas DataFrame (input_hint columns)."""
     return pd.DataFrame(
-        [page(i, oversize_max) for i in range(start, start + n)],
+        [page(i, oversize_max) for i in range(n)],
         columns=["url", "warc_ts", "html", "text", "lang"],
     )
 

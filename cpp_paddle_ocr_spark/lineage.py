@@ -134,6 +134,17 @@ def _hadoop_path(spark: SparkSession, target: str):
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
 
+def has_lineage(spark: SparkSession, out_dir: str) -> bool:
+    """Whether the lineage sink of ``out_dir`` exists: the catalog's answer
+    for a table target, the Hadoop ``FileSystem``'s for a path. It is
+    absent until the first commit group of the first run commits."""
+    t = _child_target(spark, out_dir, "_lineage")
+    if _is_table_ident(spark, t):
+        return spark.catalog.tableExists(t)
+    fs, path = _hadoop_path(spark, t)
+    return fs.exists(path)
+
+
 def _committed(
     spark: SparkSession, out_dir: str, run_id: str
 ) -> set[tuple[int, str | None]]:
@@ -142,14 +153,8 @@ def _committed(
     any failure reading an existing sink raises instead of silently
     restarting from zero, which would re-extract committed buckets and
     bypass the transform guard."""
-    t = _child_target(spark, out_dir, "_lineage")
-    if _is_table_ident(spark, t):
-        if not spark.catalog.tableExists(t):
-            return set()
-    else:
-        fs, path = _hadoop_path(spark, t)
-        if not fs.exists(path):
-            return set()
+    if not has_lineage(spark, out_dir):
+        return set()
     lin = read_lineage(spark, out_dir).filter(F.col("run_id") == run_id)
     if "transform" not in lin.columns:  # pre-round-3 lineage table
         lin = lin.withColumn("transform", F.lit(None).cast("string"))

@@ -46,13 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .common import load, tokens, tokens_sql
-from .dedup import (
-    BAND_KEY_CAP,
-    LSH_SQL,
-    NEARDUP_VERIFY_PCT,
-    jaccard_verified,
-    lsh_candidate_pairs,
-)
+from .dedup import LSH_SQL, NEARDUP_VERIFY_PCT, jaccard_verified, lsh_candidate_pairs
 from .similarity import KNN_JOIN_SQL, knn_join
 
 CC_MAX_ITER = 25
@@ -188,18 +182,16 @@ def _attach_labels(
     )
 
 
-def verified_pairs(
-    df: DataFrame, band_cap: int = BAND_KEY_CAP, pct: int = NEARDUP_VERIFY_PCT
-) -> DataFrame:
+def verified_pairs(df: DataFrame) -> DataFrame:
     """LSH candidate pairs filtered to TRUE distinct-token Jaccard ≥
-    pct/100 (the integer test ``dedup.jaccard_verified``).
+    NEARDUP_VERIFY_PCT/100 (the integer test ``dedup.jaccard_verified``).
 
     Scale: one extra shuffle joining the pair list (≪ n² rows by the band
     caps) against the per-doc token sets; intersection cost is per-pair
     O(|A|+|B|) — the standard candidate-verification stage of a MinHash
     dedup pipeline.
     """
-    pairs = lsh_candidate_pairs(df, band_cap)
+    pairs = lsh_candidate_pairs(df)
     toks = df.select(
         "doc_id", F.array_distinct(tokens(F.col("text"))).alias("t")
     )
@@ -212,17 +204,12 @@ def verified_pairs(
             toks.select(F.col("doc_id").alias("doc_b"), F.col("t").alias("tb")),
             "doc_b",
         )
-        .filter(jaccard_verified(F.col("ta"), F.col("tb"), pct))
+        .filter(jaccard_verified(F.col("ta"), F.col("tb")))
         .select("doc_a", "doc_b")
     )
 
 
-def dedup_clusters(
-    df: DataFrame,
-    band_cap: int = BAND_KEY_CAP,
-    verify_pct: int = NEARDUP_VERIFY_PCT,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def dedup_clusters(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     """Full near-dup resolution over `documents`: LSH candidate pairs →
     true-Jaccard verification → connected components →
     ``(doc_id, cluster_id, is_canonical)``.
@@ -234,10 +221,7 @@ def dedup_clusters(
     whole table.
     """
     labels = connected_components(
-        verified_pairs(df, band_cap, verify_pct),
-        "doc_a",
-        "doc_b",
-        checkpoint_dir=checkpoint_dir,
+        verified_pairs(df), "doc_a", "doc_b", checkpoint_dir=checkpoint_dir
     )
     return _attach_labels(df.select("doc_id"), labels, "doc_id")
 
@@ -255,7 +239,6 @@ def semantic_clusters(
     df: DataFrame,
     thresh: float = SEMANTIC_THRESH,
     checkpoint_dir: str | None = None,
-    n_tables: int = 1,
 ) -> DataFrame:
     """Semantic (embedding-space) dedup clusters: kNN edges with cosine ≥
     ``thresh`` → connected components → ``(vec_id, cluster_id,
@@ -268,7 +251,7 @@ def semantic_clusters(
     against ``SEMANTIC_CLUSTERS_SQL`` by the driver.
     """
     pairs = (
-        knn_join(df, n_tables=n_tables)
+        knn_join(df)
         .filter(F.col("cosine") >= thresh)
         .select("vec_id", "neighbor_id")
     )

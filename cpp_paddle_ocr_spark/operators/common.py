@@ -12,10 +12,15 @@ helpers below pin the cross-engine-deterministic primitives:
 * float outputs are rounded to 6 dp on both sides: every remaining float is
   a ratio/fold of exact integer or float32-promoted doubles, so 6 dp is far
   beyond the cross-engine error bound (≈1e-12 from summation order).
+* ``cosine6(a, b)`` — the cosine of two ``array<double>`` columns from
+  sequential JVM folds (``_dot_expr`` / ``_norm_expr``: one deterministic
+  summation order), rounded half-up at 6 dp; ``_round_half_up_6`` is the
+  same 6-dp HALF_UP for numpy values computed in a pandas kernel.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 TABLES = (
@@ -109,3 +114,52 @@ def tokens(col: Column | str) -> Column:
 
 def tokens_sql(expr: str) -> str:
     return f"list_filter(regexp_split_to_array({expr}, '\\s+'), t -> t <> '')"
+
+
+def _dot_expr(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
+
+
+def _norm_expr(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0.0D, (acc, v) -> acc + v * v))"
+
+
+def cosine6(a: str, b: str) -> Column:
+    """Cosine of array columns ``a`` and ``b``, rounded half-up at 6 dp."""
+    return F.round(
+        F.expr(_dot_expr(a, b)) / (F.expr(_norm_expr(a)) * F.expr(_norm_expr(b))),
+        6,
+    )
+
+
+def _round_half_up_6(x):
+    """Spark's F.round is HALF_UP over the double's SHORTEST DECIMAL
+    representation (BigDecimal.valueOf == Double.toString), not over the
+    exact binary value. The vectorized floor(|x|·1e6 + 0.5) form agrees
+    except when x·1e6 sits within a few ulps of a .5 boundary (where the
+    shortest repr can land on the other side). Hybrid: numpy fast path,
+    then re-round only boundary-adjacent values through Python's repr()
+    (also shortest-repr) + Decimal HALF_UP — exact Spark parity at the
+    cost of a Python loop over a measure-tiny subset.
+
+    The boundary window scales with the ulp of frac = |x|·1e6 (the error
+    sources — the ×1e6 multiply and x's own repr gap — are both a couple
+    ulps AT frac's magnitude), so the detection stays sound at any |x|,
+    not just |x| ≤ ~4 (round-4 advice)."""
+    x = np.asarray(x, dtype=np.float64)
+    fast = np.copysign(np.floor(np.abs(x) * 1e6 + 0.5) / 1e6, x)
+    frac = np.abs(x) * 1e6
+    near = np.abs(frac - np.floor(frac) - 0.5) <= 4.0 * np.spacing(frac)
+    if near.any():
+        import decimal
+
+        q = decimal.Decimal("0.000001")
+        flat = fast.ravel()
+        xf = x.ravel()
+        for i in np.flatnonzero(near.ravel()):
+            flat[i] = float(
+                decimal.Decimal(repr(float(xf[i]))).quantize(
+                    q, rounding=decimal.ROUND_HALF_UP
+                )
+            )
+    return fast

@@ -48,8 +48,6 @@ MIN_QUALITY = 0.4
 
 def corpus_keep(
     df: DataFrame,
-    lang: str = KEEP_LANG,
-    min_quality: float = MIN_QUALITY,
     domain_cap_n: int | None = None,
     lm_max_bits: float | None = None,
 ) -> DataFrame:
@@ -78,8 +76,8 @@ def corpus_keep(
         metrics.join(rep, "doc_id")
         .join(clusters, "doc_id")
         .filter(
-            (F.col("pred_lang") == lang)
-            & (F.col("quality") >= min_quality)
+            (F.col("pred_lang") == KEEP_LANG)
+            & (F.col("quality") >= MIN_QUALITY)
             & (F.col("top_bigram_frac") <= REP_MAX_TOP_BIGRAM)
             & (F.col("dup_trigram_frac") <= REP_MAX_DUP_TRIGRAM)
             & (F.col("token_entropy") >= REP_MIN_ENTROPY)

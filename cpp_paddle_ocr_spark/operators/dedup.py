@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from .common import h28_sql, h60_sql, load, tokens, tokens_sql
+from .common import cosine6, h28_sql, h60_sql, load, tokens, tokens_sql
 
 # --- exact dedup -------------------------------------------------------------
 
@@ -204,20 +204,18 @@ def lsh_candidate_pairs(df: DataFrame, band_cap: int = BAND_KEY_CAP) -> DataFram
     return dense_pairs.unionByName(star_pairs).distinct()
 
 
-def _band_selects_sql(src: str, idcol: str = "doc_id") -> str:
+def _band_selects_sql(src: str) -> str:
     """UNION ALL of the 4 per-band key selects over a signature CTE."""
     return "\nUNION ALL\n".join(
-        f"SELECT {idcol}, concat('{band}', '_', s{2 * band}::VARCHAR, '_', "
+        f"SELECT doc_id, concat('{band}', '_', s{2 * band}::VARCHAR, '_', "
         f"s{2 * band + 1}::VARCHAR) AS band_key FROM {src}"
         for band in range(MINHASH_PERMS // 2)
     )
 
 
-def _lsh_sql(band_cap: int = BAND_KEY_CAP) -> str:
-    band_selects = _band_selects_sql("sig")
-    return f"""
+LSH_SQL = f"""
 WITH sig AS ({MINHASH_SQL}),
-bands AS ({band_selects}),
+bands AS ({_band_selects_sql("sig")}),
 counted AS (
   SELECT doc_id, band_key,
          count(*) OVER (PARTITION BY band_key) AS n_key,
@@ -227,15 +225,12 @@ counted AS (
 SELECT DISTINCT doc_a, doc_b FROM (
   SELECT l.doc_id AS doc_a, r.doc_id AS doc_b
   FROM counted l JOIN counted r USING (band_key)
-  WHERE l.n_key <= {band_cap} AND r.n_key <= {band_cap} AND l.doc_id < r.doc_id
+  WHERE l.n_key <= {BAND_KEY_CAP} AND r.n_key <= {BAND_KEY_CAP} AND l.doc_id < r.doc_id
   UNION ALL
   SELECT anchor AS doc_a, doc_id AS doc_b
-  FROM counted WHERE n_key > {band_cap} AND doc_id <> anchor
+  FROM counted WHERE n_key > {BAND_KEY_CAP} AND doc_id <> anchor
 )
 """
-
-
-LSH_SQL = _lsh_sql()
 
 # --- n-gram Jaccard ----------------------------------------------------------
 
@@ -243,10 +238,10 @@ NGRAM_N = 3
 NGRAM_DOC_CAP = 60  # pairwise window for the oracle-checked variant
 
 
-def ngram_jaccard_pairs(df: DataFrame, doc_cap: int = NGRAM_DOC_CAP) -> DataFrame:
-    """Character-3-gram Jaccard similarity for doc pairs under ``doc_cap``."""
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
+    """Character-3-gram Jaccard similarity for doc pairs under ``NGRAM_DOC_CAP``."""
     grams = (
-        df.filter(F.col("doc_id") < doc_cap)
+        df.filter(F.col("doc_id") < NGRAM_DOC_CAP)
         .select(
             "doc_id",
             F.explode(
@@ -320,22 +315,16 @@ def embedding_neardup_pairs(
     e = df.filter(F.col("vec_id") < vec_cap).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    dot = F.expr(
-        "aggregate(zip_with(a.emb, b.emb, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
-    )
-    norm_a = F.expr("sqrt(aggregate(a.emb, 0.0D, (acc, v) -> acc + v * v))")
-    norm_b = F.expr("sqrt(aggregate(b.emb, 0.0D, (acc, v) -> acc + v * v))")
-    pairs = (
+    return (
         e.alias("a")
         .join(e.alias("b"), F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            F.round(dot / (norm_a * norm_b), 6).alias("cosine"),
+            cosine6("a.emb", "b.emb").alias("cosine"),
         )
         .filter(F.col("cosine") >= thresh)
     )
-    return pairs
 
 
 NEARDUP_SQL = f"""
@@ -358,9 +347,10 @@ WHERE list_dot_product(a.emb, b.emb)
 SPAN_W = 8
 
 
-def span_dedup(df: DataFrame, w: int = SPAN_W) -> DataFrame:
-    """Remove duplicated token spans from documents, C4-style: any ``w``-token
-    window whose exact text occurs more than once in the corpus is removed
+def span_dedup(df: DataFrame) -> DataFrame:
+    """Remove duplicated token spans from documents, C4-style: any
+    ``SPAN_W``-token window whose exact text occurs more than once in the
+    corpus is removed
     from every occurrence EXCEPT the first (first = lexicographic min of
     (doc_id, start)). C4 applies this at three-sentence granularity; tokens
     are the deterministic analog for newline-free extracted text. Output per
@@ -368,8 +358,8 @@ def span_dedup(df: DataFrame, w: int = SPAN_W) -> DataFrame:
     clean_text)`` with ``clean_text`` the space-joined surviving tokens in
     document order ('' when the whole document was a duplicate span run).
 
-    Scale shape: shingle hashes are md5 of the w-token window; the keeper
-    per hash comes from ``groupBy(h).agg(min(struct(doc_id, start)))`` — a
+    Scale shape: shingle hashes are md5 of the ``SPAN_W``-token window; the
+    keeper per hash comes from ``groupBy(h).agg(min(struct(doc_id, start)))`` — a
     map-side-combining hash aggregate, NOT a window over h, so a hot
     boilerplate shingle with 10^9 occurrences never sorts (or collects)
     in one task; the join back to occurrences is (many × 1) on h and AQE
@@ -395,20 +385,20 @@ def span_dedup(df: DataFrame, w: int = SPAN_W) -> DataFrame:
         .filter(F.size("arr") >= 1)
     )
     sh = (
-        base.filter(F.size("arr") >= w)
+        base.filter(F.size("arr") >= SPAN_W)
         .select(
             "doc_id",
             "arr",
             F.explode(
-                F.sequence(F.lit(1), F.size("arr") - (w - 1))
+                F.sequence(F.lit(1), F.size("arr") - (SPAN_W - 1))
             ).alias("start"),
         )
         .select(
             "doc_id",
             "start",
-            F.md5(F.concat_ws(" ", F.slice("arr", F.col("start"), w))).alias(
-                "h"
-            ),
+            F.md5(
+                F.concat_ws(" ", F.slice("arr", F.col("start"), SPAN_W))
+            ).alias("h"),
         )
     )
     keepers = sh.groupBy("h").agg(
@@ -431,7 +421,7 @@ def span_dedup(df: DataFrame, w: int = SPAN_W) -> DataFrame:
             F.flatten(
                 F.transform(
                     F.collect_set("start"),
-                    lambda s: F.sequence(s, s + (w - 1)),
+                    lambda s: F.sequence(s, s + (SPAN_W - 1)),
                 )
             )
         ).alias("cov")
@@ -496,26 +486,26 @@ WINNOW_K = 4  # gram length (tokens)
 WINNOW_W = 4  # window length (grams)
 
 
-def winnow_sketch(
-    df: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W
-) -> DataFrame:
+def winnow_sketch(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03
-    — the MOSS algorithm): hash every ``k``-token gram, slide a window of
-    ``w`` consecutive grams, and select each window's minimum hash (ties →
-    rightmost position). Guarantees every shared substring of length ≥
-    ``k + w - 1`` tokens contributes at least one common print, with sketch
-    density ≈ 2/(w+1) — the robust local sampler the plain rolling-hash
-    ``fingerprint`` operator is not. Output: distinct
-    ``(doc_id, pos, gram_hash)`` selected prints, 1-based gram positions.
+    — the MOSS algorithm): hash every ``WINNOW_K``-token gram, slide a
+    window of ``WINNOW_W`` consecutive grams, and select each window's
+    minimum hash (ties → rightmost position). Guarantees every shared
+    substring of length ≥ ``WINNOW_K + WINNOW_W - 1`` tokens contributes at
+    least one common print, with sketch density ≈ 2/(WINNOW_W+1) — the
+    robust local sampler the plain rolling-hash ``fingerprint`` operator
+    is not. Output: distinct ``(doc_id, pos, gram_hash)`` selected prints,
+    1-based gram positions.
 
-    Short docs: ``n_grams < w`` collapses to a single window over all grams
-    (the min of the whole doc is selected); ``n_tokens < k`` yields no rows.
+    Short docs: ``n_grams < WINNOW_W`` collapses to a single window over all
+    grams (the min of the whole doc is selected); ``n_tokens < WINNOW_K``
+    yields no rows.
 
     Scale shape: gram explode → ONE exchange on doc_id with a per-doc
-    sliding window frame (ROWS CURRENT..w-1 FOLLOWING over grams ordered
-    by position) taking ``min(struct(hash, -pos))`` — the rightmost-min
-    rule as a lexicographic min. Window j's min is evaluated at gram j and
-    rows past the last window start are filtered, so the w× row
+    sliding window frame (ROWS CURRENT..WINNOW_W-1 FOLLOWING over grams
+    ordered by position) taking ``min(struct(hash, -pos))`` — the
+    rightmost-min rule as a lexicographic min. Window j's min is evaluated at gram j and
+    rows past the last window start are filtered, so the WINNOW_W× row
     duplication of the earlier membership-explode form never exists
     (round-6 A/B: 0.72× at sf1, identical rows; the short-doc single
     window falls out of frame truncation at the partition end). No joins,
@@ -524,20 +514,24 @@ def winnow_sketch(
     base = (
         df.filter(F.col("text").isNotNull())
         .select("doc_id", tokens(F.col("text")).alias("arr"))
-        .filter(F.size("arr") >= k)
+        .filter(F.size("arr") >= WINNOW_K)
     )
     grams = base.select(
         "doc_id",
         "arr",
-        (F.size("arr") - (k - 1)).alias("n_g"),
-        F.explode(F.sequence(F.lit(1), F.size("arr") - (k - 1))).alias("p"),
+        (F.size("arr") - (WINNOW_K - 1)).alias("n_g"),
+        F.explode(
+            F.sequence(F.lit(1), F.size("arr") - (WINNOW_K - 1))
+        ).alias("p"),
     ).select(
         "doc_id",
         "n_g",
         "p",
         F.conv(
             F.substring(
-                F.md5(F.concat_ws(" ", F.slice("arr", F.col("p"), k))), 1, 15
+                F.md5(F.concat_ws(" ", F.slice("arr", F.col("p"), WINNOW_K))),
+                1,
+                15,
             ),
             16,
             10,
@@ -547,11 +541,11 @@ def winnow_sketch(
     )
     from pyspark.sql import Window
 
-    n_w = F.greatest(F.col("n_g") - (w - 1), F.lit(1))
+    n_w = F.greatest(F.col("n_g") - (WINNOW_W - 1), F.lit(1))
     wspec = (
         Window.partitionBy("doc_id")
         .orderBy("p")
-        .rowsBetween(Window.currentRow, w - 1)
+        .rowsBetween(Window.currentRow, WINNOW_W - 1)
     )
     sel = grams.select(
         "doc_id",
@@ -717,25 +711,24 @@ def q_dedup_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEARDUP_VERIFY_PCT = 80
 
 
-def jaccard_verified(a: Column, b: Column, pct: int) -> Column:
-    """True distinct-token Jaccard of token arrays ``a`` and ``b`` ≥ pct/100,
-    cross-multiplied in INTEGERS (``100·|A∩B| ≥ pct·|A∪B|``) — no float
-    division, so Spark and the DuckDB oracle agree bit-for-bit with no
-    rounding contract."""
+def jaccard_verified(a: Column, b: Column) -> Column:
+    """True distinct-token Jaccard of token arrays ``a`` and ``b`` ≥
+    NEARDUP_VERIFY_PCT/100, cross-multiplied in INTEGERS
+    (``100·|A∩B| ≥ pct·|A∪B|``) — no float division, so Spark and the
+    DuckDB oracle agree bit-for-bit with no rounding contract."""
     inter = F.size(F.array_intersect(a, b))
-    return inter * 100 >= (F.size(a) + F.size(b) - inter) * pct
+    return inter * 100 >= (F.size(a) + F.size(b) - inter) * NEARDUP_VERIFY_PCT
 
 
 def neardup_increment(
     new_df: DataFrame,
     corpus_df: DataFrame,
     band_cap: int = BAND_KEY_CAP,
-    verify_pct: int = NEARDUP_VERIFY_PCT,
 ) -> DataFrame:
     """Flag increment docs that are NEAR-duplicates of the corpus:
     ``(doc_id, match_id, keep)`` for every increment row, where
     ``match_id`` is the smallest corpus doc_id whose true distinct-token
-    Jaccard ≥ ``verify_pct``/100 among LSH band-key candidates (NULL → no
+    Jaccard ≥ ``NEARDUP_VERIFY_PCT``/100 among LSH band-key candidates (NULL → no
     match, ``keep`` = true). NULL/empty-text rows have no signature, hence
     no candidates: always kept.
 
@@ -807,7 +800,7 @@ def neardup_increment(
     matches = (
         cand.join(inc_toks, "doc_id")
         .join(cor_toks, "corpus_id")
-        .filter(jaccard_verified(F.col("ta"), F.col("tb"), verify_pct))
+        .filter(jaccard_verified(F.col("ta"), F.col("tb")))
         .groupBy("doc_id")
         .agg(F.min("corpus_id").alias("match_id"))
     )
@@ -820,12 +813,10 @@ def neardup_increment(
     )
 
 
-def _neardup_increment_sql(
-    band_cap: int = BAND_KEY_CAP, verify_pct: int = NEARDUP_VERIFY_PCT
-) -> str:
-    toks = tokens_sql("text")
-    inter = "len(list_intersect(ta, tb))"
-    return f"""
+_TOKS = tokens_sql("text")
+_INTER = "len(list_intersect(ta, tb))"
+
+NEARDUP_INCREMENT_SQL = f"""
 WITH inc AS (
   SELECT doc_id, text FROM documents WHERE {_INC_SPLIT} >= 40
 ),
@@ -834,12 +825,12 @@ corpus AS (
 ),
 inc_sig AS (
   SELECT doc_id, {_sig_mins_sql()}
-  FROM (SELECT doc_id, unnest(list_distinct({toks})) AS tok FROM inc) u
+  FROM (SELECT doc_id, unnest(list_distinct({_TOKS})) AS tok FROM inc) u
   GROUP BY doc_id
 ),
 cor_sig AS (
   SELECT corpus_id AS doc_id, {_sig_mins_sql()}
-  FROM (SELECT corpus_id, unnest(list_distinct({toks})) AS tok FROM corpus) u
+  FROM (SELECT corpus_id, unnest(list_distinct({_TOKS})) AS tok FROM corpus) u
   GROUP BY corpus_id
 ),
 inc_bands AS ({_band_selects_sql('inc_sig')}),
@@ -853,28 +844,25 @@ cor_kept AS (
            count(*) OVER (PARTITION BY band_key) AS n_key,
            min(corpus_id) OVER (PARTITION BY band_key) AS anchor
     FROM cor_bands
-  ) WHERE n_key <= {band_cap} OR corpus_id = anchor
+  ) WHERE n_key <= {BAND_KEY_CAP} OR corpus_id = anchor
 ),
 cand AS (
   SELECT DISTINCT i.doc_id, c.corpus_id
   FROM inc_bands i JOIN cor_kept c USING (band_key)
 ),
-inc_toks AS (SELECT doc_id, list_distinct({toks}) AS ta FROM inc),
-cor_toks AS (SELECT corpus_id, list_distinct({toks}) AS tb FROM corpus),
+inc_toks AS (SELECT doc_id, list_distinct({_TOKS}) AS ta FROM inc),
+cor_toks AS (SELECT corpus_id, list_distinct({_TOKS}) AS tb FROM corpus),
 verified AS (
   SELECT cand.doc_id, min(cand.corpus_id) AS match_id
   FROM cand
   JOIN inc_toks USING (doc_id)
   JOIN cor_toks USING (corpus_id)
-  WHERE {inter} * 100 >= (len(ta) + len(tb) - {inter}) * {verify_pct}
+  WHERE {_INTER} * 100 >= (len(ta) + len(tb) - {_INTER}) * {NEARDUP_VERIFY_PCT}
   GROUP BY cand.doc_id
 )
 SELECT i.doc_id, v.match_id, v.match_id IS NULL AS keep
 FROM inc i LEFT JOIN verified v USING (doc_id)
 """
-
-
-NEARDUP_INCREMENT_SQL = _neardup_increment_sql()
 
 
 def q_neardup_increment(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,7 +27,7 @@ Scale shapes (100 TB):
   shuffles: scan → explode → broadcast-hash left join → per-doc hash agg.
 * ``pack_chunks`` — cumulative-sum binning inside hash buckets: the only
   shuffle is the bucket repartition; each bucket's running total is an
-  independent window, so parallelism = n_buckets regardless of corpus size
+  independent window, so parallelism = PACK_BUCKETS regardless of corpus size
   and the assignment is deterministic under any input partitioning.
 * ``pii_scan_redact`` — pure per-row JVM regex projection; scan-bound.
 """
@@ -107,14 +107,17 @@ QUALIFY domain_rank <= {DOMAIN_CAP}
 
 # --- eval-set decontamination ------------------------------------------------
 
-SHINGLE = 3  # production pipelines use 13-grams (GPT-3); 3 keeps the
-#              fixture corpus's overlap statistics non-degenerate
+#: Shingle length in tokens. Production pipelines use 13-grams (GPT-3); 3
+#: keeps the fixture corpus's overlap statistics non-degenerate. For 13-grams
+#: change this constant: ``decontaminate`` and its oracle
+#: ``DECONTAMINATE_SQL`` both read it.
+SHINGLE = 3
 EVAL_PCT = 5  # held-out benchmark split = md5 bucket of doc_id, like
 #               hash_sample — stable across engines and partitionings
 
 
-def _shingle_expr(shingle: int) -> str:
-    """Token ``shingle``-grams as a SQL expression over array column ``t``.
+def _shingle_expr() -> str:
+    """Token ``SHINGLE``-grams as a SQL expression over array column ``t``.
 
     Same tail discipline as the repetition grams (CLAUDE.md #11):
     ``sequence(1, 0)`` counts DOWN in Spark, so the range is guarded with
@@ -122,10 +125,10 @@ def _shingle_expr(shingle: int) -> str:
     NULL-filter (``try_element_at`` past the end → ``concat`` → NULL).
     """
     parts = ", ' ', ".join(
-        f"try_element_at(t, i + {j})" for j in range(shingle)
+        f"try_element_at(t, i + {j})" for j in range(SHINGLE)
     )
     return (
-        f"filter(transform(sequence(1, greatest(size(t) - {shingle - 1}, 1)),"
+        f"filter(transform(sequence(1, greatest(size(t) - {SHINGLE - 1}, 1)),"
         f" i -> concat({parts})), s -> s is not null)"
     )
 
@@ -134,7 +137,7 @@ def _eval_bucket(col: Column) -> Column:
     return F.pmod(h60(col.cast("string")), F.lit(100))
 
 
-def _shingled(df: DataFrame, shingle: int) -> DataFrame:
+def _shingled(df: DataFrame) -> DataFrame:
     # per-doc dedup happens in the projection (array_distinct over the
     # shingle array), NOT as a DataFrame .distinct(): the distinct-shingle
     # set of a document is a per-row computation, and the old
@@ -149,19 +152,14 @@ def _shingled(df: DataFrame, shingle: int) -> DataFrame:
         .select(
             "doc_id",
             F.explode(
-                F.expr(f"array_distinct({_shingle_expr(shingle)})")
+                F.expr(f"array_distinct({_shingle_expr()})")
             ).alias("shingle"),
         )
     )
 
 
-def decontaminate(
-    df: DataFrame,
-    shingle: int = SHINGLE,
-    eval_pct: int = EVAL_PCT,
-    eval_df: DataFrame | None = None,
-) -> DataFrame:
-    """Flag training documents that share any token ``shingle``-gram with
+def decontaminate(df: DataFrame, eval_df: DataFrame | None = None) -> DataFrame:
+    """Flag training documents that share any token ``SHINGLE``-gram with
     the held-out eval set: per contaminated doc, its distinct-shingle
     count, the number of shingles also present in the eval set, and the
     hit fraction.
@@ -175,7 +173,7 @@ def decontaminate(
     Two eval sources: the production form passes ``eval_df`` — the actual
     benchmark table, typically a few thousand rows — and the big side is
     scanned ONCE. Without it, the eval set is the md5 ``doc_id`` bucket
-    under ``eval_pct`` of ``df`` itself (a deterministic self-split, the
+    under ``EVAL_PCT`` of ``df`` itself (a deterministic self-split, the
     driver-oracle form); that form scans the corpus twice, because
     Catalyst has no cross-branch subplan reuse (finding 15 /
     CLAUDE.md #13) and the bucket predicate is an expression parquet
@@ -183,22 +181,22 @@ def decontaminate(
     """
     if eval_df is not None:
         eval_shingles = (
-            _shingled(eval_df, shingle)
+            _shingled(eval_df)
             .select("shingle")
             .distinct()
             .withColumn("hit", F.lit(1))
         )
-        train = _shingled(df, shingle)
+        train = _shingled(df)
         return _contamination_agg(train, eval_shingles)
-    shingled = _shingled(df, shingle)
+    shingled = _shingled(df)
     bucket = _eval_bucket(F.col("doc_id"))
     eval_shingles = (
-        shingled.filter(bucket < eval_pct)
+        shingled.filter(bucket < EVAL_PCT)
         .select("shingle")
         .distinct()
         .withColumn("hit", F.lit(1))
     )
-    train = shingled.filter(bucket >= eval_pct)
+    train = shingled.filter(bucket >= EVAL_PCT)
     return _contamination_agg(train, eval_shingles)
 
 
@@ -220,24 +218,24 @@ def _contamination_agg(train: DataFrame, eval_shingles: DataFrame) -> DataFrame:
     )
 
 
-def _decontaminate_sql(shingle: int, eval_pct: int) -> str:
-    gram = " || ' ' || ".join(f"t[i + {j}]" for j in range(shingle))
-    return f"""
+_GRAM = " || ' ' || ".join(f"t[i + {j}]" for j in range(SHINGLE))
+
+DECONTAMINATE_SQL = f"""
 WITH toks AS (
   SELECT doc_id, {tokens_sql('text')} AS t FROM documents
   WHERE text IS NOT NULL
 ),
 sh AS (
-  SELECT DISTINCT doc_id, {gram} AS shingle
-  FROM toks, unnest(generate_series(1, len(t) - {shingle - 1})) g(i)
+  SELECT DISTINCT doc_id, {_GRAM} AS shingle
+  FROM toks, unnest(generate_series(1, len(t) - {SHINGLE - 1})) g(i)
 ),
 ev AS (
   SELECT DISTINCT shingle FROM sh
-  WHERE {h60_sql('CAST(doc_id AS VARCHAR)')} % 100 < {eval_pct}
+  WHERE {h60_sql('CAST(doc_id AS VARCHAR)')} % 100 < {EVAL_PCT}
 ),
 tr AS (
   SELECT * FROM sh
-  WHERE {h60_sql('CAST(doc_id AS VARCHAR)')} % 100 >= {eval_pct}
+  WHERE {h60_sql('CAST(doc_id AS VARCHAR)')} % 100 >= {EVAL_PCT}
 )
 SELECT tr.doc_id,
        count(*) AS n_shingles,
@@ -247,9 +245,6 @@ FROM tr LEFT JOIN ev ON tr.shingle = ev.shingle
 GROUP BY tr.doc_id
 HAVING count(ev.shingle) > 0
 """
-
-
-DECONTAMINATE_SQL = _decontaminate_sql(SHINGLE, EVAL_PCT)
 
 
 # --- training-sequence packing -----------------------------------------------
@@ -263,7 +258,6 @@ def pack_chunks(
     df: DataFrame,
     chunk_tokens: int = PACK_CHUNK_TOKENS,
     budget: int = PACK_BUDGET,
-    n_buckets: int = PACK_BUCKETS,
 ) -> DataFrame:
     """Assign non-overlapping token chunks to fixed-budget training
     sequences — the concat-and-cut packing step before a training run.
@@ -276,7 +270,7 @@ def pack_chunks(
     concatenated-LM packing: the cut is a training-time slice, the
     assignment is where the chunk begins). Buckets make the global-order
     cumsum parallel: each bucket's window is independent, so the plan is
-    one hash repartition + per-bucket sort, with parallelism ``n_buckets``
+    one hash repartition + per-bucket sort, with parallelism ``PACK_BUCKETS``
     at any corpus size — and the assignment is partitioning-independent,
     so re-running on a differently-laid-out table packs identically.
     """
@@ -284,7 +278,7 @@ def pack_chunks(
         "doc_id", "chunk_idx", "n_chunk_tokens"
     )
     ch = ch.withColumn(
-        "bucket", F.pmod(h28(F.col("doc_id").cast("string")), F.lit(n_buckets))
+        "bucket", F.pmod(h28(F.col("doc_id").cast("string")), F.lit(PACK_BUCKETS))
     )
     w = (
         Window.partitionBy("bucket")
@@ -473,9 +467,10 @@ def canonical_url_col(url) -> Column:
     ).otherwise(F.concat(scheme, F.lit("://"), host, port_part, path, qpart))
 
 
-def url_canonicalize(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Attach ``canonical_url`` to every row (see ``canonical_url_col``)."""
-    return df.withColumn("canonical_url", canonical_url_col(url_col))
+def url_canonicalize(df: DataFrame) -> DataFrame:
+    """Attach ``canonical_url`` of column ``url`` to every row (see
+    ``canonical_url_col``)."""
+    return df.withColumn("canonical_url", canonical_url_col("url"))
 
 
 def _canon_sql(u: str) -> str:

@@ -42,14 +42,9 @@ PR_ITERS = 5
 PR_BASE = (100 - PR_DAMP_PCT) * PR_SCALE // 100
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = PR_ITERS,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Integer PageRank over an edge list: ``(node, rank)`` after
-    ``iters`` rounds, rank in ``PR_SCALE`` micro-units (BIGINT).
+def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
+    """Integer PageRank over a ``(src, dst)`` edge list: ``(node, rank)``
+    after ``iters`` rounds, rank in ``PR_SCALE`` micro-units (BIGINT).
 
     Update rule (all-BIGINT, order-independent):
     ``rank'(n) = (100-d)·SCALE div 100 + Σ_{v→n} (d·rank(v)) div (100·outdeg(v))``
@@ -71,8 +66,7 @@ def pagerank(
     # by a page's link budget — per-dst IN-degree skew (the hub shape
     # PageRank exists to measure) lands on the per-round aggregate, which
     # map-side combines, not here.
-    ed = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    weighted = ed.withColumn(
+    weighted = edges.select("src", "dst").withColumn(
         "deg", F.count("*").over(Window.partitionBy("src"))
     ).localCheckpoint(eager=True)
     nodes = (
@@ -110,12 +104,12 @@ def pagerank(
     return ranks
 
 
-def _pagerank_sql(edges_sql: str, iters: int = PR_ITERS) -> str:
-    """K unrolled aggregation rounds as chained CTEs (a recursive CTE
-    cannot aggregate in its recursive term, so the fixed iteration count
-    is unrolled — same determinism the Spark loop has)."""
+def _pagerank_sql(edges_sql: str) -> str:
+    """``PR_ITERS`` unrolled aggregation rounds as chained CTEs (a recursive
+    CTE cannot aggregate in its recursive term, so the fixed iteration
+    count is unrolled — same determinism the Spark loop has)."""
     rounds = []
-    for i in range(1, iters + 1):
+    for i in range(1, PR_ITERS + 1):
         rounds.append(
             f"""r{i} AS (
   SELECT n.node,
@@ -136,7 +130,7 @@ outdeg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
 weighted AS (SELECT e.src, e.dst, o.deg FROM edges e JOIN outdeg o USING (src)),
 r0 AS (SELECT node, CAST({PR_SCALE} AS BIGINT) AS rank FROM nodes),
 {chained}
-SELECT node, rank FROM r{iters}
+SELECT node, rank FROM r{PR_ITERS}
 """
 
 
@@ -182,7 +176,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- crawl scheduling (capstone composition) ------------------------------
 
-def crawl_schedule(events: DataFrame, iters: int = PR_ITERS) -> DataFrame:
+def crawl_schedule(events: DataFrame) -> DataFrame:
     """The crawl-side capstone: what should the crawler fetch next?
     Composes the two scheduler signals this engine computes —
     ``relational.revisit_latest``'s content-churn accounting (how often a
@@ -206,7 +200,7 @@ def crawl_schedule(events: DataFrame, iters: int = PR_ITERS) -> DataFrame:
         "n_changes",
         F.split(F.col("url_key"), ":").getItem(0).cast("long").alias("host"),
     )
-    pr = pagerank(crawl_edges(events), iters)
+    pr = pagerank(crawl_edges(events))
     rank = F.coalesce(F.col("rank"), F.lit(PR_BASE))
     return (
         rev.join(pr, rev.host == pr.node, "left")

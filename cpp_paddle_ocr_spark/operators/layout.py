@@ -172,7 +172,7 @@ def extract_with_layout(df: DataFrame) -> DataFrame:
 # Driver queries + committed-TSV oracles
 # ---------------------------------------------------------------------------
 
-N_LAYOUT = 96  # keep in sync with scripts/gen_layout_golden.py
+N_LAYOUT = 96  # rows in the layout golden (scripts/gen_layout_golden.py)
 
 _GOLDEN_DIR = __import__("pathlib").Path(__file__).resolve().parents[2] / "tests" / "golden"
 

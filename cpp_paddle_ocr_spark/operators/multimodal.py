@@ -444,14 +444,13 @@ def extract_media_features(df: DataFrame, real: bool = False) -> DataFrame:
     return df.select("url", F.col("media")).mapInPandas(fn, _FEATURE_SCHEMA)
 
 
-def frame_sample(df: DataFrame, every_n_bytes: int = 65536, real: bool = False) -> DataFrame:
+def frame_sample(df: DataFrame, every_n_bytes: int = 65536) -> DataFrame:
     """Video-frame-sampling stub: one row per sampled 'frame' (fan-out).
 
-    Real implementation would demux + decode; the stub samples byte offsets,
-    preserving the one-to-many row shape downstream operators rely on.
+    A real implementation would demux + decode (ffmpeg); the stub samples
+    byte offsets, preserving the one-to-many row shape downstream
+    operators rely on.
     """
-    if real:
-        raise NotImplementedError("real frame sampling needs ffmpeg")
     # ceil(len / n) via (len-1)/n + 1, guarded for len == 0 (one empty
     # frame row keeps the fan-out shape): the old floor(len/n)+1 emitted a
     # past-the-end frame with an empty header for exact-multiple lengths.

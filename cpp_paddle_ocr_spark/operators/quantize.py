@@ -56,9 +56,10 @@ def quantize_embeddings(df: DataFrame) -> DataFrame:
     return e.select("vec_id", "scale", F.expr(qemb).alias("qemb"))
 
 
-def dequantize(qemb: str = "qemb", scale: str = "scale") -> F.Column:
-    """Column expression rebuilding the float vector: q_i · scale."""
-    return F.expr(f"transform({qemb}, q -> cast(q as double) * {scale})")
+def dequantize() -> F.Column:
+    """Column expression rebuilding the float vector from columns ``qemb``
+    and ``scale``: q_i · scale."""
+    return F.expr("transform(qemb, q -> cast(q as double) * scale)")
 
 
 def quantization_report(df: DataFrame) -> DataFrame:

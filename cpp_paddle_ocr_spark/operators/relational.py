@@ -56,24 +56,28 @@ GROUP BY source
 """
 
 
-def topk_per_group(df: DataFrame, k: int = 5) -> DataFrame:
+#: rows kept per source by ``topk_per_group`` and its oracle ``TOPK_SQL``
+TOPK_PER_GROUP = 5
+
+
+def topk_per_group(df: DataFrame) -> DataFrame:
     """O5: per-group top-K cap (deterministic tie-break on doc_id)."""
     w = Window.partitionBy("source").orderBy(
         F.col("n_chars").desc(), F.col("doc_id").asc()
     )
     return (
         df.select("source", "doc_id", "n_chars", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= TOPK_PER_GROUP)
     )
 
 
-TOPK_SQL = """
+TOPK_SQL = f"""
 SELECT source, doc_id, n_chars, rn FROM (
   SELECT source, doc_id, n_chars,
          row_number() OVER (PARTITION BY source
                             ORDER BY n_chars DESC, doc_id ASC) AS rn
   FROM documents
-) WHERE rn <= 5
+) WHERE rn <= {TOPK_PER_GROUP}
 """
 
 

@@ -31,7 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .common import load
+from .common import _dot_expr, _norm_expr, _round_half_up_6, cosine6, load
 
 TOPK = 10
 N_PLANES = 8
@@ -54,14 +54,6 @@ def auto_n_planes(n_rows: int, bucket_cap: int) -> int:
     return max(1, math.ceil(math.log2(max(n_rows / bucket_cap, 1.0))))
 
 
-def _dot_expr(a: str, b: str) -> str:
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
-
-
-def _norm_expr(a: str) -> str:
-    return f"sqrt(aggregate({a}, 0.0D, (acc, v) -> acc + v * v))"
-
-
 def cosine_topk(
     df: DataFrame, query_vec_id: int = 0, k: int = TOPK
 ) -> DataFrame:
@@ -73,14 +65,7 @@ def cosine_topk(
     scored = (
         e.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != query_vec_id)
-        .select(
-            "vec_id",
-            F.round(
-                F.expr(_dot_expr("emb", "qemb"))
-                / (F.expr(_norm_expr("emb")) * F.expr(_norm_expr("qemb"))),
-                6,
-            ).alias("cosine"),
-        )
+        .select("vec_id", cosine6("emb", "qemb").alias("cosine"))
     )
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
 
@@ -197,15 +182,7 @@ def lsh_bucketed_ann(
             F.broadcast(q), F.array_contains(F.col("qprobes"), F.col("bucket"))
         )  # bucket-membership join: the (multi-probe) LSH prune
         .filter(F.col("vec_id") != query_vec_id)
-        .select(
-            "vec_id",
-            "bucket",
-            F.round(
-                F.expr(_dot_expr("emb", "qemb"))
-                / (F.expr(_norm_expr("emb")) * F.expr(_norm_expr("qemb"))),
-                6,
-            ).alias("cosine"),
-        )
+        .select("vec_id", "bucket", cosine6("emb", "qemb").alias("cosine"))
     )
     return cands.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
 
@@ -316,11 +293,7 @@ def _lsh_neardup_one_table(
         return pairs.select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            F.round(
-                F.expr(_dot_expr("a.emb", "b.emb"))
-                / (F.expr(_norm_expr("a.emb")) * F.expr(_norm_expr("b.emb"))),
-                6,
-            ).alias("cosine"),
+            cosine6("a.emb", "b.emb").alias("cosine"),
         ).filter(F.col("cosine") >= thresh)
 
     small = e.filter(F.col("n_bucket") <= bucket_cap)
@@ -476,15 +449,7 @@ def ivf_topk(
         e.filter(F.col("list_id").isin(probe_ids))
         .filter(F.col("vec_id") != query_vec_id)
         .withColumn("qemb", qlit)
-        .select(
-            "vec_id",
-            "list_id",
-            F.round(
-                F.expr(_dot_expr("emb", "qemb"))
-                / (F.expr(_norm_expr("emb")) * F.expr(_norm_expr("qemb"))),
-                6,
-            ).alias("cosine"),
-        )
+        .select("vec_id", "list_id", cosine6("emb", "qemb").alias("cosine"))
     )
     return cands.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
 
@@ -552,39 +517,6 @@ KNN_K = 5
 _KNN_SCHEMA = (
     "vec_id long, neighbor_id long, cosine double, knn_rank int"
 )
-
-
-def _round_half_up_6(x):
-    """Spark's F.round is HALF_UP over the double's SHORTEST DECIMAL
-    representation (BigDecimal.valueOf == Double.toString), not over the
-    exact binary value. The vectorized floor(|x|·1e6 + 0.5) form agrees
-    except when x·1e6 sits within a few ulps of a .5 boundary (where the
-    shortest repr can land on the other side). Hybrid: numpy fast path,
-    then re-round only boundary-adjacent values through Python's repr()
-    (also shortest-repr) + Decimal HALF_UP — exact Spark parity at the
-    cost of a Python loop over a measure-tiny subset.
-
-    The boundary window scales with the ulp of frac = |x|·1e6 (the error
-    sources — the ×1e6 multiply and x's own repr gap — are both a couple
-    ulps AT frac's magnitude), so the detection stays sound at any |x|,
-    not just |x| ≤ ~4 (round-4 advice)."""
-    x = np.asarray(x, dtype=np.float64)
-    fast = np.copysign(np.floor(np.abs(x) * 1e6 + 0.5) / 1e6, x)
-    frac = np.abs(x) * 1e6
-    near = np.abs(frac - np.floor(frac) - 0.5) <= 4.0 * np.spacing(frac)
-    if near.any():
-        import decimal
-
-        q = decimal.Decimal("0.000001")
-        flat = fast.ravel()
-        xf = x.ravel()
-        for i in np.flatnonzero(near.ravel()):
-            flat[i] = float(
-                decimal.Decimal(repr(float(xf[i]))).quantize(
-                    q, rounding=decimal.ROUND_HALF_UP
-                )
-            )
-    return fast
 
 
 def _knn_group_fn(k: int, bucket_cap: int):

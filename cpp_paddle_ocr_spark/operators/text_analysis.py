@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .common import h60, h60_sql, load, tokens, tokens_sql
+from .common import _round_half_up_6, h60, h60_sql, load, tokens, tokens_sql
 
 # Small per-language stopword sets (deterministic heuristics, not models).
 EN_STOPS = ["the", "a", "of", "to", "in", "and", "is", "that", "for", "with"]
@@ -345,8 +345,6 @@ def repetition_metrics_udf():
     import re as _re
     from collections import Counter as _Counter
 
-    from .similarity import _round_half_up_6
-
     ws = _re.compile("[ \t\n\x0b\f\r]+")
 
     def one(text: str):
@@ -389,21 +387,17 @@ def repetition_metrics_udf():
     return rep
 
 
-def repetition_filter(
-    df: DataFrame,
-    max_top_bigram: float = REP_MAX_TOP_BIGRAM,
-    max_dup_trigram: float = REP_MAX_DUP_TRIGRAM,
-    min_entropy: float = REP_MIN_ENTROPY,
-) -> DataFrame:
-    """The removal half: documents whose repetition metrics pass the keep
-    thresholds (defaults keep ~2/3 of the fixture corpus — boilerplate-
-    heavy template families fail on top_bigram_frac/dup_trigram_frac).
-    Emits the metrics alongside doc_id so the decision is auditable."""
+def repetition_filter(df: DataFrame) -> DataFrame:
+    """The removal half: documents whose repetition metrics pass the
+    ``REP_*`` keep thresholds (they keep ~2/3 of the fixture corpus —
+    boilerplate-heavy template families fail on
+    top_bigram_frac/dup_trigram_frac). Emits the metrics alongside doc_id
+    so the decision is auditable."""
     s = repetition_stats(df)
     return s.filter(
-        (F.col("top_bigram_frac") <= max_top_bigram)
-        & (F.col("dup_trigram_frac") <= max_dup_trigram)
-        & (F.col("token_entropy") >= min_entropy)
+        (F.col("top_bigram_frac") <= REP_MAX_TOP_BIGRAM)
+        & (F.col("dup_trigram_frac") <= REP_MAX_DUP_TRIGRAM)
+        & (F.col("token_entropy") >= REP_MIN_ENTROPY)
     )
 
 
@@ -1056,10 +1050,10 @@ def temperature_sample(df: DataFrame, alpha: float = MIX_ALPHA) -> DataFrame:
     )
 
 
-def _mix_weights_sql(alpha: float = MIX_ALPHA) -> str:
-    pa = _pow_alpha_expr("cast(n_tokens as double)", alpha)
-    pm = _pow_alpha_expr("cast(max_tokens as double)", alpha)
-    return f"""
+_PA = _pow_alpha_expr("cast(n_tokens as double)", MIX_ALPHA)
+_PM = _pow_alpha_expr("cast(max_tokens as double)", MIX_ALPHA)
+
+MIX_WEIGHTS_SQL = f"""
 WITH per AS (
   SELECT source, count(*) AS n_docs,
          CAST(sum(coalesce(len({tokens_sql('text')}), 0)) AS BIGINT)
@@ -1074,16 +1068,13 @@ tot AS (
 SELECT source, n_docs, n_tokens,
        round(cast(n_tokens as double) / cast(total_tokens as double), 6)
          AS token_share,
-       round({pa} / {pm}, 6) AS weight_rel,
-       CAST(floor(100.0 * ({pa} / {pm}) + 0.5) AS INT) AS keep_pct
+       round({_PA} / {_PM}, 6) AS weight_rel,
+       CAST(floor(100.0 * ({_PA} / {_PM}) + 0.5) AS INT) AS keep_pct
 FROM per, tot
 """
 
-
-MIX_WEIGHTS_SQL = _mix_weights_sql()
-
 TEMPERATURE_SAMPLE_SQL = f"""
-WITH w AS (SELECT source, keep_pct FROM ({_mix_weights_sql()}))
+WITH w AS (SELECT source, keep_pct FROM ({MIX_WEIGHTS_SQL}))
 SELECT d.doc_id, d.source,
        {h60_sql('CAST(d.doc_id AS VARCHAR)')} % 100 AS bucket,
        w.keep_pct

@@ -107,9 +107,10 @@ def read_documents(spark: SparkSession, target: str) -> DataFrame:
     return spark.read.schema(DOCUMENTS_SCHEMA).parquet(target)
 
 
-def from_base64(df: DataFrame, col: str = "html_b64") -> DataFrame:
+def from_base64(df: DataFrame) -> DataFrame:
     """S2: base64 transport source (``src/ocr_ipc_service.cpp:16-43``):
-    pages arriving base64-encoded (e.g. JSON sidecar feeds) → binary html."""
+    pages arriving base64-encoded in ``html_b64`` (e.g. JSON sidecar feeds)
+    → binary ``html``."""
     from pyspark.sql import functions as F
 
-    return df.withColumn("html", F.unbase64(F.col(col))).drop(col)
+    return df.withColumn("html", F.unbase64("html_b64")).drop("html_b64")

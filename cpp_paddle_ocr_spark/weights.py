@@ -18,6 +18,8 @@ import functools
 
 import numpy as np
 
+from .config import CLS_FEAT_W
+
 SEED = 42
 
 # ---------------------------------------------------------------------------
@@ -85,7 +87,7 @@ def _build_cls_weights() -> tuple[np.ndarray, np.ndarray]:
     # code/6.0). Boilerplate text in the wild (and in our fixtures) is
     # pipe/bullet-separated ALL-CAPS link text → codes 2 (upper) and 6 (pipe)
     # push logit 1; lowercase prose (code 1) pushes logit 0.
-    w = rng.normal(0.0, 0.01, size=(192, 2))
+    w = rng.normal(0.0, 0.01, size=(CLS_FEAT_W, 2))
     w[:, 0] += 0.05
     return w.astype(np.float64), np.array([0.2, -0.2], dtype=np.float64)
 

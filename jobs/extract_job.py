@@ -56,17 +56,20 @@ def main(argv: list[str]) -> None:
     if args.status:
         from pyspark.sql import functions as F
 
-        from cpp_paddle_ocr_spark.lineage import read_lineage
+        from cpp_paddle_ocr_spark.lineage import has_lineage, read_lineage
 
-        lin = read_lineage(spark, args.output)
-        summary = lin.groupBy("run_id").agg(
-            F.countDistinct("bucket").alias("buckets"),
-            F.sum("n_pages").alias("n_pages"),
-            F.sum("n_ok").alias("n_ok"),
-            F.sum("n_blocks").alias("n_blocks"),
-            F.max("committed_at").alias("last_commit"),
-        )
-        summary.show(truncate=False)
+        if not has_lineage(spark, args.output):
+            print(f"nothing committed under {args.output}")
+        else:
+            lin = read_lineage(spark, args.output)
+            summary = lin.groupBy("run_id").agg(
+                F.countDistinct("bucket").alias("buckets"),
+                F.sum("n_pages").alias("n_pages"),
+                F.sum("n_ok").alias("n_ok"),
+                F.sum("n_blocks").alias("n_blocks"),
+                F.max("committed_at").alias("last_commit"),
+            )
+            summary.show(truncate=False)
         if owns_session:
             spark.stop()
         return

@@ -23,12 +23,13 @@ import sys
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from cpp_paddle_ocr_spark.core.pipeline import extract_batch  # noqa: E402
-from cpp_paddle_ocr_spark.fixtures import build_documents_pdf  # noqa: E402
+from cpp_paddle_ocr_spark.fixtures import (  # noqa: E402
+    GOLDEN_OVERSIZE_MAX,
+    N_GOLDEN,
+    build_documents_pdf,
+)
 
-N_GOLDEN = 2000
 N_FULL = 40
-OVERSIZE_MAX = 2_000_000  # keep the golden set light; the 16 MB error path
-# is covered separately by tests/test_spark_extract.py
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 GOLDEN = ROOT / "tests" / "golden"
@@ -36,7 +37,7 @@ GOLDEN = ROOT / "tests" / "golden"
 
 def main() -> None:
     (GOLDEN / "pages").mkdir(parents=True, exist_ok=True)
-    pdf = build_documents_pdf(N_GOLDEN, oversize_max=OVERSIZE_MAX)
+    pdf = build_documents_pdf(N_GOLDEN, oversize_max=GOLDEN_OVERSIZE_MAX)
     out = extract_batch(pdf["url"].tolist(), pdf["html"].tolist())
     lines = []
     for i, row in out.iterrows():

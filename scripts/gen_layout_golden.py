@@ -22,14 +22,14 @@ from cpp_paddle_ocr_spark.core.layout import (  # noqa: E402
     extract_tables_page,
 )
 from cpp_paddle_ocr_spark.fixtures import layout_page  # noqa: E402
+from cpp_paddle_ocr_spark.operators.layout import N_LAYOUT  # noqa: E402
 
-N = 96  # keep in sync with operators/layout.py::N_LAYOUT
 GOLDEN = ROOT / "tests" / "golden"
 
 
 def main() -> None:
     tables, cells, regions = [], [], []
-    for i in range(N):
+    for i in range(N_LAYOUT):
         row = layout_page(i)
         doc = row["html"].decode("utf-8")
         url = row["url"]

@@ -18,16 +18,15 @@ import sys
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
-from cpp_paddle_ocr_spark.fixtures import media_item  # noqa: E402
+from cpp_paddle_ocr_spark.fixtures import N_MEDIA_GOLDEN, media_item  # noqa: E402
 from cpp_paddle_ocr_spark.operators.multimodal import media_meta_row  # noqa: E402
 
-N = 60  # keep in sync with __spark_entry__._q_multimodal_meta
 OUT = ROOT / "tests" / "golden" / "MEDIA_META.tsv"
 
 
 def main() -> None:
     lines = []
-    for i in range(N):
+    for i in range(N_MEDIA_GOLDEN):
         row = media_item(i)
         url, n_bytes, magic, width, height, media_type = media_meta_row(
             row["url"], row["media"], real=True
@@ -43,7 +42,7 @@ def main() -> None:
         lines.append("\t".join(fields))
     OUT.parent.mkdir(parents=True, exist_ok=True)
     OUT.write_text("\n".join(lines) + "\n", encoding="utf-8")
-    print(f"wrote {OUT} ({N} rows)")
+    print(f"wrote {OUT} ({N_MEDIA_GOLDEN} rows)")
 
 
 if __name__ == "__main__":

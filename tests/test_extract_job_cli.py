@@ -70,3 +70,12 @@ def test_extract_job_reads_input_path(spark, tmp_path, capsys, golden_checksums)
         digest, success, n_blocks = golden_checksums[r.url]
         assert (r.success, r.n_blocks) == (success, n_blocks)
         assert hashlib.sha256(r.extracted_text.encode()).hexdigest() == digest
+
+
+def test_status_verb_before_first_commit(spark, tmp_path, capsys):
+    # an output with no lineage sink yet (no group has committed) is a
+    # status, not an error: one line, normal return
+    (tmp_path / "fresh").mkdir()
+    out = str(tmp_path / "fresh")
+    main(["--status", "--output", out])
+    assert capsys.readouterr().out == f"nothing committed under {out}\n"

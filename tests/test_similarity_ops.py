@@ -235,7 +235,7 @@ def test_round_half_up_6_matches_shortest_repr_decimal():
     the wrong side."""
     import numpy as np
 
-    from cpp_paddle_ocr_spark.operators.similarity import _round_half_up_6
+    from cpp_paddle_ocr_spark.operators.common import _round_half_up_6
 
     # boundary-adjacent doubles (nearest doubles to k.5e-6 values) plus a
     # deterministic sweep of ordinary values

@@ -147,3 +147,96 @@ def test_bench_leaf_label_set_and_cleared():
     with pytest.raises(ValueError), bench.labelled(sc, "fingerprint"):
         raise ValueError
     assert sc.calls == ["dedup_clusters", None, "fingerprint", None]
+
+
+#: Defaulted engine parameters that no caller sets and that stay settable:
+#: deployment settings (a reliable checkpoint dir, a stream trigger, a state
+#: TTL), query inputs (which vector, how many neighbors), the IVF sizing
+#: levers the similarity module documents for web scale, and a trained
+#: model. Every other default is a tuning constant: the operator reads the
+#: module constant its oracle reads.
+KEPT = {
+    "dedup_clusters(checkpoint_dir)",
+    "semantic_clusters(checkpoint_dir)",
+    "run_stream_job(available_now)",
+    "budget_then_curate(ttl_ms)",
+    "cosine_topk(query_vec_id)",
+    "lsh_bucketed_ann(query_vec_id)",
+    "lsh_bucketed_ann(k)",
+    "ivf_topk(k)",
+    "ivf_topk(n_centroids)",
+    "ivf_topk(nprobe)",
+    "knn_join(n_centroids)",
+    "lm_filter(model_df)",
+}
+
+
+def _engine_defaults() -> dict[str, int | None]:
+    """``"fn(param)"`` → positional index (None for keyword-only) of every
+    defaulted parameter of a top-level engine function."""
+    out = {}
+    for path in sorted((ROOT / "cpp_paddle_ocr_spark").rglob("*.py")):
+        for fn in _tree(path).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            for i, arg in enumerate(pos[first:], first):
+                out[f"{fn.name}({arg.arg})"] = i
+            for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None:
+                    out[f"{fn.name}({arg.arg})"] = None
+    return out
+
+
+def _set_params() -> tuple[set[str], dict[str, int], set[str]]:
+    """Over every call in the engine, jobs, scripts, benchmarks and tests:
+    the ``"fn(param)"`` names passed by keyword, the most positional
+    arguments passed per function name (unbounded through ``*args``), and
+    the function names called with ``**kwargs``."""
+    files = [
+        *(ROOT / "cpp_paddle_ocr_spark").rglob("*.py"),
+        *(ROOT / "jobs").rglob("*.py"),
+        *(ROOT / "scripts").rglob("*.py"),
+        *(ROOT / "perfbench").rglob("*.py"),
+        *(ROOT / "tests").rglob("*.py"),
+        ROOT / "bench.py",
+        ROOT / "__spark_entry__.py",
+    ]
+    by_kw, by_pos, by_star = set(), {}, set()
+    for path in files:
+        for call in ast.walk(_tree(path)):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name is None:
+                continue
+            n = len(call.args)
+            if any(isinstance(a, ast.Starred) for a in call.args):
+                n = 1 << 30
+            by_pos[name] = max(by_pos.get(name, 0), n)
+            for kw in call.keywords:
+                if kw.arg is None:
+                    by_star.add(name)
+                else:
+                    by_kw.add(f"{name}({kw.arg})")
+    return by_kw, by_pos, by_star
+
+
+def test_every_engine_default_is_set_somewhere():
+    # a default that no caller ever sets is a second home for a tuning
+    # constant: the operator could run with a value its oracle never checks
+    by_kw, by_pos, by_star = _set_params()
+    unset = set()
+    for key, index in _engine_defaults().items():
+        name = key.split("(")[0]
+        if key in by_kw or name in by_star:
+            continue
+        if index is not None and by_pos.get(name, 0) > index:
+            continue
+        unset.add(key)
+    assert unset <= KEPT, f"defaults nothing sets: {sorted(unset - KEPT)}"
+    stale = KEPT - unset
+    assert not stale, f"KEPT names no unset default: {sorted(stale)}"
