@@ -28,6 +28,7 @@ import time
 ROOT = pathlib.Path(__file__).resolve().parent
 sys.path.insert(0, str(ROOT))
 
+from cpp_paddle_ocr_spark.fixtures import GOLDEN_OVERSIZE_MAX  # noqa: E402
 from cpp_paddle_ocr_spark.operators import layout  # noqa: E402
 from cpp_paddle_ocr_spark.operators.extract import extract  # noqa: E402
 from cpp_paddle_ocr_spark.session import get_spark  # noqa: E402
@@ -35,7 +36,6 @@ from cpp_paddle_ocr_spark.sources.documents import write_documents_parquet  # no
 from __spark_entry__ import _N_EXTRACT, queries  # noqa: E402
 
 DOCS_PER_SF = 200_000  # 20k pages at sf0.1
-OVERSIZE_MAX = 2_000_000
 
 #: operator leaves in bench order. Each name resolves through
 #: ``__spark_entry__.queries()``, so every leaf times exactly the function
@@ -112,11 +112,11 @@ def sf_of(sf_dir: str) -> float:
 
 
 def ensure_fixture(spark, n_docs: int) -> str:
-    path = ROOT / ".benchdata" / f"docs_n{n_docs}_o{OVERSIZE_MAX}"
+    path = ROOT / ".benchdata" / f"docs_n{n_docs}_o{GOLDEN_OVERSIZE_MAX}"
     marker = path / "_SUCCESS"
     if not marker.exists():
         write_documents_parquet(
-            spark, str(path), n_docs, oversize_max=OVERSIZE_MAX
+            spark, str(path), n_docs, oversize_max=GOLDEN_OVERSIZE_MAX
         )
     return str(path)
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .common import load
+from .common import _dot_expr, _norm_expr, load
 
 QBITS_MAX = 127
 
@@ -74,15 +74,14 @@ def quantization_report(df: DataFrame) -> DataFrame:
     e = df.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    dot = "aggregate(zip_with(emb, deq, (x, y) -> x * y), 0.0D, (a, v) -> a + v)"
-    nrm = "sqrt(aggregate({c}, 0.0D, (a, v) -> a + v * v))"
     err = (
         "aggregate(zip_with(emb, deq, (x, y) -> abs(x - y)), 0.0D, "
         "(a, v) -> greatest(a, v))"
     )
+    nrm = _norm_expr("emb")
     cos = (
-        f"CASE WHEN {nrm.format(c='emb')} = 0.0D THEN 1.0D "
-        f"ELSE {dot} / ({nrm.format(c='emb')} * {nrm.format(c='deq')}) END"
+        f"CASE WHEN {nrm} = 0.0D THEN 1.0D "
+        f"ELSE {_dot_expr('emb', 'deq')} / ({nrm} * {_norm_expr('deq')}) END"
     )
     return (
         e.join(q, "vec_id")

@@ -46,10 +46,11 @@ import time
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
+from cpp_paddle_ocr_spark.fixtures import GOLDEN_OVERSIZE_MAX  # noqa: E402
+
 N_DOCS = 24_000
-OVERSIZE_MAX = 2_000_000
 PAIRS = 3
-FIXTURE = ROOT / ".benchdata" / f"docs_n{N_DOCS}_o{OVERSIZE_MAX}_f256"
+FIXTURE = ROOT / ".benchdata" / f"docs_n{N_DOCS}_o{GOLDEN_OVERSIZE_MAX}_f256"
 
 #: one row per output file: (file, method, key of the secondary pairing,
 #: (primary, secondary) pairings as (master at N, master at 4N, pairs)).
@@ -109,7 +110,7 @@ def ensure_fixture() -> None:
     spark = get_spark(app_name="scaling-gen", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
     generate_documents(
-        spark, N_DOCS, oversize_max=OVERSIZE_MAX, num_partitions=256
+        spark, N_DOCS, oversize_max=GOLDEN_OVERSIZE_MAX, num_partitions=256
     ).write.mode("overwrite").parquet(str(FIXTURE))
     spark.stop()
 

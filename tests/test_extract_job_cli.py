@@ -56,11 +56,12 @@ def test_extract_job_reads_input_path(spark, tmp_path, capsys, golden_checksums)
     # --input goes to run_extract_job as its source string; the job reads it
     import hashlib
 
+    from cpp_paddle_ocr_spark.fixtures import GOLDEN_OVERSIZE_MAX
     from cpp_paddle_ocr_spark.lineage import read_extracted
     from cpp_paddle_ocr_spark.sources.documents import generate_documents
 
     src = str(tmp_path / "docs")
-    generate_documents(spark, 40, oversize_max=2_000_000).write.parquet(src)
+    generate_documents(spark, 40, oversize_max=GOLDEN_OVERSIZE_MAX).write.parquet(src)
     out = str(tmp_path / "job_out")
     main(["--input", src, "--output", out, "--buckets", "4", "--groups", "2"])
     assert "n_pages=40" in capsys.readouterr().out

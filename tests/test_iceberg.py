@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import pytest
 
+from cpp_paddle_ocr_spark.fixtures import GOLDEN_OVERSIZE_MAX
 from cpp_paddle_ocr_spark.iceberg import (
     CATALOG,
     iceberg_available,
@@ -28,7 +29,7 @@ def test_iceberg_conf_shape(tmp_path):
 
 
 def test_parquet_fallback_roundtrip(spark, tmp_path):
-    docs = generate_documents(spark, 40, oversize_max=2_000_000)
+    docs = generate_documents(spark, 40, oversize_max=GOLDEN_OVERSIZE_MAX)
     path = str(tmp_path / "docs_pq")
     write_documents(docs, path)
     back = read_documents(spark, path)
@@ -59,7 +60,7 @@ def _require_live_catalog(spark):
 
 def test_iceberg_roundtrip(spark, tmp_path):
     _require_live_catalog(spark)
-    docs = generate_documents(spark, 40, oversize_max=2_000_000)
+    docs = generate_documents(spark, 40, oversize_max=GOLDEN_OVERSIZE_MAX)
     table = f"{CATALOG}.db.documents"
     write_documents(docs, table, n_buckets=8)
     back = read_documents(spark, table)
@@ -122,7 +123,7 @@ def test_read_documents_relative_dirs_are_parquet(spark, tmp_path, monkeypatch):
     monkeypatch.chdir(tmp_path)
     local_fs.setWorkingDirectory(jvm.org.apache.hadoop.fs.Path(str(tmp_path)))
     try:
-        docs = generate_documents(spark, 40, oversize_max=2_000_000)
+        docs = generate_documents(spark, 40, oversize_max=GOLDEN_OVERSIZE_MAX)
         for name in ("docs", "results.v2", "docs.v2.parquet"):
             write_documents(docs, name)
             assert (tmp_path / name / "_SUCCESS").is_file()
@@ -183,7 +184,7 @@ def test_iceberg_pruned_group_scan(spark, tmp_path):
 
     from cpp_paddle_ocr_spark.lineage import run_extract_job
 
-    docs = generate_documents(spark, 60, oversize_max=2_000_000)
+    docs = generate_documents(spark, 60, oversize_max=GOLDEN_OVERSIZE_MAX)
     src = f"{CATALOG}.db.docs_pruned"
     write_documents(docs, src, n_buckets=8)
     n_buckets = 8

@@ -15,7 +15,7 @@ import pathlib
 import pytest
 
 from cpp_paddle_ocr_spark.core.pipeline import extract_batch, extract_one
-from cpp_paddle_ocr_spark.fixtures import build_documents_pdf, page
+from cpp_paddle_ocr_spark.fixtures import GOLDEN_OVERSIZE_MAX, build_documents_pdf, page
 
 GOLDEN_DIR = pathlib.Path(__file__).parent / "golden"
 N_CHECK = 400  # first 400 of the 2000-row golden set (all 5 families hit)
@@ -26,7 +26,7 @@ def sha(text: str) -> str:
 
 
 def test_pure_core_matches_golden(golden_checksums):
-    pdf = build_documents_pdf(N_CHECK, oversize_max=2_000_000)
+    pdf = build_documents_pdf(N_CHECK, oversize_max=GOLDEN_OVERSIZE_MAX)
     out = extract_batch(pdf["url"].tolist(), pdf["html"].tolist())
     assert len(out) == N_CHECK
     for _, row in out.iterrows():
@@ -39,14 +39,14 @@ def test_pure_core_matches_golden(golden_checksums):
 def test_full_text_pages_match():
     for f in sorted((GOLDEN_DIR / "pages").glob("*.txt")):
         i = int(f.stem)
-        p = page(i, oversize_max=2_000_000)
+        p = page(i, oversize_max=GOLDEN_OVERSIZE_MAX)
         row = extract_one(p["url"], p["html"])
         assert row["extracted_text"] == f.read_text(encoding="utf-8"), f.name
 
 
 def test_batch_size_does_not_change_output():
     # one batch vs many small batches -> byte-identical rows
-    pdf = build_documents_pdf(60, oversize_max=2_000_000)
+    pdf = build_documents_pdf(60, oversize_max=GOLDEN_OVERSIZE_MAX)
     urls, htmls = pdf["url"].tolist(), pdf["html"].tolist()
     whole = extract_batch(urls, htmls)
     parts = []

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from cpp_paddle_ocr_spark.fixtures import GOLDEN_OVERSIZE_MAX
 from cpp_paddle_ocr_spark.lineage import (
     SimulatedFailure,
     _committed,
@@ -26,7 +27,7 @@ GROUPS = 4
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return generate_documents(spark, N, oversize_max=2_000_000).cache()
+    return generate_documents(spark, N, oversize_max=GOLDEN_OVERSIZE_MAX).cache()
 
 
 def _snapshot(spark, out_dir):
@@ -107,7 +108,7 @@ def test_single_source_scan_per_job(spark, tmp_path_factory):
     from cpp_paddle_ocr_spark.schemas import DOCUMENTS_SCHEMA
 
     src = str(tmp_path_factory.mktemp("scan_src") / "docs")
-    generate_documents(spark, N, oversize_max=2_000_000).write.parquet(src)
+    generate_documents(spark, N, oversize_max=GOLDEN_OVERSIZE_MAX).write.parquet(src)
     acc = spark.sparkContext.accumulator(0)
 
     def canary(batches):

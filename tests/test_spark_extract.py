@@ -12,6 +12,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from cpp_paddle_ocr_spark.fixtures import GOLDEN_OVERSIZE_MAX
 from cpp_paddle_ocr_spark.operators.extract import extract, make_metrics
 from cpp_paddle_ocr_spark.sources.documents import generate_documents
 
@@ -24,7 +25,7 @@ def sha(text: str) -> str:
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return generate_documents(spark, N, oversize_max=2_000_000).cache()
+    return generate_documents(spark, N, oversize_max=GOLDEN_OVERSIZE_MAX).cache()
 
 
 def test_spark_matches_golden(spark, docs, golden_checksums):

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cpp_paddle_ocr_spark.fixtures import GOLDEN_OVERSIZE_MAX
 from cpp_paddle_ocr_spark.operators.extract import extract
 from cpp_paddle_ocr_spark.operators.staged import (
     classify_candidates,
@@ -19,7 +20,7 @@ N = 80
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return generate_documents(spark, N, oversize_max=2_000_000).cache()
+    return generate_documents(spark, N, oversize_max=GOLDEN_OVERSIZE_MAX).cache()
 
 
 def test_staged_equals_fused(spark, docs):

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import hashlib
 
+from cpp_paddle_ocr_spark.fixtures import GOLDEN_OVERSIZE_MAX
 from cpp_paddle_ocr_spark.sources.documents import generate_documents
 from cpp_paddle_ocr_spark.operators.extract import extract
 from cpp_paddle_ocr_spark.streaming.ingest import run_stream_job
@@ -19,7 +20,7 @@ def test_stream_job_matches_golden(spark, tmp_path, golden_checksums):
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
     )
-    generate_documents(spark, 60, oversize_max=2_000_000).write.parquet(in_dir)
+    generate_documents(spark, 60, oversize_max=GOLDEN_OVERSIZE_MAX).write.parquet(in_dir)
     q = run_stream_job(spark, in_dir, out_dir, ckpt)
     q.awaitTermination(120)
     rows = spark.read.parquet(out_dir).collect()
@@ -37,7 +38,7 @@ def test_extract_stream_executes_and_matches_golden(
     # a payload fed the wrong columns KeyErrors only on the first REAL
     # micro-batch, so this test executes the stream, not just its schema
     in_dir = str(tmp_path / "in2")
-    generate_documents(spark, 40, oversize_max=2_000_000).write.parquet(in_dir)
+    generate_documents(spark, 40, oversize_max=GOLDEN_OVERSIZE_MAX).write.parquet(in_dir)
     from cpp_paddle_ocr_spark.schemas import DOCUMENTS_SCHEMA
 
     s = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(in_dir)
@@ -72,7 +73,7 @@ def test_stream_sink_epoch_replay_is_idempotent(spark, tmp_path):
         str(tmp_path / "out3"),
         str(tmp_path / "ckpt3"),
     )
-    generate_documents(spark, 30, oversize_max=2_000_000).write.parquet(in_dir)
+    generate_documents(spark, 30, oversize_max=GOLDEN_OVERSIZE_MAX).write.parquet(in_dir)
     run_stream_job(spark, in_dir, out_dir, ckpt).awaitTermination(120)
     assert spark.read.parquet(out_dir).count() == 30
     shutil.rmtree(ckpt)  # forget progress → full replay of every epoch
@@ -92,7 +93,7 @@ def test_stateful_dedup_stream_across_batches(spark, tmp_path):
 
     in_dir = str(tmp_path / "sin")
     ckpt = str(tmp_path / "sckpt")
-    base = generate_documents(spark, 20, oversize_max=2_000_000)
+    base = generate_documents(spark, 20, oversize_max=GOLDEN_OVERSIZE_MAX)
     # file 1: pages 0-19; file 2: pages 10-19 again (cross-batch dups) plus
     # an in-batch duplicate of page 0
     base.coalesce(1).write.parquet(in_dir)
@@ -128,7 +129,7 @@ def test_stateful_dedup_ttl_path_executes(spark, tmp_path):
     from cpp_paddle_ocr_spark.streaming.stateful import dedup_stream
 
     in_dir = str(tmp_path / "tin")
-    generate_documents(spark, 12, oversize_max=2_000_000).write.parquet(in_dir)
+    generate_documents(spark, 12, oversize_max=GOLDEN_OVERSIZE_MAX).write.parquet(in_dir)
     s = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(in_dir)
     q = (
         dedup_stream(s, ttl_ms=3_600_000)

@@ -13,6 +13,7 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from cpp_paddle_ocr_spark.fixtures import GOLDEN_OVERSIZE_MAX  # noqa: E402
 from cpp_paddle_ocr_spark.operators.extract import extract  # noqa: E402
 from cpp_paddle_ocr_spark.operators.text_analysis import (  # noqa: E402
     REP_MAX_DUP_TRIGRAM,
@@ -54,7 +55,7 @@ def _batch_kept_fps(spark, in_dir: str, lang: str, min_quality: float):
 
 def test_curate_stream_matches_batch_gates_and_dedups(spark, tmp_path):
     in_dir = str(tmp_path / "in")
-    docs = generate_documents(spark, 50, oversize_max=2_000_000)
+    docs = generate_documents(spark, 50, oversize_max=GOLDEN_OVERSIZE_MAX)
     # plant exact duplicates: re-emit the first 10 pages under new urls
     dupes = docs.filter(
         F.col("url").rlike("/page/[0-9]$")
@@ -109,7 +110,7 @@ def test_curate_stream_lm_gate(spark, tmp_path):
     import math
 
     in_dir = str(tmp_path / "in")
-    generate_documents(spark, 40, oversize_max=2_000_000).write.parquet(in_dir)
+    generate_documents(spark, 40, oversize_max=GOLDEN_OVERSIZE_MAX).write.parquet(in_dir)
 
     # batch-train the unigram model on the extracted corpus (the stored-
     # table side of the lambda split)
@@ -178,7 +179,7 @@ def test_domain_budget_stream_caps_across_batches(spark, tmp_path):
     from cpp_paddle_ocr_spark.streaming.curation import domain_budget_stream
 
     in_dir = str(tmp_path / "bin")
-    docs = generate_documents(spark, 40, oversize_max=2_000_000)
+    docs = generate_documents(spark, 40, oversize_max=GOLDEN_OVERSIZE_MAX)
     page_no = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("int")
     # file 1 = pages 0-19 (host0: 0,5,10,15), file 2 = pages 20-39
     docs.filter(page_no < 20).coalesce(1).write.parquet(in_dir)
@@ -246,7 +247,7 @@ def test_budget_then_curate_two_query_pipeline(spark, tmp_path):
     )
 
     in_dir = str(tmp_path / "in")
-    generate_documents(spark, 40, oversize_max=2_000_000).write.parquet(in_dir)
+    generate_documents(spark, 40, oversize_max=GOLDEN_OVERSIZE_MAX).write.parquet(in_dir)
 
     # the engine constraint the two-query design exists for
     s = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(in_dir)
@@ -318,7 +319,7 @@ def test_curate_stream_redact_pii(spark, tmp_path):
     )
 
     in_dir = str(tmp_path / "in")
-    docs = generate_documents(spark, 30, oversize_max=2_000_000)
+    docs = generate_documents(spark, 30, oversize_max=GOLDEN_OVERSIZE_MAX)
     plant = (
         "<p>please write to alice.smith@mail.example.org for the complete "
         "report about the spark table and the batch window</p></body>"
@@ -389,7 +390,7 @@ def test_curate_stream_distilled_gate(spark, tmp_path):
     from cpp_paddle_ocr_spark.operators.text_analysis import EN_STOPS
 
     in_dir = str(tmp_path / "in")
-    generate_documents(spark, 40, oversize_max=2_000_000).write.parquet(in_dir)
+    generate_documents(spark, 40, oversize_max=GOLDEN_OVERSIZE_MAX).write.parquet(in_dir)
 
     # batch-side fit over the extracted corpus (the stored-table side of
     # the lambda split); doc_id = url hash, any unique long works
@@ -451,7 +452,7 @@ def test_curate_stream_corpus_index_gate(spark, tmp_path):
     static corpus index already holds never reach the output; everything
     else is exactly the no-index output."""
     in_dir = str(tmp_path / "in")
-    generate_documents(spark, 40, oversize_max=2_000_000).write.parquet(in_dir)
+    generate_documents(spark, 40, oversize_max=GOLDEN_OVERSIZE_MAX).write.parquet(in_dir)
 
     def run(name, **kw):
         s = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(in_dir)

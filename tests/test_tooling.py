@@ -1,7 +1,8 @@
 """Tooling drift guard, no Spark session: every bench/job/script file, the
-repo benchmark's included, compiles, its engine imports resolve, the bench leaf names are driver
-queries, ``scripts/bench_scaling.py`` holds both scaling modes and writes
-the run it measured, and ``scripts/ab.py`` summarizes pairs correctly.
+repo benchmark's included, compiles (``scripts/*.sh`` pass ``sh -n``), its
+engine imports resolve, the bench leaf names are driver queries,
+``scripts/bench_scaling.py`` holds both scaling modes and writes the run it
+measured, and ``scripts/ab.py`` summarizes pairs correctly.
 
 The scripts run rarely and by hand, so a rename in the engine otherwise
 surfaces only as an ``ImportError``/``AttributeError`` minutes into a run.
@@ -13,6 +14,7 @@ import ast
 import importlib
 import importlib.util
 import pathlib
+import subprocess
 
 import pytest
 
@@ -23,6 +25,7 @@ TOOLING = (
     + [ROOT / "bench.py", ROOT / "jobs" / "extract_job.py"]
 )
 IDS = [p.relative_to(ROOT).as_posix() for p in TOOLING]
+SHELL = sorted(ROOT.glob("scripts/*.sh"))
 
 
 def _tree(path: pathlib.Path) -> ast.Module:
@@ -32,6 +35,12 @@ def _tree(path: pathlib.Path) -> ast.Module:
 @pytest.mark.parametrize("path", TOOLING, ids=IDS)
 def test_tooling_file_compiles(path):
     compile(path.read_text(encoding="utf-8"), str(path), "exec")
+
+
+@pytest.mark.parametrize("path", SHELL, ids=[p.name for p in SHELL])
+def test_shell_script_syntax(path):
+    r = subprocess.run(["sh", "-n", str(path)], capture_output=True, text=True)
+    assert r.returncode == 0, f"{path.name}: {r.stderr}"
 
 
 @pytest.mark.parametrize("path", TOOLING, ids=IDS)
